@@ -33,7 +33,6 @@ restart cost is bounded by its own stage, not the pipeline.
 from __future__ import annotations
 
 import os
-import time
 import uuid
 from dataclasses import dataclass, field
 
@@ -47,8 +46,7 @@ from ..operators.packing import (
     shard_manifest,
     shuffle_shards,
 )
-from ..storage import table_for
-from .jobs import MetricsLog, RunLog
+from .jobs import MetricsLog, StageRunner
 
 
 @dataclass
@@ -76,31 +74,11 @@ def run_curation(
     """Execute (or resume) the curation pipeline; returns the job-result
     dict with per-stage rows/seconds and the final shard statistics."""
     run_id = run_id or f"cur-{uuid.uuid4().hex[:12]}"
-    runlog = RunLog(spark, os.path.join(cfg.out_dir, "runs"))
-    metrics = []
-
-    def stage(name: str, builder):
-        tbl = table_for(os.path.join(cfg.out_dir, name))
-        prior = runlog.snapshot_for(run_id, name)
-        if prior:
-            return tbl.read(spark, prior)
-        t0 = time.time()
-        runlog.record(run_id, name, "started")
-        try:
-            df = builder()
-            sid = tbl.write(df, mode="overwrite")
-            out = tbl.read(spark, sid)
-            n = out.count()
-            metrics.append((name, n, time.time() - t0))
-            runlog.record(run_id, name, "finished", snapshot_id=sid, num_triples=n)
-            return out
-        except Exception as ex:
-            runlog.record(run_id, name, "failed", exc_info=repr(ex))
-            raise
+    runner = StageRunner(spark, cfg.out_dir, run_id)
 
     docs = spark.read.parquet(docs_path)
 
-    decisions = stage(
+    decisions = runner(
         "decisions",
         lambda: curate_corpus(
             docs,
@@ -115,7 +93,7 @@ def run_curation(
         ),
     )
 
-    selected = stage(
+    selected = runner(
         "selected",
         lambda: docs.join(
             decisions.filter(F.col("selected")).select("doc_id"),
@@ -124,16 +102,16 @@ def run_curation(
         ),
     )
 
-    packing = stage(
+    packing = runner(
         "packing", lambda: pack_sequences(selected, seq_len=cfg.seq_len)
     )
-    segments = stage(
+    segments = runner(
         "pack_segments", lambda: pack_manifest(packing, seq_len=cfg.seq_len)
     )
-    shards = stage(
+    shards = runner(
         "shards", lambda: shuffle_shards(selected, n_shards=cfg.n_shards)
     )
-    shard_stats = stage("shard_stats", lambda: shard_manifest(shards))
+    shard_stats = runner("shard_stats", lambda: shard_manifest(shards))
 
     # lineage is keyed to the run: write it whenever THIS run_id has no
     # partitions row yet (not merely when some stage ran fresh — a crash
@@ -150,22 +128,14 @@ def run_curation(
     if not have_lineage:
         metricslog.record_partitions(run_id, "shards", shards)
 
-    # row counts were already computed inside each fresh stage() — reuse
-    # them instead of re-running count jobs; only a resumed stage (absent
-    # from `metrics`) needs a count of its read-back snapshot
-    stage_rows = {s: n for s, n, _ in metrics}
-    n_input = stage_rows.get("decisions")  # one decision row per input doc
-    n_input = docs.count() if n_input is None else n_input
-    n_selected = stage_rows.get("selected")
-    n_selected = selected.count() if n_selected is None else n_selected
-    runlog.record(run_id, "job", "finished", num_triples=n_selected)
+    n_input = runner.rows("decisions", docs)  # one decision row per input doc
+    n_selected = runner.rows("selected", selected)
+    runner.finish(n_selected)
     return {
         "run_id": run_id,
         "num_input_docs": n_input,
         "num_selected": n_selected,
         "num_packs": segments.select("stratum", "pack_id").distinct().count(),
-        "num_shards": stage_rows.get("shard_stats", None) or shard_stats.count(),
-        "stages": [
-            {"stage": s, "rows": n, "seconds": round(dt, 3)} for s, n, dt in metrics
-        ],
+        "num_shards": runner.rows("shard_stats", shard_stats),
+        "stages": runner.stages(),
     }

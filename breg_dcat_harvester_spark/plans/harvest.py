@@ -6,12 +6,17 @@ staged DataFrame DAG with per-stage snapshot checkpoints:
     scan -> validate (gate) -> extract -> merge -> link -> canonicalize
          -> materialize(nodes, edges) -> num_triples + runs/metrics rows
 
-Stage outputs are snapshot-committed tables (storage.py); the runs table
-records each stage's snapshot id, so a re-run *resumes*: stages whose output
-snapshot already exists for this run_id are skipped and their output is read
-back (north_rule "resumable from Iceberg snapshot checkpoints").  The final
-result dict mirrors the reference job result {"num_triples": N, "sources":
-[...]} (harvest.py:57-60) with transcript lineage in place of source dicts.
+Every stage runs through ``jobs.StageRunner``.  Stage outputs are
+snapshot-committed tables (storage.py); the runs table records each stage's
+snapshot id, so a re-run *resumes*: stages whose output snapshot already
+exists for this run_id are skipped and their output is read back
+(north_rule "resumable from Iceberg snapshot checkpoints").  Run-log rows
+cost no Spark job: the driver writes each one as a one-row parquet file and
+commits it through the runs table's manifest before the stage goes on.  A
+stage's ``rows`` is counted by an ``Observation`` on the stage's own write,
+not by re-reading and counting its output.  The final result dict mirrors
+the reference job result {"num_triples": N, "sources": [...]}
+(harvest.py:57-60) with transcript lineage in place of source dicts.
 
 Materialize layout (scale-critical):
 * edges/nodes written ``repartition(num_buckets, salted conv_id)`` +
@@ -24,7 +29,6 @@ Materialize layout (scale-critical):
 from __future__ import annotations
 
 import os
-import time
 import uuid
 from dataclasses import dataclass, field
 
@@ -37,7 +41,7 @@ from ..operators.extract import extract_edges
 from ..operators.merge import merge_triples, num_triples
 from ..operators.validate import conforms_column, partition_valid
 from ..storage import table_for
-from .jobs import MetricsLog, RunLog
+from .jobs import MetricsLog, StageRunner
 
 
 @dataclass
@@ -85,28 +89,7 @@ def run_harvest(
 ) -> dict:
     """Execute (or resume) a harvest; returns the job-result dict."""
     run_id = run_id or f"run-{uuid.uuid4().hex[:12]}"
-    runlog = RunLog(spark, os.path.join(cfg.out_dir, "runs"))
-    metrics = []
-
-    def stage(name: str, builder, reader=None):
-        """Run one checkpointed stage (or read back its prior snapshot)."""
-        tbl = table_for(os.path.join(cfg.out_dir, name))
-        prior = runlog.snapshot_for(run_id, name)
-        if prior:
-            return tbl.read(spark, prior)
-        t0 = time.time()
-        runlog.record(run_id, name, "started")
-        try:
-            df = builder()
-            sid = tbl.write(df, mode="overwrite")
-            out = tbl.read(spark, sid)
-            n = out.count()
-            metrics.append((name, n, time.time() - t0))
-            runlog.record(run_id, name, "finished", snapshot_id=sid, num_triples=n)
-            return out
-        except Exception as ex:
-            runlog.record(run_id, name, "failed", exc_info=repr(ex))
-            raise
+    runner = StageRunner(spark, cfg.out_dir, run_id)
 
     if cfg.source_kind == "rdf_docs":
         from ..sources.rdf_parse import parse_rdf_docs, read_rdf_documents
@@ -117,7 +100,7 @@ def run_harvest(
             else [transcripts_path]
         )
         docs = read_rdf_documents(spark, paths)
-        edges_raw = stage(
+        edges_raw = runner(
             "edges_raw", lambda: parse_rdf_docs(docs, id_col="source")
         )
     elif cfg.fuse_extract_merge:
@@ -127,21 +110,21 @@ def run_harvest(
         edges_raw = None
     else:
         transcripts = spark.read.parquet(transcripts_path)
-        edges_raw = stage(
+        edges_raw = runner(
             "edges_raw",
             lambda: extract_edges(
                 transcripts, emit_provenance=cfg.emit_provenance, impl=cfg.extract_impl
             ),
         )
     if cfg.source_kind == "transcripts" and cfg.fuse_extract_merge:
-        merged = stage(
+        merged = runner(
             "triples",
             lambda: merge_triples_transcripts(
                 transcripts, emit_provenance=cfg.emit_provenance
             ),
         )
     else:
-        merged = stage("triples", lambda: merge_triples(edges_raw))
+        merged = runner("triples", lambda: merge_triples(edges_raw))
 
     def _validated():
         verdicts = conforms_column(
@@ -155,24 +138,24 @@ def run_harvest(
         table_for(os.path.join(cfg.out_dir, "quarantine")).write(quarantine)
         return valid
 
-    valid = stage("valid_triples", _validated)
+    valid = runner("valid_triples", _validated)
 
     # link + CC are their OWN checkpointed stages: both the edges and nodes
     # materializations consume the same snapshot, so the iterative CC loop
     # (the most expensive stage) runs exactly once per run (VERDICT r1
     # §wrong-1 — it used to be recomputed inside each consumer).
-    links = stage(
+    links = runner(
         "links", lambda: lnk.link_pairs(valid, threshold=cfg.link_threshold)
     )
-    labels = stage("cc_labels", lambda: ccm.connected_components(links))
+    labels = runner("cc_labels", lambda: ccm.connected_components(links))
 
-    edges_final = stage(
+    edges_final = runner(
         "edges",
         lambda: ccm.canonicalize_edges(valid, labels).transform(
             lambda d: _bucketed(d, cfg)
         ),
     )
-    nodes = stage("nodes", lambda: ccm.build_nodes(valid, labels))
+    nodes = runner("nodes", lambda: ccm.build_nodes(valid, labels))
 
     # north_rule lineage, both flavors:
     # * physical (MetricsLog.record_partitions): rows per materialized
@@ -183,23 +166,21 @@ def run_harvest(
     #   must reproduce every row bit-for-bit — the cross-run consistency
     #   probe (asserted in test_storage_plans).
     metricslog = MetricsLog(spark, os.path.join(cfg.out_dir, "metrics"))
-    if metrics:  # only on fresh (non-resumed) materialization
+    if runner.metrics:  # only on fresh (non-resumed) materialization
         metricslog.record_partitions(run_id, "edges", edges_final)
 
     from ..operators.export import partition_lineage
 
-    lineage = stage("lineage", lambda: partition_lineage(edges_final))
+    lineage = runner("lineage", lambda: partition_lineage(edges_final))
 
     n_triples = num_triples(edges_final)
-    runlog.record(run_id, "job", "finished", num_triples=n_triples)
+    runner.finish(n_triples)
     return {
         "run_id": run_id,
         "num_triples": n_triples,
-        "num_nodes": nodes.count(),
-        "num_lineage_buckets": lineage.count(),
-        "stages": [
-            {"stage": s, "rows": n, "seconds": round(dt, 3)} for s, n, dt in metrics
-        ],
+        "num_nodes": runner.rows("nodes", nodes),
+        "num_lineage_buckets": runner.rows("lineage", lineage),
+        "stages": runner.stages(),
     }
 
 
@@ -242,27 +223,7 @@ def harvest_increment(
     incremental ≡ batch equality test asserts it on the corpus.
     """
     run_id = run_id or f"inc-{uuid.uuid4().hex[:12]}"
-    runlog = RunLog(spark, os.path.join(cfg.out_dir, "runs"))
-    metrics = []
-
-    def stage(name: str, builder):
-        tbl = table_for(os.path.join(cfg.out_dir, name))
-        prior = runlog.snapshot_for(run_id, name)
-        if prior:
-            return tbl.read(spark, prior)
-        t0 = time.time()
-        runlog.record(run_id, name, "started")
-        try:
-            df = builder()
-            sid = tbl.write(df, mode="overwrite")
-            out = tbl.read(spark, sid)
-            n = out.count()
-            metrics.append((name, n, time.time() - t0))
-            runlog.record(run_id, name, "finished", snapshot_id=sid, num_triples=n)
-            return out
-        except Exception as ex:
-            runlog.record(run_id, name, "failed", exc_info=repr(ex))
-            raise
+    runner = StageRunner(spark, cfg.out_dir, run_id)
 
     base_triples = table_for(os.path.join(base_dir, "triples")).read(spark)
     base_valid = table_for(os.path.join(base_dir, "valid_triples")).read(spark)
@@ -270,7 +231,7 @@ def harvest_increment(
     base_labels = table_for(os.path.join(base_dir, "cc_labels")).read(spark)
 
     transcripts = spark.read.parquet(new_transcripts_path)
-    inc_triples = stage(
+    inc_triples = runner(
         "inc_triples",
         lambda: merge_triples(
             extract_edges(
@@ -299,7 +260,7 @@ def harvest_increment(
             cond = e if cond is None else (cond & e)
         return inc_triples.join(bt, cond, "left_anti")
 
-    delta = stage("delta_triples", _delta)
+    delta = runner("delta_triples", _delta)
     touched = delta.select("subj").distinct()
 
     # the combined triple set of every touched subject (terms are disjoint
@@ -308,9 +269,9 @@ def harvest_increment(
         base_slice = base_triples.join(touched, "subj", "left_semi")
         return base_slice.unionByName(delta)
 
-    touched_slice = stage("touched_slice", _touched_slice)
+    touched_slice = runner("touched_slice", _touched_slice)
 
-    merged = stage("triples", lambda: base_triples.unionByName(delta))
+    merged = runner("triples", lambda: base_triples.unionByName(delta))
 
     # re-validate ONLY touched subjects, over their combined triple set
     def _updated_valid():
@@ -335,7 +296,7 @@ def harvest_increment(
         kept = base_valid.join(touched, "subj", "left_anti")
         return kept.unionByName(valid_touched)
 
-    valid = stage("valid_triples", _updated_valid)
+    valid = runner("valid_triples", _updated_valid)
 
     def _updated_links():
         valid_touched = valid.join(touched, "subj", "left_semi")
@@ -351,7 +312,7 @@ def harvest_increment(
         ).select("entity_type", "a", "b", "g_inter", "g_union")
         return kept.unionByName(inc_links).distinct()
 
-    links = stage("links", _updated_links)
+    links = runner("links", _updated_links)
 
     def _updated_labels():
         new_pairs = links.join(
@@ -361,28 +322,26 @@ def harvest_increment(
         ).select("a", "b")
         return ccm.incremental_components(base_labels, new_pairs)
 
-    labels = stage("cc_labels", _updated_labels)
+    labels = runner("cc_labels", _updated_labels)
 
-    edges_final = stage(
+    edges_final = runner(
         "edges",
         lambda: ccm.canonicalize_edges(valid, labels).transform(
             lambda d: _bucketed(d, cfg)
         ),
     )
-    nodes = stage("nodes", lambda: ccm.build_nodes(valid, labels))
+    nodes = runner("nodes", lambda: ccm.build_nodes(valid, labels))
 
     from ..operators.export import partition_lineage
 
-    lineage = stage("lineage", lambda: partition_lineage(edges_final))
+    lineage = runner("lineage", lambda: partition_lineage(edges_final))
 
     n_triples = num_triples(edges_final)
-    runlog.record(run_id, "job", "finished", num_triples=n_triples)
+    runner.finish(n_triples)
     return {
         "run_id": run_id,
         "num_triples": n_triples,
-        "num_nodes": nodes.count(),
-        "num_lineage_buckets": lineage.count(),
-        "stages": [
-            {"stage": s, "rows": n, "seconds": round(dt, 3)} for s, n, dt in metrics
-        ],
+        "num_nodes": runner.rows("nodes", nodes),
+        "num_lineage_buckets": runner.rows("lineage", lineage),
+        "stages": runner.stages(),
     }

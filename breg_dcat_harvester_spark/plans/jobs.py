@@ -1,5 +1,5 @@
-"""Job control plane — runs registry + metrics (SURVEY.md §2.1 S12, §2.4 A7,
-§2.5 W2/W3).
+"""Job control plane — runs registry, stage runner, metrics (SURVEY.md
+§2.1 S12, §2.4 A7, §2.5 W2/W3).
 
 The reference tracks jobs in RQ/Redis registries partitioned by status
 (finished/failed/scheduled/started, harvest.py:158-193) with job dicts
@@ -7,23 +7,52 @@ The reference tracks jobs in RQ/Redis registries partitioned by status
 exc_info} (utils.py:32-48) and tail-N listing per registry
 (``get_job_ids(start=-num)``, harvest.py:146-155).
 
-Ours is a runs *table*: one row per (run_id, stage, status transition),
-appended via snapshot commits.  Registry listing = groupBy(status) +
-row_number window (W2); job JSON = the latest row per (run_id, stage).
+Ours is a runs *table*: one row per (run_id, stage, status transition).
+Like a Redis registry push, a transition costs no cluster work: the driver
+writes its row as a one-row parquet file with pyarrow and commits it with
+the table's manifest commit (``LocalSnapshotTable.commit``), before the
+stage goes on.  The resume lookup (``snapshot_for``) reads the current
+snapshot's files on the driver too.  Spark reads the same table for the
+registry views: listing = groupBy(status) + row_number window (W2); job
+JSON = the latest row per (run_id, stage).
+
+``StageRunner`` runs the checkpointed stages of one pipeline run (harvest,
+increment, curation).  A stage's row count is a ``pyspark.sql.Observation``
+on the DataFrame being written, so it rides the stage's write job instead
+of a re-read and ``count()``.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import os
+import time
+import uuid
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
-from ..storage import LocalSnapshotTable
+from ..storage import LocalSnapshotTable, table_for
 
-_RUNS_SCHEMA = (
-    "run_id string, stage string, status string, event_at timestamp, "
-    "num_triples long, snapshot_id string, exc_info string"
+# event_at is written as a UTC timestamp, so Spark reads it as `timestamp`
+_RUNS_SCHEMA = StructType(
+    [
+        StructField("run_id", StringType()),
+        StructField("stage", StringType()),
+        StructField("status", StringType()),
+        StructField("event_at", TimestampType()),
+        StructField("num_triples", LongType()),
+        StructField("snapshot_id", StringType()),
+        StructField("exc_info", StringType()),
+    ]
 )
 
 
@@ -43,19 +72,28 @@ class RunLog:
         num_triples: int | None = None,
         exc_info: str | None = None,
     ) -> None:
-        row = [
-            (
-                run_id,
-                stage,
-                status,
-                dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
-                num_triples,
-                snapshot_id,
-                exc_info,
-            )
-        ]
-        df = self.spark.createDataFrame(row, _RUNS_SCHEMA)
-        self.table.write(df, mode="append")
+        """Append one transition and commit it before returning."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        row = {
+            "run_id": [run_id],
+            "stage": [stage],
+            "status": [status],
+            "event_at": [dt.datetime.now(dt.timezone.utc)],
+            "num_triples": [num_triples],
+            "snapshot_id": [snapshot_id],
+            "exc_info": [exc_info],
+        }
+        name = f"{uuid.uuid4().hex}.parquet"
+        # an uncommitted file in data_dir is never read: the commit below
+        # is what makes the row visible
+        pq.write_table(
+            pa.Table.from_pydict(row, schema=to_arrow_schema(_RUNS_SCHEMA)),
+            os.path.join(self.table.data_dir, name),
+        )
+        self.table.commit([name], mode="append")
 
     def read(self) -> DataFrame:
         if not self.table.exists():
@@ -63,21 +101,95 @@ class RunLog:
         return self.table.read(self.spark)
 
     def snapshot_for(self, run_id: str, stage: str) -> str | None:
-        """Resume lookup: the snapshot id of a finished stage of this run."""
+        """Resume lookup: the snapshot id of a finished stage of this run,
+        answered on the driver from the current snapshot's files."""
         if not self.table.exists():
             return None
-        rows = (
-            self.read()
-            .filter(
-                (F.col("run_id") == run_id)
-                & (F.col("stage") == stage)
-                & (F.col("status") == "finished")
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        utc = pa.timestamp("us", tz="UTC")
+        best_at, best_sid = None, None
+        for path in self.table.files():
+            t = pq.read_table(
+                path,
+                columns=["event_at", "snapshot_id"],
+                filters=[
+                    ("run_id", "=", run_id),
+                    ("stage", "=", stage),
+                    ("status", "=", "finished"),
+                ],
             )
-            .orderBy(F.desc("event_at"))
-            .limit(1)
-            .collect()
-        )
-        return rows[0].snapshot_id if rows else None
+            # Spark-written files hold event_at as a naive INT96 UTC value
+            for at, sid in zip(
+                t["event_at"].cast(utc).to_pylist(), t["snapshot_id"].to_pylist()
+            ):
+                if best_at is None or at >= best_at:
+                    best_at, best_sid = at, sid
+        return best_sid
+
+
+class StageRunner:
+    """Runs the checkpointed stages of one pipeline run.
+
+    ``runner(name, builder)`` writes ``builder()`` as a new snapshot of the
+    table ``<out_dir>/<name>`` and returns the snapshot re-read, so
+    downstream stages read the checkpoint.  If this ``run_id`` already
+    finished the stage, its snapshot is read back and nothing runs.  Each
+    fresh stage records ``started`` then ``finished`` (or ``failed``) in the
+    runs table, and appends ``(name, rows, seconds)`` to ``metrics``; rows
+    are counted by an ``Observation`` on the write.
+    """
+
+    def __init__(self, spark: SparkSession, out_dir: str, run_id: str):
+        self.spark = spark
+        self.out_dir = out_dir
+        self.run_id = run_id
+        self.runlog = RunLog(spark, os.path.join(out_dir, "runs"))
+        self.metrics: list[tuple[str, int, float]] = []
+
+    def __call__(self, name: str, builder: Callable[[], DataFrame]) -> DataFrame:
+        tbl = table_for(os.path.join(self.out_dir, name))
+        prior = self.runlog.snapshot_for(self.run_id, name)
+        if prior:
+            return tbl.read(self.spark, prior)
+        t0 = time.time()
+        self.runlog.record(self.run_id, name, "started")
+        try:
+            obs = Observation()
+            sid = tbl.write(
+                builder().observe(obs, F.count(F.lit(1)).alias("rows")),
+                mode="overwrite",
+            )
+            out = tbl.read(self.spark, sid)
+            n = obs.get["rows"]
+            self.metrics.append((name, n, time.time() - t0))
+            self.runlog.record(
+                self.run_id, name, "finished", snapshot_id=sid, num_triples=n
+            )
+            return out
+        except Exception as ex:
+            self.runlog.record(self.run_id, name, "failed", exc_info=repr(ex))
+            raise
+
+    def rows(self, name: str, df: DataFrame) -> int:
+        """Rows of a stage's output: observed if it ran in this call,
+        counted from ``df`` (its read-back snapshot) if it was resumed."""
+        for stage, n, _ in self.metrics:
+            if stage == name:
+                return n
+        return df.count()
+
+    def stages(self) -> list[dict]:
+        """The result dict's per-stage list (fresh stages only)."""
+        return [
+            {"stage": s, "rows": n, "seconds": round(secs, 3)}
+            for s, n, secs in self.metrics
+        ]
+
+    def finish(self, num_triples: int) -> None:
+        """Record the whole run as finished."""
+        self.runlog.record(self.run_id, "job", "finished", num_triples=num_triples)
 
 
 def next_fire_date(

@@ -71,15 +71,23 @@ class LocalSnapshotTable:
         """Write df as a new snapshot; returns the snapshot id."""
         assert mode in ("overwrite", "append")
         staging = os.path.join(self.path, f"_staging-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(staging)
-        new_files = []
-        for name in sorted(os.listdir(staging)):
-            if name.endswith(".parquet"):
-                dst = f"{uuid.uuid4().hex}-{name}"
-                shutil.move(os.path.join(staging, name), os.path.join(self.data_dir, dst))
-                new_files.append(dst)
-        shutil.rmtree(staging, ignore_errors=True)
+        try:
+            df.write.mode("overwrite").parquet(staging)
+            new_files = []
+            for name in sorted(os.listdir(staging)):
+                if name.endswith(".parquet"):
+                    dst = f"{uuid.uuid4().hex}-{name}"
+                    shutil.move(os.path.join(staging, name), os.path.join(self.data_dir, dst))
+                    new_files.append(dst)
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+        return self.commit(new_files, mode)
 
+    def commit(self, new_files: list[str], mode: str) -> str:
+        """Commit data files already placed in ``data_dir`` as a new
+        snapshot; returns its id.  ``append`` keeps the parent snapshot's
+        files, ``overwrite`` replaces them.  The manifest rename is the
+        atomic commit point: files not yet committed are never read."""
         manifest = self._load()
         parent = self._snapshot(manifest, None)
         files = (parent["files"] if parent and mode == "append" else []) + new_files
@@ -104,15 +112,18 @@ class LocalSnapshotTable:
         written before a column existed read it as NULL) — appends may
         widen the schema over time, and readers opt into the merged view
         instead of the first file's schema."""
-        manifest = self._load()
-        snap = self._snapshot(manifest, snapshot_id)
-        if snap is None:
-            raise FileNotFoundError(f"no snapshot {snapshot_id!r} in {self.path}")
-        paths = [os.path.join(self.data_dir, f) for f in snap["files"]]
+        paths = self.files(snapshot_id)
         reader = spark.read
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
         return reader.parquet(*paths)
+
+    def files(self, snapshot_id: str | None = None) -> list[str]:
+        """Paths of a snapshot's data files (default: the current one)."""
+        snap = self._snapshot(self._load(), snapshot_id)
+        if snap is None:
+            raise FileNotFoundError(f"no snapshot {snapshot_id!r} in {self.path}")
+        return [os.path.join(self.data_dir, f) for f in snap["files"]]
 
     def rollback(self, snapshot_id: str) -> None:
         manifest = self._load()

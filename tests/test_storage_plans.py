@@ -1,13 +1,21 @@
 """Snapshot storage semantics + harvest plan resume equivalence
 (SURVEY.md §5.2-5.3: resume-from-checkpoint equivalence, job registries)."""
 
+import datetime as dt
+import json
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
 
 from breg_dcat_harvester_spark.plans.harvest import HarvestConfig, run_harvest
-from breg_dcat_harvester_spark.plans.jobs import RunLog, job_json, registry_tail
+from breg_dcat_harvester_spark.plans.jobs import (
+    RunLog,
+    StageRunner,
+    job_json,
+    registry_tail,
+)
 from breg_dcat_harvester_spark.storage import LocalSnapshotTable
 
 
@@ -28,6 +36,22 @@ def test_snapshot_append_overwrite_rollback(spark, tmp_path):
     assert {s["id"] for s in tbl.snapshots()} == {s1, s2, s3}
 
 
+_LEGACY_RUNS_DDL = (
+    "run_id string, stage string, status string, event_at timestamp, "
+    "num_triples long, snapshot_id string, exc_info string"
+)
+
+
+def _record_with_spark(spark, log, run_id, stage, status, snapshot_id):
+    """A runs row written the way RunLog.record wrote it before rows were
+    committed from the driver: a Spark DataFrame through
+    LocalSnapshotTable.write (so event_at is stored as Spark's INT96)."""
+    row = (run_id, stage, status,
+           dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
+           None, snapshot_id, None)
+    log.table.write(spark.createDataFrame([row], _LEGACY_RUNS_DDL), mode="append")
+
+
 def test_runlog_and_registries(spark, tmp_path):
     log = RunLog(spark, str(tmp_path / "runs"))
     for i in range(3):
@@ -45,6 +69,109 @@ def test_runlog_and_registries(spark, tmp_path):
     assert log.snapshot_for("r9", "extract") is None
     jobs = job_json(runs).collect()
     assert any('"status":"failed"' in r.job for r in jobs)
+
+    # a runs table that already holds Spark-written rows keeps working after
+    # rows are appended from the driver: Spark reads, the registry views and
+    # the resume lookup all see one table, in event order
+    log = RunLog(spark, str(tmp_path / "runs_spark_written"))
+    events = [
+        ("old", "extract", "started", None),
+        ("old", "extract", "finished", "s-old"),
+        ("mix", "extract", "started", None),
+        ("mix", "extract", "finished", "s-mix-1"),
+    ]
+    for run_id, stage, status, sid in events:
+        _record_with_spark(spark, log, run_id, stage, status, sid)
+    new_events = [
+        ("mix", "extract", "started", None),
+        ("mix", "extract", "finished", "s-mix-2"),
+        ("new", "extract", "started", None),
+        ("new", "extract", "failed", None),
+    ]
+    for run_id, stage, status, sid in new_events:
+        log.record(run_id, stage, status, snapshot_id=sid)
+
+    runs = log.read()
+    assert dict(runs.dtypes)["event_at"] == "timestamp"
+    ordered = [
+        (r.run_id, r.stage, r.status, r.snapshot_id)
+        for r in runs.orderBy("event_at").collect()
+    ]
+    assert ordered == events + new_events
+
+    # resume lookup: Spark-written, mixed (the newer driver row wins) and
+    # never-finished runs
+    assert log.snapshot_for("old", "extract") == "s-old"
+    assert log.snapshot_for("mix", "extract") == "s-mix-2"
+    assert log.snapshot_for("new", "extract") is None
+    # the Spark views agree with the driver-side lookup
+    top = registry_tail(runs, num=1).collect()
+    assert {(r.status, r.run_id, r.snapshot_id) for r in top} == {
+        ("started", "new", None),
+        ("finished", "mix", "s-mix-2"),
+        ("failed", "new", None),
+    }
+    latest = {
+        (j["job_id"], j["stage"]): j["status"]
+        for j in (json.loads(r.job) for r in job_json(runs).collect())
+    }
+    assert latest == {
+        ("old", "extract"): "finished",
+        ("mix", "extract"): "finished",
+        ("new", "extract"): "failed",
+    }
+
+
+def test_failed_write_leaves_no_staging(spark, tmp_path):
+    tbl = LocalSnapshotTable(str(tmp_path / "t"))
+    sid = tbl.write(spark.range(3).withColumnRenamed("id", "x"))
+    files = sorted(os.listdir(tbl.data_dir))
+    # fails inside the write job, after tasks have opened staging files
+    bad = spark.range(6).select(
+        F.when(F.col("id") < 3, F.col("id"))
+        .otherwise(F.raise_error(F.lit("boom")))
+        .alias("x")
+    )
+    with pytest.raises(Exception, match="boom"):
+        tbl.write(bad, mode="append")
+    assert [n for n in os.listdir(tbl.path) if n.startswith("_staging-")] == []
+    assert [s["id"] for s in tbl.snapshots()] == [sid]
+    assert sorted(os.listdir(tbl.data_dir)) == files
+    assert tbl.read(spark).count() == 3
+
+
+def test_stage_runner_counts_empty_outputs(spark, tmp_path):
+    """An empty stage output records rows == 0 and a finished row, for a
+    filter that keeps nothing and for a join AQE prunes to empty."""
+    runner = StageRunner(spark, str(tmp_path / "out"), "run-e")
+    left = spark.range(100).withColumnRenamed("id", "k")
+    builders = {
+        "filtered": lambda: left.filter("k < 0"),
+        "joined": lambda: left.repartition(4).join(
+            left.filter("k < 0").repartition(4), "k"
+        ),
+    }
+    for name, builder in builders.items():
+        # a daemon thread, so that a hung Observation fails the test instead
+        # of hanging the suite
+        done = []
+        t = threading.Thread(
+            target=lambda n, b: done.append(runner(n, b)),
+            args=(name, builder),
+            daemon=True,
+        )
+        t.start()
+        t.join(timeout=300)
+        assert not t.is_alive() and len(done) == 1, f"stage {name} did not finish"
+        assert done[0].count() == 0
+    assert [(s["stage"], s["rows"]) for s in runner.stages()] == [
+        ("filtered", 0), ("joined", 0),
+    ]
+    finished = {
+        r.stage: r.num_triples
+        for r in runner.runlog.read().filter("status = 'finished'").collect()
+    }
+    assert finished == {"filtered": 0, "joined": 0}
 
 
 @pytest.mark.slow
@@ -94,6 +221,38 @@ def test_harvest_run_and_resume(spark, tmp_path, small_transcripts):
 
     recomputed = {tuple(r) for r in partition_lineage(edges.repartition(7)).collect()}
     assert rows == recomputed
+
+
+@pytest.mark.slow
+def test_harvest_resumes_after_failed_stage(spark, tmp_path, small_transcripts, monkeypatch):
+    """A stage that raises records a failed row; re-running the same run_id
+    resumes at that stage and produces a fresh run's graph."""
+    from breg_dcat_harvester_spark.operators import link as lnk
+
+    src = str(tmp_path / "transcripts")
+    small_transcripts.write.parquet(src)
+    cfg = HarvestConfig(out_dir=str(tmp_path / "out"))
+
+    def broken_link_pairs(*args, **kwargs):
+        raise RuntimeError("link exploded")
+
+    with monkeypatch.context() as m:
+        m.setattr(lnk, "link_pairs", broken_link_pairs)
+        with pytest.raises(RuntimeError, match="link exploded"):
+            run_harvest(spark, src, cfg, run_id="run-f")
+    runlog = RunLog(spark, os.path.join(cfg.out_dir, "runs"))
+    failed = runlog.read().filter("run_id = 'run-f' AND status = 'failed'").collect()
+    assert [(r.stage, "link exploded" in r.exc_info) for r in failed] == [("links", True)]
+
+    resumed = run_harvest(spark, src, cfg, run_id="run-f")
+    assert [s["stage"] for s in resumed["stages"]] == [
+        "links", "cc_labels", "edges", "nodes", "lineage",
+    ]
+    fresh = run_harvest(
+        spark, src, HarvestConfig(out_dir=str(tmp_path / "fresh")), run_id="run-g"
+    )
+    assert resumed["num_triples"] == fresh["num_triples"]
+    assert resumed["num_nodes"] == fresh["num_nodes"]
 
 
 def test_iceberg_branch_selected_and_writer_calls(spark):
