@@ -19,11 +19,15 @@ the reference job result {"num_triples": N, "sources": [...]}
 (harvest.py:57-60) with transcript lineage in place of source dicts.
 
 Materialize layout (scale-critical):
-* edges/nodes written ``repartition(num_buckets, salted conv_id)`` +
+* edges are written ``repartition(salted conv_id bucket)`` +
   ``sortWithinPartitions(conv_id, turn_idx)`` (W5 stable-turn-order
-  invariant).  The salt spreads hot conversations (zipf tail) across
-  buckets; on a cluster this maps 1:1 onto Iceberg ``bucket(N, conv_id)``
-  partitioning.
+  invariant).  The key is ``num_buckets * salt`` salted buckets; the salt
+  spreads hot conversations (zipf tail) across them, and on a cluster the
+  bucket maps 1:1 onto Iceberg ``bucket(N, conv_id)`` partitioning.  No
+  partition count is fixed: the shuffle uses ``spark.sql.shuffle.partitions``
+  and AQE coalesces it to the data size, so a small graph is a few files,
+  not one per salted bucket.  Every salted bucket still lands in exactly one
+  file, sorted.  Nodes are not bucketed.
 """
 
 from __future__ import annotations
@@ -53,8 +57,10 @@ class HarvestConfig:
     strict_validation: bool = False
     validation_disabled: bool = False
     all_or_nothing: bool = False  # harvest.py:41-47 semantics when True
+    # edges bucket key moduli: num_buckets conv_id buckets, each split into
+    # salt sub-buckets for hot conv_ids; the file count is AQE's, not theirs
     num_buckets: int = 32
-    salt: int = 4  # sub-splits per bucket for hot conv_ids
+    salt: int = 4
     # 'transcripts' = the north-star mention-extraction path;
     # 'rdf_docs'    = the reference's literal harvest shape: the input paths
     #                 are RDF documents (xml/turtle/nt/json-ld) parsed by
@@ -73,12 +79,14 @@ class HarvestConfig:
 
 
 def _bucketed(df: DataFrame, cfg: HarvestConfig) -> DataFrame:
-    """Salted conv_id bucketing + stable within-partition turn order (W5)."""
+    """Salted conv_id bucketing + stable within-partition turn order (W5).
+    The partition count is left to the session (AQE coalesces it); each
+    salted bucket hashes to one shuffle partition, hence one file."""
     bucket = F.pmod(F.hash("conv_id"), F.lit(cfg.num_buckets))
     salt = F.pmod(F.hash("conv_id", "turn_idx"), F.lit(cfg.salt))
-    return df.repartition(
-        cfg.num_buckets * cfg.salt, bucket * cfg.salt + salt
-    ).sortWithinPartitions("conv_id", "turn_idx")
+    return df.repartition(bucket * cfg.salt + salt).sortWithinPartitions(
+        "conv_id", "turn_idx"
+    )
 
 
 def run_harvest(
@@ -158,8 +166,8 @@ def run_harvest(
     nodes = runner("nodes", lambda: ccm.build_nodes(valid, labels))
 
     # north_rule lineage, both flavors:
-    # * physical (MetricsLog.record_partitions): rows per materialized
-    #   partition — observability for THIS run's layout;
+    # * physical (MetricsLog.record_partitions): rows per committed edges
+    #   data file — observability for THIS run's layout;
     # * content-keyed (operators/export.partition_lineage, its own
     #   checkpointed stage): per salted-conv_id-bucket rollup that is
     #   deterministic at any parallelism, so a resumed or re-executed run

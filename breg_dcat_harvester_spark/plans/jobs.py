@@ -11,8 +11,9 @@ Ours is a runs *table*: one row per (run_id, stage, status transition).
 Like a Redis registry push, a transition costs no cluster work: the driver
 writes its row as a one-row parquet file with pyarrow and commits it with
 the table's manifest commit (``LocalSnapshotTable.commit``), before the
-stage goes on.  The resume lookup (``snapshot_for``) reads the current
-snapshot's files on the driver too.  Spark reads the same table for the
+stage goes on.  ``MetricsLog`` commits its rows the same way.  The resume
+lookup (``snapshot_for``) reads the current snapshot's files on the driver
+too.  Spark reads the same table for the
 registry views: listing = groupBy(status) + row_number window (W2); job
 JSON = the latest row per (run_id, stage).
 
@@ -33,6 +34,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -55,6 +57,31 @@ _RUNS_SCHEMA = StructType(
     ]
 )
 
+_METRICS_SCHEMA = StructType(
+    [
+        StructField("run_id", StringType()),
+        StructField("stage", StringType()),
+        StructField("partition_id", IntegerType()),
+        StructField("rows_out", LongType()),
+    ]
+)
+
+
+def _append_rows(table: LocalSnapshotTable, schema: StructType, columns: dict) -> None:
+    """Append rows from the driver: pyarrow writes them as one parquet file
+    in the table's ``data_dir`` and the manifest commit makes them visible
+    (an uncommitted file is never read).  No Spark job runs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    name = f"{uuid.uuid4().hex}.parquet"
+    pq.write_table(
+        pa.Table.from_pydict(columns, schema=to_arrow_schema(schema)),
+        os.path.join(table.data_dir, name),
+    )
+    table.commit([name], mode="append", schema=schema)
+
 
 class RunLog:
     """Append-only runs table with snapshot-checkpoint lookups."""
@@ -73,11 +100,7 @@ class RunLog:
         exc_info: str | None = None,
     ) -> None:
         """Append one transition and commit it before returning."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        row = {
+        _append_rows(self.table, _RUNS_SCHEMA, {
             "run_id": [run_id],
             "stage": [stage],
             "status": [status],
@@ -85,15 +108,7 @@ class RunLog:
             "num_triples": [num_triples],
             "snapshot_id": [snapshot_id],
             "exc_info": [exc_info],
-        }
-        name = f"{uuid.uuid4().hex}.parquet"
-        # an uncommitted file in data_dir is never read: the commit below
-        # is what makes the row visible
-        pq.write_table(
-            pa.Table.from_pydict(row, schema=to_arrow_schema(_RUNS_SCHEMA)),
-            os.path.join(self.table.data_dir, name),
-        )
-        self.table.commit([name], mode="append")
+        })
 
     def read(self) -> DataFrame:
         if not self.table.exists():
@@ -207,24 +222,29 @@ def next_fire_date(
 
 
 class MetricsLog:
-    """Per-partition stage metrics (A9): one row per (run, stage, partition)."""
+    """Per-partition stage metrics (A9): one row per (run, stage, partition),
+    where a partition is one committed data file of the stage's output."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.table = LocalSnapshotTable(path)
 
     def record_partitions(self, run_id: str, stage: str, df: DataFrame) -> None:
-        rows = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows_out"))
-            .select(
-                F.lit(run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                "partition_id",
-                F.col("rows_out").cast("long"),
-            )
-        )
-        self.table.write(rows, mode="append")
+        """Rows per data file of ``df``, a stage's read-back snapshot.
+        ``partition_id`` is the file's index in sorted path order; the rows
+        come from each file's parquet footer, on the driver."""
+        import pyarrow.parquet as pq
+        from urllib.parse import unquote, urlparse
+
+        files = sorted(df.inputFiles())
+        _append_rows(self.table, _METRICS_SCHEMA, {
+            "run_id": [run_id] * len(files),
+            "stage": [stage] * len(files),
+            "partition_id": list(range(len(files))),
+            "rows_out": [
+                pq.read_metadata(unquote(urlparse(f).path)).num_rows for f in files
+            ],
+        })
 
     def read(self) -> DataFrame:
         return self.table.read(self.spark)

@@ -12,7 +12,10 @@ semantics we rely on:
 * ``rollback`` moves the current pointer (harvest all-or-nothing semantics:
   a failed run's partial output is never current);
 * snapshot ids are the checkpoint/resume tokens recorded in the runs table
-  (north_rule "resumable from Iceberg snapshot checkpoints").
+  (north_rule "resumable from Iceberg snapshot checkpoints");
+* each snapshot records its schema, as Iceberg table metadata does, so
+  planning a read starts no Spark job (no parquet footer inference).  An
+  append that changes the schema records none, and its reads infer it.
 
 The two backends expose one API; cluster deployments flip ``use_iceberg``
 (catalog configured via spark.sql.catalog.*) without touching pipeline code.
@@ -27,6 +30,28 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def _as_nullable(dtype):
+    """Spark's ``asNullable`` on a data type's JSON form: parquet reads
+    every field, array element and map value back as nullable."""
+    if not isinstance(dtype, dict):
+        return dtype
+    kind = dtype["type"]
+    if kind == "struct":
+        return {**dtype, "fields": [
+            {**f, "nullable": True, "type": _as_nullable(f["type"])}
+            for f in dtype["fields"]
+        ]}
+    if kind == "array":
+        return {**dtype, "containsNull": True,
+                "elementType": _as_nullable(dtype["elementType"])}
+    if kind == "map":
+        return {**dtype, "valueContainsNull": True,
+                "keyType": _as_nullable(dtype["keyType"]),
+                "valueType": _as_nullable(dtype["valueType"])}
+    return dtype
 
 
 class LocalSnapshotTable:
@@ -81,22 +106,31 @@ class LocalSnapshotTable:
                     new_files.append(dst)
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-        return self.commit(new_files, mode)
+        return self.commit(new_files, mode, df.schema)
 
-    def commit(self, new_files: list[str], mode: str) -> str:
+    def commit(
+        self, new_files: list[str], mode: str, schema: StructType | None = None
+    ) -> str:
         """Commit data files already placed in ``data_dir`` as a new
         snapshot; returns its id.  ``append`` keeps the parent snapshot's
-        files, ``overwrite`` replaces them.  The manifest rename is the
-        atomic commit point: files not yet committed are never read."""
+        files, ``overwrite`` replaces them.  ``schema`` (the new files'
+        schema) is recorded with every field nullable, as parquet reads it
+        back; an append records it only if it equals the parent's, so a
+        snapshot whose files disagree falls back to inference.  The
+        manifest rename is the atomic commit point: files not yet committed
+        are never read."""
         manifest = self._load()
         parent = self._snapshot(manifest, None)
         files = (parent["files"] if parent and mode == "append" else []) + new_files
         digest = hashlib.sha256("|".join(files).encode()).hexdigest()[:12]
         sid = f"s{len(manifest['snapshots']):06d}-{digest}"
-        manifest["snapshots"].append(
-            {"id": sid, "parent": parent["id"] if parent else None, "files": files,
-             "mode": mode}
-        )
+        snap = {"id": sid, "parent": parent["id"] if parent else None,
+                "files": files, "mode": mode}
+        if schema is not None:
+            recorded = _as_nullable(schema.jsonValue())
+            if mode == "overwrite" or parent is None or parent.get("schema") == recorded:
+                snap["schema"] = recorded
+        manifest["snapshots"].append(snap)
         manifest["current"] = sid
         self._store(manifest)
         return sid
@@ -111,18 +145,27 @@ class LocalSnapshotTable:
         all referenced files (Iceberg add-column evolution semantics: rows
         written before a column existed read it as NULL) — appends may
         widen the schema over time, and readers opt into the merged view
-        instead of the first file's schema."""
-        paths = self.files(snapshot_id)
+        instead of the first file's schema.  Otherwise a recorded schema
+        is applied as is, so no Spark job infers it from the files."""
+        snap = self._require(snapshot_id)
         reader = spark.read
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*paths)
+        elif "schema" in snap:
+            reader = reader.schema(StructType.fromJson(snap["schema"]))
+        return reader.parquet(*self._paths(snap))
 
     def files(self, snapshot_id: str | None = None) -> list[str]:
         """Paths of a snapshot's data files (default: the current one)."""
+        return self._paths(self._require(snapshot_id))
+
+    def _require(self, snapshot_id: str | None) -> dict:
         snap = self._snapshot(self._load(), snapshot_id)
         if snap is None:
             raise FileNotFoundError(f"no snapshot {snapshot_id!r} in {self.path}")
+        return snap
+
+    def _paths(self, snap: dict) -> list[str]:
         return [os.path.join(self.data_dir, f) for f in snap["files"]]
 
     def rollback(self, snapshot_id: str) -> None:

@@ -94,15 +94,34 @@ def test_cli_harvest_and_facets(tmp_path):
 def test_partition_metrics(spark, tmp_path, small_transcripts):
     from breg_dcat_harvester_spark.plans.harvest import HarvestConfig, run_harvest
     from breg_dcat_harvester_spark.plans.jobs import MetricsLog
+    from breg_dcat_harvester_spark.storage import LocalSnapshotTable
 
     src = str(tmp_path / "t")
     small_transcripts.limit(200).write.parquet(src)
     cfg = HarvestConfig(out_dir=str(tmp_path / "kg"), extract_impl="sql", num_buckets=4)
-    run_harvest(spark, src, cfg, run_id="m-run")
+    res = run_harvest(spark, src, cfg, run_id="m-run")
     m = MetricsLog(spark, str(tmp_path / "kg" / "metrics")).read()
     rows = m.filter((F.col("run_id") == "m-run") & (F.col("stage") == "edges"))
     assert rows.count() > 0
     assert rows.agg(F.sum("rows_out")).head()[0] > 0
+
+    # one row per committed edges data file, partition_id = sorted file
+    # index; the rows add up to the edges stage's rows (canonicalization
+    # can fold two subjects, so that is at least num_triples)
+    edges = LocalSnapshotTable(str(tmp_path / "kg" / "edges")).read(spark)
+    per_file = sorted(
+        (r.f, r.n)
+        for r in edges.groupBy(F.input_file_name().alias("f"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    recorded = sorted((r.partition_id, r.rows_out) for r in rows.collect())
+    assert recorded == [(i, n) for i, (_, n) in enumerate(per_file)]
+    edges_rows = next(s["rows"] for s in res["stages"] if s["stage"] == "edges")
+    assert sum(n for _, n in recorded) == edges_rows >= res["num_triples"]
+    assert m.schema.simpleString() == (
+        "struct<run_id:string,stage:string,partition_id:int,rows_out:bigint>"
+    )
 
 
 def test_cli_harvest_increment(spark, tmp_path, small_transcripts, capsys):

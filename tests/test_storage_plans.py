@@ -6,6 +6,7 @@ import json
 import os
 import threading
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -207,9 +208,30 @@ def test_harvest_run_and_resume(spark, tmp_path, small_transcripts):
     res3 = run_harvest(spark, src, cfg, run_id="run-b")
     assert res3["num_triples"] == res1["num_triples"]
 
-    # stable turn ordering invariant (W5): edges sorted within partitions
-    edges = LocalSnapshotTable(os.path.join(cfg.out_dir, "edges")).read(spark)
+    # stable turn ordering invariant (W5): every edges data file is sorted
+    # by (conv_id, turn_idx), each salted bucket key lives in exactly one
+    # file, and AQE keeps the file count within the shuffle partitions
+    edges_tbl = LocalSnapshotTable(os.path.join(cfg.out_dir, "edges"))
+    edges = edges_tbl.read(spark)
     assert edges.count() >= res1["num_triples"]
+    files = edges_tbl.files()
+    for path in files:
+        t = pq.read_table(path, columns=["conv_id", "turn_idx"])
+        order = list(zip(t["conv_id"].to_pylist(), t["turn_idx"].to_pylist()))
+        assert order == sorted(order), path
+    key = F.pmod(F.hash("conv_id"), F.lit(cfg.num_buckets)) * cfg.salt + F.pmod(
+        F.hash("conv_id", "turn_idx"), F.lit(cfg.salt)
+    )
+    files_per_key = (
+        edges.select(key.alias("key"), F.input_file_name().alias("f"))
+        .distinct()
+        .groupBy("key")
+        .count()
+        .agg(F.max("count"))
+        .head()[0]
+    )
+    assert files_per_key == 1
+    assert len(files) <= int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # content-keyed lineage is the cross-run consistency probe: the fresh
     # run-b must reproduce run-a's bucket rollup BIT-FOR-BIT, and the
@@ -253,6 +275,54 @@ def test_harvest_resumes_after_failed_stage(spark, tmp_path, small_transcripts, 
     )
     assert resumed["num_triples"] == fresh["num_triples"]
     assert resumed["num_nodes"] == fresh["num_nodes"]
+
+
+def _job_ids(spark) -> set:
+    """Ids of the Spark jobs started so far outside any job group, once the
+    listener bus has delivered every event posted before the call."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+@pytest.mark.slow
+def test_snapshot_schemas_recorded(spark, tmp_path, small_transcripts):
+    """Every snapshot a fresh harvest commits records the schema parquet
+    inference returns, and reading it starts no Spark job.  Manifests
+    without recorded schemas (written before they were recorded) still
+    read, by inference, and the run still resumes from them."""
+    src = str(tmp_path / "transcripts")
+    small_transcripts.limit(200).write.parquet(src)
+    cfg = HarvestConfig(out_dir=str(tmp_path / "out"), extract_impl="sql")
+    res = run_harvest(spark, src, cfg, run_id="run-s")
+    tables = {
+        name: LocalSnapshotTable(os.path.join(cfg.out_dir, name))
+        for name in sorted(os.listdir(cfg.out_dir))
+    }
+    assert {"runs", "metrics", "quarantine", "edges", "lineage"} <= set(tables)
+
+    before = _job_ids(spark)
+    current = {name: tbl.read(spark) for name, tbl in tables.items()}
+    assert _job_ids(spark) == before
+
+    for name, tbl in tables.items():
+        for snap in tbl.snapshots():
+            assert "schema" in snap, (name, snap["id"])
+            inferred = spark.read.parquet(*tbl.files(snap["id"])).schema
+            assert tbl.read(spark, snap["id"]).schema == inferred, (name, snap["id"])
+
+    for tbl in tables.values():
+        with open(tbl.manifest_path) as fh:
+            manifest = json.load(fh)
+        for snap in manifest["snapshots"]:
+            del snap["schema"]
+        with open(tbl.manifest_path, "w") as fh:
+            json.dump(manifest, fh)
+    for name, tbl in tables.items():
+        assert tbl.read(spark).schema == current[name].schema, name
+    again = run_harvest(spark, src, cfg, run_id="run-s")
+    assert again["stages"] == []
+    assert again["num_triples"] == res["num_triples"]
 
 
 def test_iceberg_branch_selected_and_writer_calls(spark):
@@ -496,16 +566,19 @@ def test_run_curation_and_resume(spark, tmp_path):
 
 def test_snapshot_schema_evolution_merge(spark, tmp_path):
     # Iceberg add-column semantics: an append may carry a new column; the
-    # merged read surfaces it with NULLs for pre-evolution rows, while the
-    # default read keeps serving the original schema untouched
+    # merged read surfaces it with NULLs for pre-evolution rows
     tbl = LocalSnapshotTable(str(tmp_path / "ev"))
     s1 = tbl.write(
         spark.range(3).selectExpr("id AS x"), mode="overwrite"
     )
-    tbl.write(
+    s2 = tbl.write(
         spark.range(3, 5).selectExpr("id AS x", "id * 10 AS y"),
         mode="append",
     )
+    # the widening append records no schema, so its default read is the
+    # inferred one, as for a manifest without recorded schemas
+    assert ["schema" in s for s in tbl.snapshots()] == [True, False]
+    assert tbl.read(spark, s2).columns == spark.read.parquet(*tbl.files(s2)).columns
     merged = tbl.read(spark, merge_schema=True)
     assert sorted(merged.columns) == ["x", "y"]
     rows = {r.x: r.y for r in merged.collect()}
