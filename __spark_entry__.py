@@ -21,16 +21,12 @@ from breg_dcat_harvester_spark.functions import oracle_sql as osql
 from breg_dcat_harvester_spark.operators import facets as fac
 from breg_dcat_harvester_spark.operators import search as srch
 from breg_dcat_harvester_spark.functions import textfns as tf
-from breg_dcat_harvester_spark.operators import ann as annm
 from breg_dcat_harvester_spark.operators import cc as ccm
 from breg_dcat_harvester_spark.operators import conversation as conv
 from breg_dcat_harvester_spark.operators import dedup as ddp
 from breg_dcat_harvester_spark.operators import labels as lbl
 from breg_dcat_harvester_spark.operators import link as lnk
-from breg_dcat_harvester_spark.operators import multimodal as mm
-from breg_dcat_harvester_spark.operators import curation as cur
 from breg_dcat_harvester_spark.operators import export as exp
-from breg_dcat_harvester_spark.operators import decontam as dctm
 from breg_dcat_harvester_spark.operators import packing as pkg
 from breg_dcat_harvester_spark.operators import sampling as smp
 from breg_dcat_harvester_spark.operators import sketches as sk
@@ -71,14 +67,6 @@ RDFS_SCHEMA_TRIPLES = [
      "http://www.w3.org/2004/02/skos/core#Concept"),
 ]
 
-# corpus keyword-search probes (doc_search_bm25) — vocabulary from the
-# synthetic documents table
-BM25_QUERIES = [
-    ("q_shuffle", "spark shuffle hash join"),
-    ("q_scan", "fast table scan"),
-    ("q_sort", "merge sort window"),
-]
-
 _REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 
 # the reference's own sample RDF documents + our JSON-LD third source
@@ -87,34 +75,6 @@ RDF_SAMPLE_PATHS = [
     "/root/reference/api/breg_harvester/ontology/sample-02.ttl",
     os.path.join(_REPO_DIR, "data", "rdf_samples", "sample-03.jsonld"),
 ]
-
-EMB_DIM = 64  # embeddings.parquet vector dimensionality (TESTDATA fixed)
-
-# Recall-audit floors for the approximate ANN contract queries.  Everything
-# is seeded/deterministic, so the observed per-query hit counts are stable;
-# the floor sits under the observed minimum with margin so the gate trips
-# only on a genuine recall collapse (at sf0.01: LSH >= 10/10 per query with
-# solver params target_sim=0.35/recall=0.999; IVF >= 5/10 probing 4/16
-# lists).
-ANN_LSH_MIN_HITS = 7
-ANN_IVF_MIN_HITS = 3
-# IVF-PQ shares IVF's nprobe coverage cap (4/16 lists) and adds bounded
-# quantization loss recoverable by the exact re-rank; observed min 4/10 at
-# sf0.01 -> floor 2 trips only on genuine collapse
-ANN_PQ_MIN_HITS = 2
-
-# Planted-near-dup perturbation, expressed twice so BOTH engines build
-# bit-identical float32 vectors (integer-derived deltas, IEEE ops only;
-# Spark transform index is 0-based, DuckDB's 1-based — hence the i-1):
-PLANT_EXPR_SPARK = (
-    "transform(embedding, (x, i) ->"
-    " cast(x + 0.02 * (pmod(vec_id + i, 7) - 3) as float))"
-)
-PLANT_EXPR_DUCK = (
-    "list_transform(embedding, (x, i) ->"
-    " CAST(x + 0.02 * ((vec_id + i - 1) % 7 - 3) AS REAL))"
-)
-
 
 def _sf_name(sf_dir: str) -> str:
     base = os.path.basename(os.path.normpath(sf_dir))
@@ -1240,16 +1200,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["doc_chunks"] = _chunk_docs
 
-    # corpus keyword search: BM25-shaped rational scaled-integer ranking —
-    # ONE corpus pass, query terms broadcast so only matched postings
-    # shuffle; bit-deterministic scores (operators/textsearch.py)
-    def _doc_search(spark, sf):
-        from breg_dcat_harvester_spark.operators.textsearch import bm25_topk
-
-        return bm25_topk(_documents(spark, sf), BM25_QUERIES, k=10)
-
-    q["doc_search_bm25"] = _doc_search
-
     # distributed BPE tokenizer training (operators/bpe.py): ONE corpus
     # pass aggregates word frequencies, then every merge round runs on the
     # vocabulary relation; argmax pairs are plan constants (deterministic
@@ -1306,13 +1256,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["kg_windowed_turn_counts"] = _windowed
 
-    # --- training-data pipeline ops (documents/embeddings tables) ---------
+    # --- training-data pipeline ops (documents table) --------------------
 
     def _documents(spark, sf):
         return spark.read.parquet(os.path.join(sf, "documents.parquet"))
-
-    def _embeddings(spark, sf):
-        return spark.read.parquet(os.path.join(sf, "embeddings.parquet"))
 
     def _events(spark, sf):
         return spark.read.parquet(os.path.join(sf, "events.parquet"))
@@ -1368,18 +1315,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     q["ingest_increment"] = _ingest_increment
-
-    # per-domain keep/drop rollup (RefinedWeb-style source filtering): same
-    # integer-exact quality gate as curate_corpus, lifted to the domain key;
-    # src0/src7 play the explicit blocklist
-    q["domain_quality"] = lambda spark, sf: cur.domain_stats(
-        _documents(spark, sf),
-        min_docs=20,
-        min_quality_per_mille=500,
-        blocklist=["src0", "src7"],
-        min_tokens=20,
-        min_alpha_per_mille=820,
-    )
 
     # LSH variant must equal the brute-force oracle (recall ~1 at t=0.8
     # with b=32, r=2: P(miss) = (1-0.64)^32 ~ 6e-15)
@@ -1484,139 +1419,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["sample_weighted"] = _sample_weighted
 
-    # flagship curation composition: dedup -> quality -> sample, one plan,
-    # one auditable decision row per document
-    # thresholds chosen to actually discriminate on this corpus (tokens
-    # 10-99, alpha ratio 0.795-0.855): every gate branch is exercised
-    q["curate_corpus"] = lambda spark, sf: cur.curate_corpus(
-        _documents(spark, sf),
-        SAMPLE_RATES,
-        threshold=0.8,
-        min_tokens=20,
-        min_alpha_per_mille=820,
-    )
-
-    # training-mix planning report: per-(lang, source) doc/token/byte
-    # shares of the corpus (integer per-mille — replayed exactly)
-    q["corpus_mixture"] = lambda spark, sf: cur.corpus_mixture(_documents(spark, sf))
-
-    # benchmark decontamination (GPT-3/Pile-style n-gram collision): the
-    # "eval set" is a deterministic 3% sha256-bucket slice of the corpus
-    # (salt "bench" — replayable in DuckDB), so contamination is guaranteed
-    # non-trivial; n=8 keeps random 8-gram collisions discriminative on the
-    # short synthetic docs
-    def _decontam(spark, sf):
-        docs = _documents(spark, sf)
-        bench = docs.withColumn(
-            "bucket", smp.sample_bucket(F.col("doc_id"), salt="bench")
-        ).filter(F.col("bucket") < 30)
-        return dctm.contamination_report(docs, bench, n=8, min_hits=1)
-
-    q["decontaminate"] = _decontam
-
-    def _queries_df(spark, sf):
-        emb = _embeddings(spark, sf)
-        return emb.filter(F.col("vec_id") % 50 == 0).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-        )
-
-    def _aug_embeddings(spark, sf):
-        """Corpus ∪ deterministic perturbed near-copies (id+100000): pure
-        integer-derived deltas so Spark and DuckDB build bit-identical
-        float32 vectors (planted pairs land at cosine ~0.949)."""
-        emb = _embeddings(spark, sf).select("vec_id", "embedding")
-        planted = emb.filter(F.col("vec_id") % 25 == 0).select(
-            (F.col("vec_id") + 100000).alias("vec_id"),
-            F.expr(PLANT_EXPR_SPARK).alias("embedding"),
-        )
-        return emb.unionByName(planted)
-
-    q["ann_cosine_topk"] = lambda spark, sf: annm.cosine_topk(
-        _embeddings(spark, sf), _queries_df(spark, sf), k=10
-    )
-
-    # approximate variants are gated as RECALL AUDITS: the Spark side
-    # computes both the approximate and the exact top-k and reports
-    # (query_id, recall_ok = |approx ∩ exact| >= min_hits); the oracle
-    # computes only the exact side and asserts recall_ok = TRUE per query,
-    # so a recall collapse fails the hash check (everything is seeded and
-    # deterministic — the floor only absorbs the designed approximation).
-    def _ann_lsh_audit(spark, sf):
-        emb, qs = _embeddings(spark, sf), _queries_df(spark, sf)
-        exact = annm.cosine_topk(emb, qs, k=10)
-        approx = annm.cosine_topk_lsh(emb, qs, k=10, dim=EMB_DIM)
-        return annm.topk_recall_audit(exact, approx, min_hits=ANN_LSH_MIN_HITS)
-
-    q["ann_cosine_topk_lsh"] = _ann_lsh_audit
-
-    # IVF scale path: seeded k-means coarse quantizer + nprobe list probing
-    # (nprobe/nlist = 1/4 of the lists -> a deliberately partial probe; the
-    # audit floor is what that design deterministically achieves here)
-    def _ann_ivf_audit(spark, sf):
-        emb, qs = _embeddings(spark, sf), _queries_df(spark, sf)
-        exact = annm.cosine_topk(emb, qs, k=10)
-        approx = annm.cosine_topk_ivf(emb, qs, k=10, nlist=16, nprobe=4)
-        return annm.topk_recall_audit(exact, approx, min_hits=ANN_IVF_MIN_HITS)
-
-    q["ann_cosine_topk_ivf"] = _ann_ivf_audit
-
-    # IVF-PQ memory-scale path: product-quantized candidate scan (m bytes +
-    # a norm per corpus row instead of d floats), per-query ADC lookup
-    # table, exact re-rank of a 4k shortlist
-    def _ann_ivfpq_audit(spark, sf):
-        emb, qs = _embeddings(spark, sf), _queries_df(spark, sf)
-        exact = annm.cosine_topk(emb, qs, k=10)
-        approx = annm.cosine_topk_ivfpq(
-            emb, qs, k=10, nlist=16, nprobe=4, m=8, kcode=16
-        )
-        return annm.topk_recall_audit(exact, approx, min_hits=ANN_PQ_MIN_HITS)
-
-    q["ann_cosine_topk_ivfpq"] = _ann_ivfpq_audit
-
-    # contrastive hard negatives: per anchor, top-3 most-similar vectors in
-    # the confusable band [0.2, 0.8) — below-positive, above-random
-    q["ann_hard_negatives"] = lambda spark, sf: annm.hard_negatives(
-        _embeddings(spark, sf), _queries_df(spark, sf), k=3, lo=0.2, hi=0.8
-    )
-
-    q["dedup_embedding"] = lambda spark, sf: annm.embedding_dup_pairs(
-        _embeddings(spark, sf), threshold=0.45
-    )
-
-    # LSH-blocked scale path, gated in its design regime: deterministic
-    # perturbed near-copies are planted at cosine ~0.949 (the corpus's
-    # natural pairs top out at 0.52), threshold 0.9; solver-tuned bands give
-    # per-pair P(miss) ~ 4e-7, so LSH must EQUAL the DuckDB brute-force
-    # oracle over the augmented corpus (precision is 1 by exact verify).
-    q["dedup_embedding_lsh"] = lambda spark, sf: annm.embedding_dup_pairs_lsh(
-        _aug_embeddings(spark, sf), threshold=0.9, dim=EMB_DIM
-    )
-
-    # incremental embedding dedup (shard vs the base's PERSISTED hyperplane
-    # band index): the planted near-copies ARRIVE as the shard; the base is
-    # hashed zero times.  Must equal brute force restricted to
-    # shard-touching pairs (P(miss)~4e-7 at these solver params).
-    def _emb_incremental(spark, sf):
-        base = _embeddings(spark, sf).select("vec_id", "embedding")
-        shard = base.filter(F.col("vec_id") % 25 == 0).select(
-            (F.col("vec_id") + 100000).alias("vec_id"),
-            F.expr(PLANT_EXPR_SPARK).alias("embedding"),
-        )
-        index = annm.embedding_band_keys(base, threshold=0.9, dim=EMB_DIM)
-        return annm.incremental_embedding_dup_pairs(
-            shard, base, threshold=0.9, dim=EMB_DIM, base_index=index
-        )
-
-    q["dedup_embedding_incremental"] = _emb_incremental
-
-    # SemDeDup-shaped semantic curation: LSH pair evidence -> CC clusters
-    # -> keep-min decision per vector, over the same planted-dup corpus
-    # (P(miss)~4e-7, so the decision table must equal the brute-force
-    # closure replay)
-    q["dedup_canonical_vectors"] = lambda spark, sf: annm.canonical_vectors(
-        _aug_embeddings(spark, sf), threshold=0.9, dim=EMB_DIM
-    )
-
     def _text_features(spark, sf):
         d = _documents(spark, sf)
         qf = tf.quality_features(F.col("text"))
@@ -1675,133 +1477,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["pii_redact"] = _pii_redact
 
-    # multimodal plumbing (codec stubbed, deterministic fake kernels
-    # replayed bit-exactly by the DuckDB oracles): build a deterministic
-    # asset table from documents
-    def _assets(spark, sf):
-        return _documents(spark, sf).select(
-            F.concat(F.lit("asset-"), F.col("doc_id")).alias("asset_id"),
-            F.when(F.col("doc_id") % 3 == 0, "image")
-            .when(F.col("doc_id") % 3 == 1, "audio")
-            .otherwise("video")
-            .alias("kind"),
-            F.encode("text", "utf-8").alias("payload"),
-            F.lit("application/octet-stream").alias("mime"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            (F.col("n_chars") * 10).cast("long").alias("duration_ms"),
-        )
-
-    def _multimodal(spark, sf):
-        return mm.extract_features(_assets(spark, sf), decode=mm.fake_decode).select(
-            "asset_id", "kind", "n_bytes", F.element_at("feature", 1).alias("f0")
-        )
-
-    q["multimodal_features"] = _multimodal
-
-    # frame sampling over the video assets (mapInPandas; one row per
-    # sampled timestamp; fake frame kernel = sha256(payload:ts)[:16])
-    def _frames(spark, sf):
-        frames = mm.sample_frames(_assets(spark, sf), every_ms=1000)
-        return frames.select(
-            "asset_id", "ts_ms", F.lower(F.hex("frame")).alias("frame_hex")
-        )
-
-    q["multimodal_frames"] = _frames
-
-    # REAL image metadata (no codecs needed): plant structurally-valid
-    # PNG/JPEG/GIF payloads (dims derived from doc_id, document text as
-    # filler), round-trip the bytes through Arrow, and parse the headers
-    # back with operators/multimodal.parse_image_header.  The oracle
-    # replays format/dims/length by formula — the engine must actually
-    # parse the binary structure to match it.
-    def _image_assets(spark, sf):
-        import pandas as pd
-
-        d = _documents(spark, sf).select("doc_id", "text")
-
-        def build(batches):
-            for pdf in batches:
-                payloads = []
-                for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                    w, h = int(did % 640) + 1, int(did % 480) + 1
-                    filler = txt.encode("utf-8")
-                    if did % 3 == 0:
-                        p = mm.make_png(w, h, filler)
-                    elif did % 3 == 1:
-                        p = mm.make_jpeg(w, h, filler)
-                    else:
-                        p = mm.make_gif(w, h, filler)
-                    payloads.append(p)
-                yield pd.DataFrame({
-                    "asset_id": "asset-" + pdf["doc_id"].astype(str),
-                    "kind": "image",
-                    "payload": payloads,
-                })
-
-        return d.mapInPandas(
-            build, "asset_id string, kind string, payload binary"
-        )
-
-    def _image_meta(spark, sf):
-        return mm.image_metadata(_image_assets(spark, sf)).select(
-            "asset_id", "fmt", "width", "height", "n_bytes"
-        )
-
-    q["multimodal_image_meta"] = _image_meta
-
-    # REAL pixel decode (round 5): plant real zlib-compressed, filtered
-    # PNGs whose pixel bytes follow a formula — byte i = (seed + 7i) % 256,
-    # per-row filter type r % 5, so every scanline filter (None/Sub/Up/
-    # Average/Paeth) is exercised — then fully DECODE them (multimodal.
-    # decode_png: chunk walk + CRC verify + inflate + filter
-    # reconstruction) and emit shape + positionally-weighted pixel
-    # checksums.  The oracle replays the FORMULA, so matching requires the
-    # engine to reconstruct every byte of every scanline exactly.
-    def _pixel_assets(spark, sf):
-        import numpy as np
-        import pandas as pd
-
-        d = _documents(spark, sf).select("doc_id")
-
-        def build(batches):
-            for pdf in batches:
-                payloads = []
-                for did in pdf["doc_id"]:
-                    did = int(did)
-                    w, h = 4 + did % 13, 3 + did % 7
-                    c = (1, 3, 2, 4)[did % 4]
-                    seed = did % 251
-                    n = w * h * c
-                    px = ((seed + 7 * np.arange(n, dtype=np.int64)) % 256)
-                    payloads.append(
-                        mm.encode_png(px.astype(np.uint8).reshape(h, w, c))
-                    )
-                yield pd.DataFrame({
-                    "asset_id": "asset-" + pdf["doc_id"].astype(str),
-                    "payload": payloads,
-                })
-
-        return d.mapInPandas(build, "asset_id string, payload binary")
-
-    def _pixels_real(spark, sf):
-        return mm.image_pixel_stats(_pixel_assets(spark, sf))
-
-    q["multimodal_pixels_real"] = _pixels_real
-
-    # REAL decode -> nearest-neighbor RESIZE (integer-exact index mapping
-    # src_i = floor(i*h/out_h)) -> checksums over the RESIZED bytes: the
-    # thumbnail-normalization stage of a multimodal pipeline.  The oracle
-    # replays the index mapping + pixel formula, so a single wrong
-    # selected pixel breaks the hash.
-    def _resize_real(spark, sf):
-        return mm.image_resize_stats(_pixel_assets(spark, sf), out_h=4, out_w=5)
-
-    q["multimodal_resize_real"] = _resize_real
-
     # --- bounded-state sketches (operators/sketches.py) ---------------------
-    # audit-gated like the ANN recall queries: Spark computes approx + exact
-    # and the designed error-bound flag; the oracle replays the exact side
+    # audit-gated: Spark computes approx + exact and the designed
+    # error-bound flag; the oracle replays the exact side
     # + TRUE, so a broken sketch fails the value hash.
 
     # HLL++ distinct subjects per predicate over the merged graph (ONE agg
@@ -2167,21 +1845,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact",             # de-vacuated r4 (planted duplicates)
         "dedup_minhash_lsh",
         "dedup_incremental",
-        "dedup_embedding_lsh",
-        "ann_cosine_topk_ivfpq",
         "pack_sequences",
         "sample_stratified",
-        "curate_corpus",
-        "decontaminate",
         "lm_quality",
         "sketch_bloom_semi_join",
         "rel_events_asof",
         "rel_events_sessions",
         "conv_sft_pairs",
-        # real PNG pixel decode (round 5) — the strongest multimodal
-        # signal; the fake-kernel plumbing twins (multimodal_features /
-        # _frames / _image_meta) stay green in the full gate
-        "multimodal_pixels_real",
     ]
     ordered = {k: q[k] for k in window if k in q}
     for k, v in q.items():
@@ -3626,18 +3296,14 @@ SELECT fp, CAST(count(*) AS BIGINT) AS n_convs,
 FROM fps GROUP BY fp HAVING count(*) > 1
 """
 
-    # sliding-window chunking replayed via list_slice over the whitespace
-    # token array (stride 48 = 64 - 16)
-    from breg_dcat_harvester_spark.operators.textsearch import oracle_bm25_sql
-
-    sql["doc_search_bm25"] = oracle_bm25_sql("documents", BM25_QUERIES, k=10)
-
     from breg_dcat_harvester_spark.operators.bpe import oracle_bpe_sql
 
     sql["bpe_merges"] = oracle_bpe_sql("documents", num_merges=8)
     # same oracle: local trainer must be bit-identical to the distributed one
     sql["bpe_merges_local"] = sql["bpe_merges"]
 
+    # sliding-window chunking replayed via list_slice over the whitespace
+    # token array (stride 48 = 64 - 16)
     sql["doc_chunks"] = """
 WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
 w AS (
@@ -3855,29 +3521,6 @@ FROM f
 """
     )
 
-    sql["domain_quality"] = """
-WITH f AS (
-    SELECT source AS domain,
-           CAST(len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                                t -> t <> '')) AS BIGINT) AS nt,
-           CAST(length(text) AS BIGINT) AS nc,
-           CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS BIGINT) AS na
-    FROM documents
-),
-a AS (
-    SELECT domain, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(nt) AS BIGINT) AS n_tokens_total,
-           CAST(sum(CASE WHEN nt >= 20 AND nt <= 5000 AND na * 1000 >= nc * 820
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_quality
-    FROM f GROUP BY 1
-)
-SELECT domain, n_docs, n_tokens_total, n_quality,
-       (n_quality * 1000) // n_docs AS quality_per_mille,
-       (n_docs >= 20 AND n_quality * 1000 >= n_docs * 500
-        AND domain NOT IN ('src0', 'src7')) AS keep
-FROM a
-"""
-
     # clusters over the SAME pair set (LSH == brute force w.h.p.), closed
     # transitively with a recursive CTE, min-id canonical, joined back to
     # every document
@@ -4085,101 +3728,6 @@ SELECT doc_id, lang, bucket,
 FROM b QUALIFY sample_rank <= 70
 """
 
-    # mixture report: whitespace-token replay + integer per-mille shares
-    sql["corpus_mixture"] = """
-WITH base AS (
-    SELECT lang, source,
-           CAST(len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                                t -> t <> '')) AS BIGINT) AS n_toks,
-           CAST(length(text) AS BIGINT) AS nc
-    FROM documents
-),
-agg AS (
-    SELECT lang, source,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_toks) AS BIGINT) AS n_tokens,
-           CAST(sum(nc) AS BIGINT) AS n_chars
-    FROM base GROUP BY 1, 2
-)
-SELECT lang, source, n_docs, n_tokens, n_chars,
-       CAST((n_docs * 1000) // sum(n_docs) OVER () AS BIGINT) AS doc_share_pm,
-       CAST((n_tokens * 1000) // sum(n_tokens) OVER () AS BIGINT) AS token_share_pm
-FROM agg
-"""
-
-    # benchmark decontamination: replay the n=8 shingles and the sha256
-    # "bench" bucket split, then the same collide -> per-doc distinct counts
-    bench_bucket_sql = (
-        "(('0x' || substr(sha256('bench:' || CAST(doc_id AS VARCHAR)), 1, 8))"
-        "::BIGINT % 1000)"
-    )
-    sql["decontaminate"] = f"""
-WITH toks8 AS (
-    SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS t FROM documents
-),
-shl8 AS (
-    SELECT doc_id,
-           CASE WHEN len(t) >= 8
-                THEN list_transform(generate_series(1, len(t) - 7),
-                     i -> array_to_string(t[CAST(i AS INTEGER):CAST(i AS INTEGER)+7], ' '))
-                ELSE [array_to_string(t, ' ')] END AS sl
-    FROM toks8
-),
-grams8 AS (SELECT DISTINCT doc_id, unnest(sl) AS shingle FROM shl8),
-bench AS (
-    SELECT DISTINCT shingle, doc_id AS bench_id FROM grams8
-    WHERE {bench_bucket_sql} < 30
-)
-SELECT g.doc_id,
-       CAST(count(DISTINCT g.shingle) AS BIGINT) AS n_hit_ngrams,
-       CAST(count(DISTINCT b.bench_id) AS BIGINT) AS n_bench_docs
-FROM grams8 g JOIN bench b ON b.shingle = g.shingle
-GROUP BY g.doc_id
-HAVING count(DISTINCT g.shingle) >= 1
-"""
-
-    # curation composition: canonical dedup (recursive CTE over the exact
-    # pair set) + integer-exact quality gate + sha256-bucket sampling —
-    # every decision replayed bit-exactly
-    sql["curate_corpus"] = (
-        "WITH RECURSIVE "
-        + ngram_ctes
-        + f""",
-pairs AS (
-    SELECT pi.a, pi.b FROM pi
-    JOIN sizes sa ON sa.doc_id = pi.a JOIN sizes sb ON sb.doc_id = pi.b
-    WHERE gi * 1000 >= (sa.n + sb.n - gi) * 800
-),
-sym AS (SELECT a AS x, b AS y FROM pairs UNION SELECT b AS x, a AS y FROM pairs),
-walk(x, c) AS (
-    SELECT x, x FROM (SELECT DISTINCT x FROM sym) AS n
-    UNION
-    SELECT s.y, w.c FROM walk w JOIN sym s ON s.x = w.x
-),
-comp AS (SELECT x AS cdoc, min(c) AS canon FROM walk GROUP BY x),
-flagged AS (
-    SELECT d.doc_id, d.lang,
-           CAST(len(list_filter(regexp_split_to_array(lower(d.text), '\\s+'),
-                                t -> t <> '')) AS BIGINT) AS n_tokens,
-           CAST(length(d.text) AS BIGINT) AS n_chars,
-           CAST(length(regexp_replace(lower(d.text), '[^a-z]', '', 'g')) AS BIGINT)
-               AS n_alpha,
-           d.doc_id = coalesce(comp.canon, d.doc_id) AS is_canonical,
-           {bucket_sql} AS bucket,
-           {rate_sql} AS _rate
-    FROM documents d LEFT JOIN comp ON comp.cdoc = d.doc_id
-)
-SELECT doc_id, lang, n_tokens, n_chars, n_alpha, is_canonical,
-       (n_tokens >= 20 AND n_tokens <= 5000 AND n_alpha * 1000 >= n_chars * 820)
-           AS quality_ok,
-       bucket,
-       (is_canonical
-        AND (n_tokens >= 20 AND n_tokens <= 5000 AND n_alpha * 1000 >= n_chars * 820)
-        AND bucket < _rate) AS selected
-FROM flagged
-"""
-    )
-
     # pure-Python xxHash64+SimHash brute-force replay (fixtures.py
     # ensure_simhash_oracle; the engine's pigeonhole blocking must lose
     # nothing)
@@ -4187,120 +3735,6 @@ FROM flagged
         "SELECT a, b, hamming FROM read_parquet("
         f"'{fx.ensure_simhash_oracle('sf0.01')}')"
     )
-
-    # recall audits: the oracle computes the EXACT side only — every query
-    # id with recall_ok TRUE; the Spark side reports FALSE for any query
-    # whose approximate top-k covers fewer than the floor, failing the hash
-    aud = """
-SELECT DISTINCT vec_id AS query_id, TRUE AS recall_ok
-FROM embeddings WHERE vec_id % 50 = 0
-"""
-    sql["ann_cosine_topk_lsh"] = aud
-    sql["ann_cosine_topk_ivf"] = aud
-    sql["ann_cosine_topk_ivfpq"] = aud
-
-    # exact hard-negative miner: brute-force band + deterministic top-3
-    sql["ann_hard_negatives"] = """
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 50 = 0),
-scored AS (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-           round(list_cosine_similarity(q.qv, e.v), 4) AS sim
-    FROM q JOIN e ON e.vec_id <> q.query_id
-),
-band AS (SELECT * FROM scored WHERE sim >= 0.2 AND sim < 0.8),
-ranked AS (
-    SELECT query_id, neighbor_id, sim,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY sim DESC, neighbor_id) AS rank
-    FROM band
-)
-SELECT query_id, neighbor_id, sim, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= 3
-"""
-
-    sql["dedup_embedding_lsh"] = f"""
-WITH base AS (SELECT vec_id, embedding FROM embeddings),
-planted AS (
-    SELECT vec_id + 100000 AS vec_id, {PLANT_EXPR_DUCK} AS embedding
-    FROM base WHERE vec_id % 25 = 0
-),
-aug AS (SELECT * FROM base UNION ALL SELECT * FROM planted),
-e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM aug)
-SELECT a.vec_id AS a, b.vec_id AS b,
-       round(list_cosine_similarity(a.v, b.v), 4) AS sim
-FROM e a JOIN e b ON a.vec_id < b.vec_id
-WHERE round(list_cosine_similarity(a.v, b.v), 4) >= 0.9
-"""
-
-    # incremental embedding dedup: brute force over base ∪ shard restricted
-    # to pairs with at least one shard-side vector
-    sql["dedup_embedding_incremental"] = f"""
-WITH base AS (SELECT vec_id, embedding FROM embeddings),
-planted AS (
-    SELECT vec_id + 100000 AS vec_id, {PLANT_EXPR_DUCK} AS embedding
-    FROM base WHERE vec_id % 25 = 0
-),
-aug AS (SELECT * FROM base UNION ALL SELECT * FROM planted),
-e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM aug)
-SELECT a.vec_id AS a, b.vec_id AS b,
-       round(list_cosine_similarity(a.v, b.v), 4) AS sim
-FROM e a JOIN e b ON a.vec_id < b.vec_id
-WHERE (a.vec_id >= 100000 OR b.vec_id >= 100000)
-  AND round(list_cosine_similarity(a.v, b.v), 4) >= 0.9
-"""
-
-    # SemDeDup decision table: brute-force threshold pairs -> recursive-CTE
-    # transitive closure -> min per component, every vector decided
-    sql["dedup_canonical_vectors"] = f"""
-WITH RECURSIVE base AS (SELECT vec_id, embedding FROM embeddings),
-planted AS (
-    SELECT vec_id + 100000 AS vec_id, {PLANT_EXPR_DUCK} AS embedding
-    FROM base WHERE vec_id % 25 = 0
-),
-aug AS (SELECT * FROM base UNION ALL SELECT * FROM planted),
-e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM aug),
-pairs AS (
-    SELECT a.vec_id AS a, b.vec_id AS b
-    FROM e a JOIN e b ON a.vec_id < b.vec_id
-    WHERE round(list_cosine_similarity(a.v, b.v), 4) >= 0.9
-),
-sym AS (SELECT a AS x, b AS y FROM pairs UNION SELECT b AS x, a AS y FROM pairs),
-walk(x, c) AS (
-    SELECT x, x FROM (SELECT DISTINCT x FROM sym) AS n
-    UNION
-    SELECT s.y, w.c FROM walk w JOIN sym s ON s.x = w.x
-),
-comp AS (SELECT x AS vec_id, min(c) AS canon FROM walk GROUP BY x)
-SELECT aug.vec_id,
-       coalesce(comp.canon, aug.vec_id) AS canonical_id,
-       aug.vec_id = coalesce(comp.canon, aug.vec_id) AS is_canonical
-FROM aug LEFT JOIN comp ON comp.vec_id = aug.vec_id
-"""
-
-    sql["ann_cosine_topk"] = """
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 50 = 0),
-scored AS (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-           round(list_cosine_similarity(q.qv, e.v), 4) AS sim
-    FROM q JOIN e ON e.vec_id <> q.query_id
-),
-ranked AS (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-    FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank FROM ranked WHERE rank <= 10
-"""
-
-    sql["dedup_embedding"] = """
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
-SELECT a.vec_id AS a, b.vec_id AS b,
-       round(list_cosine_similarity(a.v, b.v), 4) AS sim
-FROM e a JOIN e b ON a.vec_id < b.vec_id
-WHERE round(list_cosine_similarity(a.v, b.v), 4) >= 0.45
-"""
 
     stop_en = "['the','a','of','and','to','in','is','that','for','it']"
     stop_es = "['el','la','de','y','que','en','un','es','por','los']"
@@ -4381,112 +3815,6 @@ SELECT doc_id,
        {piim.oracle_count_sql('text_pii', 'phone')} AS n_phone,
        {piim.oracle_count_sql('text_pii', 'ipv4')} AS n_ipv4
 FROM aug
-"""
-
-    # multimodal: the deterministic fake decoder is sha256-derived, so DuckDB
-    # can replay it exactly — f0 is bytes 0-3 of sha256(payload) as a
-    # little-endian u32 scaled to [0,1) and cast to float32 (multimodal.py::
-    # fake_decode); n_bytes is the utf-8 payload length.
-    sql["multimodal_features"] = """
-WITH x AS (SELECT doc_id, text, sha256(text) AS h FROM documents)
-SELECT 'asset-' || CAST(doc_id AS VARCHAR) AS asset_id,
-       CASE WHEN doc_id % 3 = 0 THEN 'image'
-            WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS kind,
-       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-       CAST((
-           ('0x'||substr(h,1,2))::BIGINT
-         + ('0x'||substr(h,3,2))::BIGINT * 256
-         + ('0x'||substr(h,5,2))::BIGINT * 65536
-         + ('0x'||substr(h,7,2))::BIGINT * 16777216
-       )::DOUBLE / 4294967296 AS REAL) AS f0
-FROM x
-"""
-
-    # planted real-format payloads: fmt/dims by the planting formula,
-    # n_bytes = filler + fixed container overhead (png 33 / jpeg 23 =
-    # SOI+SOF0 marker+len+15-byte frame header+EOI / gif 10) — matching
-    # requires the engine to parse the actual binary headers
-    sql["multimodal_image_meta"] = """
-SELECT 'asset-' || CAST(doc_id AS VARCHAR) AS asset_id,
-       CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
-            ELSE 'gif' END AS fmt,
-       CAST(doc_id % 640 + 1 AS INTEGER) AS width,
-       CAST(doc_id % 480 + 1 AS INTEGER) AS height,
-       CAST(octet_length(encode(text))
-            + CASE doc_id % 3 WHEN 0 THEN 33 WHEN 1 THEN 23 ELSE 10 END
-            AS BIGINT) AS n_bytes
-FROM documents
-"""
-
-    # REAL pixel decode: the oracle replays the planted pixel FORMULA
-    # (byte i = (seed + 7i) % 256 over w*h*c bytes); the engine must
-    # inflate + unfilter the actual PNG scanlines to reproduce px_sum and
-    # the positionally-weighted px_wsum byte-for-byte
-    sql["multimodal_pixels_real"] = """
-WITH d AS (
-    SELECT doc_id,
-           4 + doc_id % 13 AS w,
-           3 + doc_id % 7 AS h,
-           CASE doc_id % 4 WHEN 0 THEN 1 WHEN 1 THEN 3 WHEN 2 THEN 2
-                ELSE 4 END AS c,
-           doc_id % 251 AS seed
-    FROM documents
-)
-SELECT 'asset-' || CAST(doc_id AS VARCHAR) AS asset_id,
-       CAST(w AS INTEGER) AS width,
-       CAST(h AS INTEGER) AS height,
-       CAST(c AS INTEGER) AS channels,
-       CAST(sum((seed + 7 * g.i) % 256) AS BIGINT) AS px_sum,
-       CAST(sum((g.i + 1) * ((seed + 7 * g.i) % 256)) AS BIGINT) AS px_wsum
-FROM d, LATERAL (
-    SELECT unnest(generate_series(0, CAST(w * h * c - 1 AS BIGINT))) AS i
-) g
-GROUP BY doc_id, w, h, c
-"""
-
-    # decode -> nearest-neighbor resize: the oracle replays the integer
-    # index mapping (src_i = (i*h)//4, src_j = (j*w)//5) over the planted
-    # pixel formula — resized checksums must match byte-for-byte
-    sql["multimodal_resize_real"] = """
-WITH d AS (
-    SELECT doc_id,
-           4 + doc_id % 13 AS w,
-           3 + doc_id % 7 AS h,
-           CASE doc_id % 4 WHEN 0 THEN 1 WHEN 1 THEN 3 WHEN 2 THEN 2
-                ELSE 4 END AS c,
-           doc_id % 251 AS seed
-    FROM documents
-)
-SELECT 'asset-' || CAST(doc_id AS VARCHAR) AS asset_id,
-       CAST(5 AS INTEGER) AS width,
-       CAST(4 AS INTEGER) AS height,
-       CAST(c AS INTEGER) AS channels,
-       CAST(sum(v.val) AS BIGINT) AS px_sum,
-       CAST(sum((v.k + 1) * v.val) AS BIGINT) AS px_wsum
-FROM d, LATERAL (
-    SELECT g.k,
-           (seed + 7 * (
-               ((((g.k // (5 * c)) * h) // 4) * w
-                + (((g.k % (5 * c)) // c) * w) // 5) * c
-               + g.k % c
-           )) % 256 AS val
-    FROM (SELECT unnest(generate_series(0, CAST(4 * 5 * c - 1 AS BIGINT))) AS k) g
-) v
-GROUP BY doc_id, c
-"""
-
-    # frame sampling: bit-exact replay of the fake frame kernel
-    # sha256(payload || ':' || ts)[:16] over the video assets
-    sql["multimodal_frames"] = """
-WITH x AS (SELECT doc_id, text, n_chars FROM documents WHERE doc_id % 3 = 2),
-s AS (
-    SELECT 'asset-' || CAST(doc_id AS VARCHAR) AS asset_id, text,
-           unnest(generate_series(0, CAST(n_chars AS BIGINT) * 10 - 1, 1000)) AS g
-    FROM x
-)
-SELECT asset_id, CAST(g AS BIGINT) AS ts_ms,
-       lower(substr(sha256(text || ':' || CAST(g AS VARCHAR)), 1, 32)) AS frame_hex
-FROM s
 """
 
     # --- generic relational ops ---------------------------------------------

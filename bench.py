@@ -1059,9 +1059,6 @@ HEADLINE = [
     "kg_connected_components",
     "dedup_minhash_lsh",
     "dedup_simhash",
-    "ann_cosine_topk",
-    "ann_cosine_topk_lsh",
-    "ann_cosine_topk_ivf",
     "text_features",
     "kg_export_ntriples",
     "kg_pagerank",
@@ -1082,11 +1079,9 @@ HEADLINE = [
     "sketch_cms_heavy_hitters",
     "lm_quality",
     "kg_kcore",
-    "ann_cosine_topk_ivfpq",
     "rel_events_sessions",
     "conv_sft_pack_masks",
     "doc_chunks",
-    "doc_search_bm25",
     "dedup_span_scrub",
     "kg_rdfs_closure",
     "kg_communities",
@@ -1096,16 +1091,12 @@ HEADLINE = [
     # round-4 additions
     "kg_validation_full_shapes",
     "kg_neighborhood",
-    "multimodal_image_meta",
     # round-5 additions
     "kg_validation_full_shapes_incremental",
-    "multimodal_pixels_real",
 ]
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
     import __spark_entry__ as entry
     from breg_dcat_harvester_spark.datagen import ensure_transcripts
     from breg_dcat_harvester_spark.session import get_spark
@@ -1143,38 +1134,16 @@ def main() -> None:
 
     queries = entry.queries()
 
-    # Overrides where the contract query is the wrong thing to TIME:
-    # - kg_link_candidates caches its result for CC reuse; min-of-2 would
-    #   time a cache scan, so time the raw operator COLD instead (CC's
-    #   cached read stays the documented production cost model).
-    # - the ANN approximate contract queries are recall AUDITS (they also
-    #   compute exact brute force); time the raw approximate operators.
-    from breg_dcat_harvester_spark.operators import ann as annm
+    # Override where the contract query is the wrong thing to TIME:
+    # kg_link_candidates caches its result for CC reuse; min-of-2 would
+    # time a cache scan, so time the raw operator COLD instead (CC's cached
+    # read stays the documented production cost model).
     from breg_dcat_harvester_spark.operators import link as lnk
-
-    def _emb_q(spark, sf):
-        emb = spark.read.parquet(os.path.join(sf, "embeddings.parquet"))
-        qs = emb.filter(F.col("vec_id") % 50 == 0).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-        )
-        return emb, qs
 
     def _link_cold(spark, sf):
         return lnk.link_pairs(entry._merged(spark, sf), threshold=0.8, scorer="sql")
 
-    def _ivf_raw(spark, sf):
-        emb, qs = _emb_q(spark, sf)
-        return annm.cosine_topk_ivf(emb, qs, k=10, nlist=16, nprobe=4)
-
-    def _lsh_raw(spark, sf):
-        emb, qs = _emb_q(spark, sf)
-        return annm.cosine_topk_lsh(emb, qs, k=10, dim=entry.EMB_DIM)
-
-    overrides = {
-        "kg_link_candidates": _link_cold,
-        "ann_cosine_topk_ivf": _ivf_raw,
-        "ann_cosine_topk_lsh": _lsh_raw,
-    }
+    overrides = {"kg_link_candidates": _link_cold}
 
     prev_bench = read_prev_bench()  # BEFORE the first emit overwrites it
 

@@ -42,33 +42,6 @@ def _cmd_harvest(args: argparse.Namespace) -> int:
     return 0
 
 
-def _cmd_curate(args: argparse.Namespace) -> int:
-    from .plans.corpus import CurationConfig, run_curation
-
-    spark = get_spark(app_name="curate")
-    rates = {}
-    for kv in args.rate or []:
-        lang, sep, val = kv.partition("=")
-        if not sep or not lang or not val.isdigit():
-            print(
-                f"curate: --rate expects LANG=PERMILLE, got {kv!r}",
-                file=sys.stderr,
-            )
-            return 2
-        rates[lang] = int(val)
-    cfg = CurationConfig(
-        out_dir=args.out,
-        rates=rates or {"en": 1000},
-        default_rate=args.default_rate,
-        dedup_threshold=args.threshold,
-        seq_len=args.seq_len,
-        n_shards=args.shards,
-    )
-    res = run_curation(spark, args.docs, cfg, run_id=args.resume)
-    print(json.dumps(res))
-    return 0
-
-
 def _cmd_harvest_increment(args: argparse.Namespace) -> int:
     from .plans.harvest import harvest_increment
 
@@ -259,23 +232,6 @@ def main(argv: list[str] | None = None) -> int:
     hi.add_argument("--buckets", type=int, default=32)
     hi.add_argument("--resume", default=None, help="run_id to resume")
     hi.set_defaults(fn=_cmd_harvest_increment)
-
-    cu = sub.add_parser(
-        "curate",
-        help="run (or resume) the staged training-corpus curation pipeline",
-    )
-    cu.add_argument("--docs", required=True, help="documents parquet dir")
-    cu.add_argument("--out", required=True)
-    cu.add_argument(
-        "--rate", action="append", metavar="LANG=PERMILLE",
-        help="per-language sampling rate (repeatable), e.g. en=1000",
-    )
-    cu.add_argument("--default-rate", type=int, default=0)
-    cu.add_argument("--threshold", type=float, default=0.8)
-    cu.add_argument("--seq-len", type=int, default=512)
-    cu.add_argument("--shards", type=int, default=32)
-    cu.add_argument("--resume", default=None, metavar="RUN_ID")
-    cu.set_defaults(fn=_cmd_curate)
 
     f = sub.add_parser("facets", help="compute the five facet lists")
     f.add_argument("--out", required=True)

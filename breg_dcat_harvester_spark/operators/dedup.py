@@ -15,8 +15,6 @@ pipeline needs textual near-dup detection.  All operators run on a generic
 * ``simhash64``/``simhash_pairs`` — 64-bit SimHash with banded hamming
   blocking (bit_count(xor) <= d verify).  Complementary to MinHash: better
   for near-identical docs with small edits.
-* ``embedding_dup_pairs``  — cosine near-dup over an embedding column (see
-  ann.py for the shared kernel).
 
 Scale notes: every operator is shuffle-bounded by its blocking key (hash,
 band bucket); nothing is quadratic except the explicitly-named brute-force
@@ -500,8 +498,7 @@ def incremental_minhash_pairs(
 # round-trip); the only full-data shuffle is the chunk-frequency aggregate.
 # Chunks shared by >= min_docs documents are "boilerplate"; the hot set is
 # tiny by construction (it's the output of a HAVING >= min_docs filter), so
-# it broadcasts and removal is a map-side anti-join — the same
-# sliver-broadcast shape as decontam.decontaminate.
+# it broadcasts and removal is a map-side anti-join.
 # ---------------------------------------------------------------------------
 
 

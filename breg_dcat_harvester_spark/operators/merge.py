@@ -104,11 +104,6 @@ def node_degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def anti_join_failed(df: DataFrame, failed: DataFrame, key: str) -> DataFrame:
-    """Negative-cache semantics (browser.py:81-91): skip known-failed terms."""
-    return df.join(failed.select(key).distinct(), on=key, how="left_anti")
-
-
 def graph_stats(edges: DataFrame) -> DataFrame:
     """Per-predicate graph profile: (pred, n_triples, n_subjects, n_objects).
 

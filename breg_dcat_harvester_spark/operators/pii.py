@@ -2,10 +2,9 @@
 
 A 100 TB-scale corpus pipeline redacts personally identifiable spans before
 packing (The Pile / RefinedWeb / FineWeb all ship a regex-redaction stage).
-This is the curation-family sibling of `curation.curate_corpus`: pure
-`regexp_replace`/`regexp_count` Column expressions — whole-stage codegen,
-zero shuffle, zero Python — so it fuses into the same scan as the quality
-flags.
+Pure `regexp_replace`/`regexp_count` Column expressions — whole-stage
+codegen, zero shuffle, zero Python — so it fuses into the same scan as the
+quality flags (``plans/ingest.py`` runs both in one pass).
 
 Pattern dialect is the intersection of Java regex (Spark) and RE2 (DuckDB
 oracle): no backreferences, no lookaround — the patterns below compile and

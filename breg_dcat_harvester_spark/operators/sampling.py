@@ -35,7 +35,7 @@ BUCKETS = 1000
 
 def bucket_hash(key, salt: str = "smpl"):
     """sha256("<salt>:<key>") hex — the engine-replayable decision hash
-    shared by sampling, decontam splits, and shuffle-sharding (DuckDB:
+    shared by sampling, shuffle-sharding and lineage buckets (DuckDB:
     sha256('<salt>:'||key))."""
     return F.sha2(F.concat_ws(":", F.lit(salt), key.cast("string")), 256)
 

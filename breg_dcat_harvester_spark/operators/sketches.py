@@ -7,7 +7,7 @@ reference set shuffles the full fact side.  Each operator here replaces the
 unbounded structure with a **mergeable, bounded-size sketch** whose error is
 a design parameter — and each ships with an AUDIT twin that gates the
 designed error bound against the exact answer through the driver's DuckDB
-oracle (the same audit pattern as the ANN recall gates in operators/ann.py).
+oracle.
 
 * ``hll_distinct`` — Spark's built-in HyperLogLog++ (``approx_count_
   distinct``): ONE aggregation pass with map-side partial HLL registers

@@ -443,24 +443,24 @@ def load_shacl_shapes(ttl_text: str, doc_id: str = "shacl-shapes") -> CompiledSh
                              f"unsupported constraint {ppred[len(_SH):]}")
                         )
             for target in targets:
-                mn = pp.get(_SH + "minCount")
-                mx = pp.get(_SH + "maxCount")
-                if mn or mx:
+                # each bound parses on its own: a non-integer literal is
+                # refused loudly in `skipped` (never a crash) and the
+                # other, valid bound still compiles
+                bounds = {}
+                for field, pred in (
+                    ("min_count", "minCount"), ("max_count", "maxCount"),
+                ):
+                    lits = pp.get(_SH + pred)
+                    if not lits:
+                        continue
                     try:
-                        card.append(Shape(
-                            target, path,
-                            min_count=int(mn[0]) if mn else 0,
-                            max_count=int(mx[0]) if mx else None,
-                            severity=sev,
-                        ))
+                        bounds[field] = int(lits[0])
                     except ValueError:
-                        # non-integer cardinality literal: refuse the row
-                        # loudly in `skipped`, never crash the compile
-                        skipped.append((
-                            target, path,
-                            f"malformed cardinality "
-                            f"{(mn or mx)[0]!r}",
-                        ))
+                        skipped.append(
+                            (target, path, f"malformed cardinality {lits[0]!r}")
+                        )
+                if bounds:
+                    card.append(Shape(target, path, severity=sev, **bounds))
                 nk = pp.get(_SH + "nodeKind")
                 dt = pp.get(_SH + "datatype")
                 pat = pp.get(_SH + "pattern")

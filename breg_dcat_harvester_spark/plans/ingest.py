@@ -4,8 +4,7 @@ The operational shape of a 100 TB training corpus is not "curate once": new
 shards arrive continuously and each must be admitted against everything
 already ingested without reprocessing the base.  ``ingest_increment``
 composes the already-tested incremental pieces into ONE plan that emits an
-auditable per-document decision row (the same "why was doc X kept/dropped?"
-contract as curation.curate_corpus):
+auditable per-document decision row ("why was doc X kept/dropped?"):
 
 1. **exact duplicate of the base** — sha256(text) semi-join against the
    base's hash set (at scale: a persisted hash index; map-side partial
@@ -16,11 +15,11 @@ contract as curation.curate_corpus):
    it near-dups ANY base doc, or a smaller-id doc within the increment.
    Greedy differs from the batch operator's transitive-closure clustering
    (canonical_docs) deliberately — an increment must not re-cluster the
-   base.  Consistent with curate_corpus, dedup decisions are computed over
-   ALL arriving docs before quality gating, so a quality-dropped doc still
-   dooms its within-shard near-dups (conservative: the duplicate content
-   exists in the stream even if its first copy was rejected);
-4. **quality gate** — the same integer-exact thresholds as curate_corpus;
+   base.  Dedup decisions are computed over ALL arriving docs before
+   quality gating, so a quality-dropped doc still dooms its within-shard
+   near-dups (conservative: the duplicate content exists in the stream even
+   if its first copy was rejected);
+4. **quality gate** — integer-exact token-count and alpha-ratio thresholds;
 5. **PII counts** — `pii.redact_pii` span counts ride the same scan.
 
 ``selected`` = not exact-dup AND not near-dup AND quality_ok.  Everything

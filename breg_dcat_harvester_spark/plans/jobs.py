@@ -17,8 +17,8 @@ too.  Spark reads the same table for the
 registry views: listing = groupBy(status) + row_number window (W2); job
 JSON = the latest row per (run_id, stage).
 
-``StageRunner`` runs the checkpointed stages of one pipeline run (harvest,
-increment, curation).  A stage's row count is a ``pyspark.sql.Observation``
+``StageRunner`` runs the checkpointed stages of one pipeline run (harvest
+or increment).  A stage's row count is a ``pyspark.sql.Observation``
 on the DataFrame being written, so it rides the stage's write job instead
 of a re-read and ``count()``.
 """

@@ -29,7 +29,7 @@ from breg_dcat_harvester_spark.session import get_spark  # noqa: E402
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
+    "lineitem", "events", "documents",
 ]
 
 

@@ -43,10 +43,6 @@ def _ops(df) -> list[str]:
 EXCHANGE_BUDGET = {
     "kg_harvest_triples": 1,  # the set-union dedup groupBy; extract is map-only
     "kg_harvest_triples_coded": 1,  # same dedup shuffle, coded boundary
-    "multimodal_frames": 0,  # frame sampling must never shuffle
-    "multimodal_features": 1,
-    "multimodal_pixels_real": 0,  # plant + decode: two Arrow stages, no shuffle
-    "multimodal_resize_real": 0,  # plant + decode + resize: map-only
     "text_features": 0,  # pure Column exprs over the documents scan
     "text_repetition": 0,
     "sample_stratified": 0,  # Bernoulli sha-bucket filter: map-side only
@@ -67,9 +63,7 @@ EXCHANGE_BUDGET = {
     "sketch_quantile_doclen": 1,  # approx+exact percentiles in ONE groupBy
     "lm_quality": 0,  # persist-then-score: ONE map-only Arrow scan, no shuffle
     "lm_quality_audit": 4,  # single-plan twin: model agg + score agg + empties anti-join + union
-    "ann_hard_negatives": 1,  # score cross-join map-side + one rank window
     "conv_sft_pack_masks": 9,  # pairs window + packing prefix sum + join
-    "doc_search_bm25": 6,  # ONE cached corpus scan; totals + tf_doc + dfreq aggs + score agg + rank window, all sliver-sized; query terms are literal structures (no joins before tf)
     "dedup_span_scrub": 3,  # hot-window countDistinct expand + per-doc starts agg; windows hashed in-array map-side
 }
 

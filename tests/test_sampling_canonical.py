@@ -135,42 +135,6 @@ def test_stratified_fixed_k_fanout_invariant(spark, docs):
         assert got == want, f"fanout={fanout}"
 
 
-def test_curate_corpus_composition(spark, docs):
-    """selected == is_canonical AND quality_ok AND sampled; every doc
-    appears exactly once; flags agree with the standalone operators."""
-    from breg_dcat_harvester_spark.operators import curation as cur
-    from breg_dcat_harvester_spark.operators import sampling as smp
-
-    rates = {"en": 500, "de": 500, "fr": 500, "es": 500, "zh": 500}
-    out = cur.curate_corpus(
-        docs, rates, threshold=0.8, min_tokens=20, min_alpha_per_mille=820
-    ).collect()
-    assert len(out) == docs.count()
-    for r in out:
-        assert r.selected == (
-            r.is_canonical and r.quality_ok and r.bucket < rates[r.lang]
-        )
-        assert r.quality_ok == (
-            20 <= r.n_tokens <= 5000 and r.n_alpha * 1000 >= r.n_chars * 820
-        )
-    # canonical flag matches the standalone operator
-    canon = {
-        r.doc_id: r.is_canonical
-        for r in ddp.canonical_docs(docs, threshold=0.8).collect()
-    }
-    for r in out:
-        assert r.is_canonical == canon[r.doc_id]
-    # bucket matches the standalone sampler hash
-    buckets = {
-        r.doc_id: r.bucket
-        for r in docs.select(
-            "doc_id", smp.sample_bucket(F.col("doc_id"))
-        ).collect()
-    }
-    for r in out:
-        assert r.bucket == buckets[r.doc_id]
-
-
 def test_canonical_docs_covers_corpus_and_matches_pairs(spark, docs):
     decisions = ddp.canonical_docs(docs, threshold=0.8).collect()
     assert len(decisions) == docs.count()  # one decision per document

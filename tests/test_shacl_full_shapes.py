@@ -261,6 +261,20 @@ ex:S a sh:NodeShape ; sh:targetClass ex:T ;
     assert not c.cardinality
     assert any("malformed cardinality" in s[2] for s in c.skipped)
 
+    # one valid bound beside a malformed one: the valid half compiles and
+    # the refusal names the malformed literal, not the valid one
+    half = """
+@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix ex: <http://ex/> .
+ex:S a sh:NodeShape ; sh:targetClass ex:T ;
+  sh:property [ sh:path ex:p ; sh:minCount 1 ; sh:maxCount "two" ;
+                sh:severity sh:Violation ] .
+"""
+    c = load_shacl_shapes(half)
+    assert [(s.target_class, s.path, s.min_count, s.max_count)
+            for s in c.cardinality] == [("http://ex/T", "http://ex/p", 1, None)]
+    assert [s[2] for s in c.skipped] == ["malformed cardinality 'two'"]
+
 
 def test_shacl_compile_fuzz_never_crashes():
     """Random small shapes documents either compile or raise ParseRdfError

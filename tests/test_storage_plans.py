@@ -525,45 +525,6 @@ def test_compact_merges_small_files(spark, tmp_path):
     assert len(remaining) == 1
 
 
-@pytest.mark.slow
-def test_run_curation_and_resume(spark, tmp_path):
-    from breg_dcat_harvester_spark.plans.corpus import CurationConfig, run_curation
-
-    src = str(tmp_path / "docs")
-    spark.read.parquet("/root/testdata/sf0.01/documents.parquet").write.parquet(src)
-
-    cfg = CurationConfig(
-        out_dir=str(tmp_path / "out"),
-        rates={lang: 1000 for lang in ("en", "es", "de", "fr", "zh")},
-    )
-    res1 = run_curation(spark, src, cfg, run_id="cur-a")
-    assert res1["num_input_docs"] == 500
-    assert 0 < res1["num_selected"] <= 500
-    assert res1["num_shards"] > 0 and res1["num_packs"] > 0
-    assert [s["stage"] for s in res1["stages"]] == [
-        "decisions", "selected", "packing", "pack_segments", "shards",
-        "shard_stats",
-    ]
-
-    # resume: same run_id -> every stage read back, nothing recomputed
-    res2 = run_curation(spark, src, cfg, run_id="cur-a")
-    assert res2["stages"] == []
-    assert res2["num_selected"] == res1["num_selected"]
-    assert res2["num_packs"] == res1["num_packs"]
-
-    # a fresh run_id writes NEW snapshots and reproduces the same content
-    res3 = run_curation(spark, src, cfg, run_id="cur-b")
-    assert res3["num_selected"] == res1["num_selected"]
-    from breg_dcat_harvester_spark.storage import LocalSnapshotTable
-
-    shards = LocalSnapshotTable(os.path.join(cfg.out_dir, "shards"))
-    snaps = shards.snapshots()
-    assert len(snaps) == 2  # one per run
-    a = sorted(map(tuple, shards.read(spark, snaps[0]["id"]).collect()))
-    b = sorted(map(tuple, shards.read(spark, snaps[1]["id"]).collect()))
-    assert a == b  # deterministic re-execution, bit-for-bit
-
-
 def test_snapshot_schema_evolution_merge(spark, tmp_path):
     # Iceberg add-column semantics: an append may carry a new column; the
     # merged read surfaces it with NULLs for pre-evolution rows

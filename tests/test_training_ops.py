@@ -1,13 +1,11 @@
-"""Training-data pipeline operators: dedup family, ANN, text functions,
-multimodal plumbing — on the driver-provided sf0.001 tables."""
+"""Training-data pipeline operators: dedup family and text functions — on
+the sf0.001 test tables."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from breg_dcat_harvester_spark.functions import textfns as tf
-from breg_dcat_harvester_spark.operators import ann as annm
 from breg_dcat_harvester_spark.operators import dedup as ddp
-from breg_dcat_harvester_spark.operators import multimodal as mm
 
 SF = "/root/testdata/sf0.001"
 
@@ -15,11 +13,6 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet").cache()
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
 
 
 def test_exact_dup_of_duplicated_docs(spark, docs):
@@ -96,128 +89,6 @@ def test_simhash_finds_planted_near_dups(spark, docs):
     assert {(r.a, r.b) for r in pairs} == {(0, 100000), (1, 100001), (2, 100002)}
 
 
-def _queries(emb):
-    return emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-
-
-def test_ann_exact_self_similarity(spark, emb):
-    """A vector's nearest neighbor among (itself + corpus) is itself."""
-    q = emb.limit(1).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    # inject an exact copy under a new id: must rank 1
-    copy = q.select(
-        (F.col("query_id") + 100000).alias("vec_id"), F.col("query_vec").alias("embedding")
-    )
-    corpus = emb.select("vec_id", "embedding").unionByName(copy)
-    top = annm.cosine_topk(corpus, q, k=1).head()
-    assert top.neighbor_id == top.query_id + 100000 and top.rank == 1
-
-
-def test_ann_lsh_recall_floor(spark, emb):
-    exact = annm.cosine_topk(emb, _queries(emb), k=10)
-    approx = annm.cosine_topk_lsh(emb, _queries(emb), k=10, dim=64)
-    e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
-    a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
-    recall = len(e & a) / len(e)
-    # solver-tuned defaults (target_sim 0.35 @ recall .999) must recover
-    # nearly all true neighbors even on this near-uniform worst case
-    assert recall >= 0.8, f"LSH recall collapsed: {recall}"
-    # the audit shape used by the correctness harness: every query covered
-    audit = annm.topk_recall_audit(exact, approx, min_hits=7).collect()
-    assert audit and all(r.recall_ok for r in audit)
-
-
-def test_lsh_param_solver_math(spark):
-    """(bands, bits) solve the documented formulas and budget constraint."""
-    import math
-
-    for t, rec in ((0.95, 0.999), (0.9, 0.9999), (0.45, 0.999)):
-        p = annm.hyperplane_lsh_params(t, rec)
-        p_bit = 1 - math.acos(t) / math.pi
-        assert abs(p.p_band - p_bit**p.bits_per_band) < 1e-12
-        assert p.recall >= rec
-        assert p.bands * p.bits_per_band <= 256
-    # higher threshold -> tighter blocking (lower unrelated-pair rate)
-    assert (
-        annm.hyperplane_lsh_params(0.95).fp_rate
-        < annm.hyperplane_lsh_params(0.7).fp_rate
-        < annm.hyperplane_lsh_params(0.45).fp_rate
-    )
-
-
-def test_lsh_empty_corpus(spark):
-    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    q = spark.createDataFrame([], "query_id long, query_vec array<float>")
-    assert annm.embedding_dup_pairs_lsh(empty, threshold=0.9).count() == 0
-    assert annm.cosine_topk_lsh(empty, q, k=5).count() == 0
-
-
-def test_ann_ivf_recall_and_determinism(spark, emb):
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in annm.cosine_topk(emb, _queries(emb), k=10).collect()
-    }
-    run1 = annm.cosine_topk_ivf(emb, _queries(emb), k=10, nlist=8, nprobe=4).collect()
-    approx = {(r.query_id, r.neighbor_id) for r in run1}
-    recall = len(exact & approx) / len(exact)
-    # probing half the lists of a near-uniform corpus must catch a solid
-    # share of true neighbors (worst-case corpus for any space partitioner)
-    assert recall >= 0.3, f"IVF recall collapsed: {recall}"
-    # seeded centroids + deterministic assignment => identical re-run
-    run2 = annm.cosine_topk_ivf(emb, _queries(emb), k=10, nlist=8, nprobe=4).collect()
-    assert sorted(map(tuple, run1)) == sorted(map(tuple, run2))
-
-
-def test_ann_ivf_full_probe_equals_exact(spark, emb):
-    """nprobe == nlist degenerates IVF to exact brute force."""
-    small = emb.filter(F.col("vec_id") < 200)
-    exact = annm.cosine_topk(small, _queries(small), k=5).collect()
-    full = annm.cosine_topk_ivf(
-        small, _queries(small), k=5, nlist=4, nprobe=4
-    ).collect()
-    assert sorted(map(tuple, exact)) == sorted(map(tuple, full))
-
-
-def test_embedding_dup_lsh_recall(spark, emb):
-    """LSH-blocked near-dup must recover the brute-force pairs at the
-    operating threshold (solver-tuned bands give per-pair recall ~0.999
-    even at this low-threshold worst case)."""
-    bf = {(r.a, r.b) for r in annm.embedding_dup_pairs(emb, threshold=0.45).collect()}
-    lsh = {
-        (r.a, r.b)
-        for r in annm.embedding_dup_pairs_lsh(emb, threshold=0.45, dim=64).collect()
-    }
-    assert lsh <= bf, "LSH must never invent pairs (exact verify)"
-    assert len(bf) > 0
-    recall = len(bf & lsh) / len(bf)
-    assert recall >= 0.9, f"embedding LSH recall collapsed: {recall}"
-
-
-def test_embedding_dup_lsh_planted_high_threshold(spark, emb):
-    """The scale regime LSH is FOR: high threshold, planted near-dups.
-    Deterministic perturbed copies (the contract-query construction) must be
-    found exactly, and blocking must be non-vacuous there (fp_rate < 15%)."""
-    planted = emb.filter(F.col("vec_id") % 25 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.expr(
-            "transform(embedding, (x, i) ->"
-            " cast(x + 0.02 * (pmod(vec_id + i, 7) - 3) as float))"
-        ).alias("embedding"),
-    )
-    aug = emb.select("vec_id", "embedding").unionByName(planted)
-    bf = {(r.a, r.b) for r in annm.embedding_dup_pairs(aug, threshold=0.9).collect()}
-    lsh = {
-        (r.a, r.b)
-        for r in annm.embedding_dup_pairs_lsh(aug, threshold=0.9, dim=64).collect()
-    }
-    assert len(bf) == planted.count(), "each planted copy pairs with its source"
-    assert lsh == bf
-    assert annm.hyperplane_lsh_params(0.9, 0.9999).fp_rate < 0.15
-
-
 def test_text_functions(spark):
     df = spark.createDataFrame(
         [(1, "the cat is in the hat"), (2, "el gato es en la casa"), (3, "xyzzy 123!?")],
@@ -271,184 +142,6 @@ def test_repetition_features(spark):
     assert (rows[4].n_lines, rows[4].n_bigrams, rows[4].max_bigram_count) == (0, 0, 0)
 
 
-def test_multimodal_plumbing(spark, docs):
-    assets = docs.limit(20).select(
-        F.concat(F.lit("a-"), F.col("doc_id")).alias("asset_id"),
-        F.lit("video").alias("kind"),
-        F.encode("text", "utf-8").alias("payload"),
-        F.lit("application/octet-stream").alias("mime"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.lit(3500).cast("long").alias("duration_ms"),
-    )
-    feats = mm.extract_features(assets, decode=mm.fake_decode)
-    rows = feats.collect()
-    assert len(rows) == 20 and all(len(r.feature) == 16 for r in rows)
-    # deterministic: same payload -> same features
-    again = {r.asset_id: r.feature for r in mm.extract_features(assets, decode=mm.fake_decode).collect()}
-    assert all(again[r.asset_id] == r.feature for r in rows)
-    # real decoder is gated, not silently fake
-    with pytest.raises(Exception, match="NotImplementedError|codec"):
-        mm.extract_features(assets).collect()
-    frames = mm.sample_frames(assets, every_ms=1000)
-    assert frames.count() == 20 * 4  # 0,1000,2000,3000
-
-
-def test_decontamination_planted(spark):
-    from breg_dcat_harvester_spark.operators import decontam as dctm
-
-    bench_text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    docs = spark.createDataFrame(
-        [
-            # shares the full benchmark 8-gram window -> contaminated
-            (1, "intro words " + bench_text + " trailing words"),
-            # shares only 5 consecutive benchmark words -> clean at n=8
-            (2, "alpha beta gamma delta epsilon nope x y z w q r s t"),
-            # unrelated -> clean
-            (3, "completely different content with no overlap at all here ok"),
-            # verbatim copy -> contaminated
-            (4, bench_text),
-        ],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame([(100, bench_text)], "doc_id long, text string")
-
-    report = {r.doc_id: r for r in dctm.contamination_report(docs, bench, n=8).collect()}
-    assert set(report) == {1, 4}
-    # doc 1 contains words 1-8 and 2-9 and 3-10 of the 10-word benchmark
-    assert report[1].n_hit_ngrams == 3 and report[1].n_bench_docs == 1
-    assert report[4].n_hit_ngrams == 3
-
-    clean = dctm.decontaminate(docs, bench, n=8)
-    assert {r.doc_id for r in clean.select("doc_id").collect()} == {2, 3}
-
-    # empty benchmark -> nothing flagged, corpus passes through
-    empty_bench = bench.filter(F.lit(False))
-    assert dctm.contamination_report(docs, empty_bench, n=8).count() == 0
-    assert dctm.decontaminate(docs, empty_bench, n=8).count() == 4
-
-
-def test_corpus_mixture_shares(spark, docs):
-    from breg_dcat_harvester_spark.operators import curation as cur
-
-    rows = cur.corpus_mixture(docs).collect()
-    assert len(rows) > 1
-    total_docs = sum(r.n_docs for r in rows)
-    assert total_docs == docs.count()
-    # integer floor shares: sum in (1000 - n_strata, 1000]
-    ds = sum(r.doc_share_pm for r in rows)
-    ts = sum(r.token_share_pm for r in rows)
-    assert 1000 - len(rows) < ds <= 1000
-    assert 1000 - len(rows) < ts <= 1000
-    # deterministic across runs
-    again = {tuple(r[:2]): (r.n_tokens, r.token_share_pm)
-             for r in cur.corpus_mixture(docs).collect()}
-    assert all(again[(r.lang, r.source)] == (r.n_tokens, r.token_share_pm) for r in rows)
-
-
-def test_curate_corpus_with_decontamination(spark, docs):
-    from breg_dcat_harvester_spark.operators import curation as cur
-    from breg_dcat_harvester_spark.operators.sampling import sample_bucket
-
-    rates = {"en": 1000, "de": 1000, "fr": 1000, "es": 1000, "zh": 1000}
-    bench = docs.withColumn(
-        "bucket", sample_bucket(F.col("doc_id"), salt="bench")
-    ).filter(F.col("bucket") < 50).drop("bucket")
-
-    base = {r.doc_id: r for r in cur.curate_corpus(docs, rates).collect()}
-    with_dc = {r.doc_id: r for r in
-               cur.curate_corpus(docs, rates, benchmark=bench).collect()}
-    assert set(base) == set(with_dc)
-    flagged = {i for i, r in with_dc.items() if r.contaminated}
-    # the bench slice contaminates at least itself
-    assert flagged >= {r.doc_id for r in bench.select("doc_id").collect()}
-    for i, r in with_dc.items():
-        assert r.selected == (base[i].selected and not r.contaminated)
-
-
-def test_ann_ivfpq_recall_determinism_and_full_probe(spark, emb):
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in annm.cosine_topk(emb, _queries(emb), k=10).collect()
-    }
-    run1 = annm.cosine_topk_ivfpq(
-        emb, _queries(emb), k=10, nlist=8, nprobe=4, m=8, kcode=16
-    ).collect()
-    approx = {(r.query_id, r.neighbor_id) for r in run1}
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.3, f"IVF-PQ recall collapsed: {recall}"
-    # seeded centroids + codebooks => identical re-run
-    run2 = annm.cosine_topk_ivfpq(
-        emb, _queries(emb), k=10, nlist=8, nprobe=4, m=8, kcode=16
-    ).collect()
-    assert sorted(map(tuple, run1)) == sorted(map(tuple, run2))
-    # full probe + all-candidate shortlist degenerates to exact brute force
-    # (the exact refinement makes PQ's ranking loss recoverable)
-    small = emb.filter(F.col("vec_id") < 200)
-    full = annm.cosine_topk_ivfpq(
-        small, _queries(small), k=5, nlist=4, nprobe=4, m=8, kcode=16,
-        shortlist=1000,
-    ).collect()
-    want = annm.cosine_topk(small, _queries(small), k=5).collect()
-    assert sorted(map(tuple, full)) == sorted(map(tuple, want))
-
-
-def test_pq_encode_codes_bounded_and_deterministic(spark, emb):
-    books = annm.train_pq_codebooks(emb, m=8, kcode=16)
-    assert len(books) == 8 and all(len(b) <= 16 for b in books)
-    enc = annm.pq_encode(
-        emb.select(F.col("vec_id"), F.col("embedding").alias("vec")), "vec", books
-    )
-    rows = enc.select("codes", "vnorm").limit(50).collect()
-    for r in rows:
-        assert len(r.codes) == 8
-        assert all(0 <= c < 16 for c in r.codes)
-        assert r.vnorm > 0
-
-
-def test_hard_negatives_band_and_rank(spark, emb):
-    got = annm.hard_negatives(emb, _queries(emb), k=3, lo=0.2, hi=0.8).collect()
-    assert len(got) > 0
-    for r in got:
-        assert 0.2 <= r.sim < 0.8
-        assert r.neighbor_id != r.query_id
-        assert 1 <= r.rank <= 3
-    # per query: ranks are dense from 1 and sims non-increasing
-    from collections import defaultdict
-    per = defaultdict(list)
-    for r in got:
-        per[r.query_id].append((r.rank, r.sim))
-    for q, rows in per.items():
-        rows.sort()
-        assert [x[0] for x in rows] == list(range(1, len(rows) + 1))
-        sims = [x[1] for x in rows]
-        assert sims == sorted(sims, reverse=True)
-
-
-def test_canonical_vectors_planted_clusters(spark):
-    import numpy as np
-    from breg_dcat_harvester_spark.operators.ann import canonical_vectors
-
-    rng = np.random.default_rng(7)
-    base = rng.standard_normal((30, 16))
-    rows = []
-    for i, v in enumerate(base):
-        rows.append((i, [float(x) for x in v]))
-    # two planted twins of vector 3 (tiny perturbations), one of vector 10
-    for nid, src, eps in ((100, 3, 1e-3), (101, 3, 2e-3), (102, 10, 1e-3)):
-        rows.append((nid, [float(x + eps) for x in base[src]]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = {r.vec_id: (r.canonical_id, r.is_canonical)
-           for r in canonical_vectors(emb, threshold=0.99, dim=16).collect()}
-    assert len(out) == 33
-    # twins collapse to the smallest id in their cluster
-    assert out[100] == (3, False) and out[101] == (3, False)
-    assert out[3] == (3, True)
-    assert out[102] == (10, False) and out[10] == (10, True)
-    # everything else is its own canonical
-    assert out[5] == (5, True)
-
-
 def test_duplicated_span_scrub_semantics(spark):
     from breg_dcat_harvester_spark.operators.dedup import duplicated_span_scrub
 
@@ -486,274 +179,3 @@ def test_duplicated_span_scrub_three_way(spark):
     for i in range(3):
         assert out[i].n_dup_windows == 1
         assert out[i].clean_text == f"pre{i} post{i}"
-
-
-def test_incremental_embedding_equals_batch_restricted(spark):
-    """incremental(shard, base, persisted index) == batch LSH over
-    base ∪ shard restricted to shard-touching pairs."""
-    import numpy as np
-    from breg_dcat_harvester_spark.operators.ann import (
-        embedding_band_keys,
-        embedding_dup_pairs_lsh,
-        incremental_embedding_dup_pairs,
-    )
-
-    rng = np.random.default_rng(11)
-    vecs = rng.standard_normal((40, 16))
-    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
-    # shard: perturbed copies of vectors 2, 7, 30 + one unrelated vector
-    shard_rows = [
-        (200 + j, [float(x + 1e-3) for x in vecs[s]])
-        for j, s in enumerate((2, 7, 30))
-    ] + [(299, [float(x) for x in rng.standard_normal(16)])]
-    base = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    shard = spark.createDataFrame(
-        shard_rows, "vec_id long, embedding array<double>"
-    )
-    idx = embedding_band_keys(base, threshold=0.99, dim=16)
-    inc = {
-        (r.a, r.b, r.sim)
-        for r in incremental_embedding_dup_pairs(
-            shard, base, threshold=0.99, dim=16, base_index=idx
-        ).collect()
-    }
-    batch = {
-        (r.a, r.b, r.sim)
-        for r in embedding_dup_pairs_lsh(
-            base.unionByName(shard), threshold=0.99, dim=16
-        ).collect()
-        if r.a >= 200 or r.b >= 200
-    }
-    assert inc == batch
-    assert {(a, b) for a, b, _ in inc} == {(2, 200), (7, 201), (30, 202)}
-
-
-def test_incremental_embedding_new_x_new_pairs(spark):
-    """Two near-identical vectors arriving in the SAME shard pair with
-    each other, not only with the base."""
-    import numpy as np
-    from breg_dcat_harvester_spark.operators.ann import (
-        incremental_embedding_dup_pairs,
-    )
-
-    rng = np.random.default_rng(5)
-    base = spark.createDataFrame(
-        [(i, [float(x) for x in rng.standard_normal(16)]) for i in range(10)],
-        "vec_id long, embedding array<double>",
-    )
-    twin = [float(x) for x in rng.standard_normal(16)]
-    shard = spark.createDataFrame(
-        [(100, twin), (101, [x + 1e-3 for x in twin])],
-        "vec_id long, embedding array<double>",
-    )
-    got = {
-        (r.a, r.b)
-        for r in incremental_embedding_dup_pairs(
-            shard, base, threshold=0.99, dim=16
-        ).collect()
-    }
-    assert got == {(100, 101)}
-
-
-def test_image_header_parsing_roundtrip():
-    assert mm.parse_image_header(mm.make_png(640, 480)) == ("png", 640, 480)
-    assert mm.parse_image_header(mm.make_jpeg(123, 77, b"x" * 50)) == (
-        "jpeg", 123, 77)
-    assert mm.parse_image_header(mm.make_gif(31, 15)) == ("gif", 31, 15)
-    # APP0 (JFIF) segment before SOF is skipped, not mistaken for a frame
-    j = mm.make_jpeg(99, 44)
-    j2 = (b"\xff\xd8"
-          + b"\xff\xe0\x00\x10JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-          + j[2:])
-    assert mm.parse_image_header(j2) == ("jpeg", 99, 44)
-    # honest refusals: unknown/truncated payloads are (None, None, None)
-    assert mm.parse_image_header(b"not an image") == (None, None, None)
-    assert mm.parse_image_header(b"") == (None, None, None)
-    assert mm.parse_image_header(mm.make_png(1, 1)[:20]) == (None, None, None)
-    # JPEG signature with no parseable SOF: format known, dims unknown
-    assert mm.parse_image_header(b"\xff\xd8\xff\xd9") == ("jpeg", None, None)
-
-
-def test_png_pixel_codec_roundtrip():
-    """encode_png -> decode_png is identity for every supported colour
-    type and every scanline filter, including mixed per-row filters."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    for (h, w, c) in [(1, 1, 1), (3, 4, 1), (5, 7, 3), (4, 4, 2), (6, 3, 4)]:
-        px = rng.integers(0, 256, size=(h, w, c), dtype=np.uint8)
-        for filters in (None, [0] * h, [1] * h, [2] * h, [3] * h, [4] * h):
-            b = mm.encode_png(px, filters)
-            back = mm.decode_png(b)
-            assert back.shape == (h, w, c)
-            assert (back == px).all(), (h, w, c, filters)
-        # header parser agrees with the decoder's shape
-        assert mm.parse_image_header(mm.encode_png(px)) == ("png", w, h)
-
-
-def test_png_decode_refusals():
-    """Malformed structure raises ValueError; out-of-subset profiles and
-    entropy-coded formats raise NotImplementedError — never a guessed
-    pixel."""
-    import re
-    import struct
-    import zlib
-
-    import numpy as np
-    import pytest as pt
-
-    px = np.arange(48, dtype=np.uint8).reshape(4, 4, 3)
-    good = mm.encode_png(px)
-    bad_crc = bytearray(good)
-    bad_crc[20] ^= 0xFF
-    with pt.raises(ValueError, match="CRC"):
-        mm.decode_png(bytes(bad_crc))
-    with pt.raises(ValueError, match="signature"):
-        mm.decode_png(b"not a png")
-    with pt.raises(ValueError, match="truncated"):
-        mm.decode_png(good[:-20])  # cuts into the IDAT chunk itself
-    # a header-only PNG (no IDAT) and a corrupt deflate stream both raise
-    # ValueError, never a raw zlib.error escaping the contract
-    with pt.raises(ValueError, match="missing IDAT"):
-        mm.decode_png(mm.make_png(4, 3))
-    idat_off = good.index(b"IDAT")
-    corrupt = good[:idat_off + 8] + b"\x00" * 8 + good[idat_off + 16:]
-    with pt.raises(ValueError, match="CRC|corrupt"):
-        mm.decode_png(corrupt)
-    # palette PNG (colour type 3) is outside the codec-free subset
-    ihdr = struct.pack(">II5B", 2, 2, 8, 3, 0, 0, 0)
-    chunk = b"IHDR" + ihdr
-    pal = (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", len(ihdr)) + chunk
-           + struct.pack(">I", zlib.crc32(chunk) & 0xFFFFFFFF))
-    with pt.raises(NotImplementedError, match="colour=3"):
-        mm.decode_png(pal)
-    # real_decode: PNG works, JPEG refuses with the codec reason
-    f = mm.real_decode(good, "image")
-    assert (f.reshape(4, 4, 3) == px).all()
-    with pt.raises(NotImplementedError, match=re.escape("entropy-coded")):
-        mm.real_decode(mm.make_jpeg(3, 3), "image")
-
-
-def test_png_codec_property_fuzz():
-    """Property-based: encode->decode is identity for arbitrary shapes,
-    pixels, and per-row filter choices; arbitrary byte soup and bit-flips
-    of valid PNGs either decode or refuse with the documented exception
-    types — nothing else ever escapes."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    @settings(max_examples=40, deadline=None)
-    @given(
-        h=st.integers(1, 12),
-        w=st.integers(1, 12),
-        c=st.sampled_from([1, 2, 3, 4]),
-        seed=st.integers(0, 2**31 - 1),
-        data=st.data(),
-    )
-    def roundtrip(h, w, c, seed, data):
-        rng = np.random.default_rng(seed)
-        px = rng.integers(0, 256, size=(h, w, c), dtype=np.uint8)
-        filters = data.draw(
-            st.lists(st.integers(0, 4), min_size=h, max_size=h)
-        )
-        assert (mm.decode_png(mm.encode_png(px, filters)) == px).all()
-
-    roundtrip()
-
-    @settings(max_examples=60, deadline=None)
-    @given(blob=st.binary(min_size=0, max_size=200))
-    def soup(blob):
-        try:
-            mm.decode_png(blob)
-        except (ValueError, NotImplementedError):
-            pass  # the documented refusal contract
-
-    soup()
-
-    @settings(max_examples=60, deadline=None)
-    @given(pos=st.integers(0, 10_000), bit=st.integers(0, 7), seed=st.integers(0, 99))
-    def bitflip(pos, bit, seed):
-        rng = np.random.default_rng(seed)
-        px = rng.integers(0, 256, size=(5, 6, 3), dtype=np.uint8)
-        b = bytearray(mm.encode_png(px))
-        b[pos % len(b)] ^= 1 << bit
-        try:
-            out = mm.decode_png(bytes(b))
-            assert out.dtype == np.uint8 and out.ndim == 3
-        except (ValueError, NotImplementedError):
-            pass
-
-    bitflip()
-
-
-def test_resize_nearest():
-    import numpy as np
-    import pytest as pt
-
-    arr = np.arange(24, dtype=np.uint8).reshape(2, 4, 3)
-    # identity
-    assert (mm.resize_nearest(arr, 2, 4) == arr).all()
-    # downscale picks floor-mapped source pixels
-    down = mm.resize_nearest(arr, 1, 2)
-    assert down.shape == (1, 2, 3)
-    assert (down[0, 0] == arr[0, 0]).all()
-    assert (down[0, 1] == arr[0, 2]).all()
-    # upscale repeats source pixels, channels preserved
-    up = mm.resize_nearest(arr, 4, 8, )
-    assert up.shape == (4, 8, 3)
-    assert (up[0, 0] == arr[0, 0]).all() and (up[3, 7] == arr[1, 3]).all()
-    with pt.raises(ValueError, match="positive"):
-        mm.resize_nearest(arr, 0, 3)
-
-
-def test_image_resize_stats_operator(spark):
-    import numpy as np
-
-    px = np.arange(24, dtype=np.uint8).reshape(2, 4, 3)
-    df = spark.createDataFrame(
-        [("a1", bytearray(mm.encode_png(px)))],
-        "asset_id string, payload binary",
-    )
-    got = mm.image_resize_stats(df, 1, 2).collect()[0]
-    want = mm.resize_nearest(px, 1, 2).reshape(-1).astype(int)
-    assert (got.height, got.width, got.channels) == (1, 2, 3)
-    assert got.px_sum == int(want.sum())
-    assert got.px_wsum == int((want * (np.arange(want.size) + 1)).sum())
-
-
-def test_image_pixel_stats_operator(spark):
-    import numpy as np
-
-    px1 = np.arange(24, dtype=np.uint8).reshape(2, 4, 3)
-    px2 = np.full((3, 2, 1), 7, dtype=np.uint8)
-    df = spark.createDataFrame(
-        [("a1", bytearray(mm.encode_png(px1))),
-         ("a2", bytearray(mm.encode_png(px2)))],
-        "asset_id string, payload binary",
-    )
-    got = {r.asset_id: r for r in mm.image_pixel_stats(df).collect()}
-    assert (got["a1"].height, got["a1"].width, got["a1"].channels) == (2, 4, 3)
-    assert got["a1"].px_sum == sum(range(24))
-    assert got["a1"].px_wsum == sum((i + 1) * i for i in range(24))
-    assert (got["a2"].px_sum, got["a2"].px_wsum) == (6 * 7, 7 * sum(range(1, 7)))
-
-
-def test_image_metadata_operator(spark):
-    rows = [
-        ("a1", "image", bytearray(mm.make_png(10, 20, b"pad"))),
-        ("a2", "image", bytearray(mm.make_jpeg(30, 40))),
-        ("a3", "image", bytearray(mm.make_gif(5, 6))),
-        ("a4", "image", bytearray(b"garbage")),
-        ("a5", "image", None),
-    ]
-    df = spark.createDataFrame(
-        rows, "asset_id string, kind string, payload binary"
-    )
-    got = {r.asset_id: r for r in mm.image_metadata(df).collect()}
-    assert (got["a1"].fmt, got["a1"].width, got["a1"].height) == ("png", 10, 20)
-    assert (got["a2"].fmt, got["a2"].width, got["a2"].height) == ("jpeg", 30, 40)
-    assert (got["a3"].fmt, got["a3"].width, got["a3"].height) == ("gif", 5, 6)
-    assert got["a4"].fmt is None and got["a4"].width is None
-    assert got["a5"].fmt is None and got["a5"].n_bytes == 0
-    assert got["a1"].n_bytes == 33 + 3
