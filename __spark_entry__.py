@@ -31,10 +31,7 @@ from breg_dcat_harvester_spark.operators import packing as pkg
 from breg_dcat_harvester_spark.operators import sampling as smp
 from breg_dcat_harvester_spark.operators import sketches as sk
 from breg_dcat_harvester_spark.operators.extract import extract_edges
-from breg_dcat_harvester_spark.operators.merge import (
-    merge_triples,
-    merge_triples_transcripts,
-)
+from breg_dcat_harvester_spark.operators.merge import merge_triples
 from breg_dcat_harvester_spark.plans import sparql as sprq
 from breg_dcat_harvester_spark.operators.validate import (
     DEFAULT_SHAPES,
@@ -94,7 +91,7 @@ def _merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute extraction from scratch."""
     key = (spark.sparkContext.applicationId, _sf_name(sf_dir))
     if key not in _MERGED_CACHE:
-        df = merge_triples(extract_edges(_transcripts(spark, sf_dir), impl="sql"))
+        df = merge_triples(extract_edges(_transcripts(spark, sf_dir)))
         _MERGED_CACHE[key] = df.cache()
     return _MERGED_CACHE[key]
 
@@ -134,10 +131,11 @@ def _oracle_glob() -> str:
 # --- driver contract ---------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: harvest the sf0.001 transcripts via the pandas/Arrow path
-    (north-star mandated) and return the merged distinct-triple graph."""
+    """Flagship: harvest the sf0.001 transcripts through the one extractor
+    (the coded mapInArrow boundary) and return the merged distinct-triple
+    graph."""
     t = spark.read.parquet(ensure_transcripts("sf0.001"))
-    return merge_triples(extract_edges(t, impl="arrow"))
+    return merge_triples(extract_edges(t))
 
 
 # each entry: name -> callable(spark, sf_dir) -> DataFrame
@@ -148,15 +146,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["kg_harvest_triples"] = lambda spark, sf: _merged(spark, sf).select(
         "subj", "pred", "obj", "obj_kind", "lang", "dtype"
     )
-
-    # The fused coded-boundary harvest (extract.py coded notes /
-    # merge.merge_triples_transcripts): pred crosses the python boundary and
-    # the dedup shuffle as an int32 code; obj_kind/lang/dtype are rebuilt
-    # JVM-side after the agg.  Gated against the SAME oracle as
-    # kg_harvest_triples — the two plans must be value-identical.
-    q["kg_harvest_triples_coded"] = lambda spark, sf: merge_triples_transcripts(
-        _transcripts(spark, sf)
-    ).select("subj", "pred", "obj", "obj_kind", "lang", "dtype")
 
     # A1: the reference's one job metric (harvest.py:58)
     q["kg_num_triples"] = lambda spark, sf: _merged(spark, sf).select(
@@ -1805,7 +1794,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # scripts/check_correctness.py --full -> CORRECTNESS_FULL.json.
     window = [
         "kg_harvest_triples",
-        "kg_harvest_triples_coded",
         "kg_harvest_rdf_docs",
         "kg_harvest_incremental",
         "kg_num_triples",
@@ -2059,9 +2047,6 @@ def oracle_sql() -> dict[str, str]:
     sql["kg_harvest_triples"] = (
         f"SELECT subj, pred, obj, obj_kind, lang, dtype FROM {osql.triples_sql(glob)} AS t"
     )
-    # same oracle as kg_harvest_triples: the coded-boundary plan must be
-    # value-identical to the general one
-    sql["kg_harvest_triples_coded"] = sql["kg_harvest_triples"]
     sql["kg_num_triples"] = (
         f"SELECT count(*) AS num_triples FROM "
         f"(SELECT DISTINCT subj, pred, obj FROM {osql.edges_sql(glob)} AS _e) AS t"

@@ -176,7 +176,8 @@ _WORKER_CODE = """
 import glob, json, os, sys, time
 sys.path.insert(0, {repo!r})
 from breg_dcat_harvester_spark.session import get_spark
-from breg_dcat_harvester_spark.operators.merge import merge_triples_transcripts
+from breg_dcat_harvester_spark.operators.extract import extract_edges
+from breg_dcat_harvester_spark.operators.merge import merge_triples
 
 # Strong-scaling input: the SAME ~{parts}-way partitioning at every
 # parallelism, carved at the SCAN by sizing maxPartitionBytes to
@@ -205,7 +206,7 @@ spark = get_spark(
 )
 t = spark.read.parquet({path!r})
 n_turns = t.cache().count()  # pin the corpus in memory: reps time COMPUTE
-job = lambda: merge_triples_transcripts(t).count()
+job = lambda: merge_triples(extract_edges(t)).count()
 n_triples = job()  # warm-up: spawns every python UDF worker once
 print(json.dumps({{"ready": True, "cores": {cores}, "turns": n_turns,
                    "parts": t.rdd.getNumPartitions(),
@@ -584,24 +585,16 @@ def skew_demo(spark) -> dict:
 # triple P/R vs reference
 
 
-def triple_pr(spark, transcripts) -> dict:
+def triple_pr(spark) -> dict:
     """BASELINE.md headline metric: triple precision/recall vs the reference
-    harvester's mappings (target >= 0.95).  Two anchors:
-
-    * ``rdf_docs``: the reference's OWN sample documents
-      (ontology/sample-01.xml, sample-02.ttl) parsed through the full Spark
-      ingest path vs the hand-transcribed golden of the reference's
-      RDFLib-validated mapping (README ``num_triples: 33`` corpus);
-    * ``transcript_extract``: the production pandas/Arrow extractor vs the
-      independently-written Catalyst-SQL twin over the bench corpus — the
-      dual-implementation cross-check that plays the reference-comparison
-      role for the transcript payload (no reference implementation exists
-      for transcripts; the two extractors were written against the same
-      spec and disagreements count against BOTH precision and recall).
+    harvester's mappings (target >= 0.95): the reference's OWN sample
+    documents (ontology/sample-01.xml, sample-02.ttl) parsed through the full
+    Spark ingest path vs the hand-transcribed golden of the reference's
+    RDFLib-validated mapping (README ``num_triples: 33`` corpus), under
+    ``rdf_docs``.  The transcript extractor has no reference implementation;
+    tests/test_extract*.py check it against the row-at-a-time oracle in
+    tests/oracle.py.
     """
-    from breg_dcat_harvester_spark.operators.extract import extract_edges
-    from breg_dcat_harvester_spark.operators.merge import merge_triples
-
     from breg_dcat_harvester_spark import fixtures as fx
 
     ref_docs = [
@@ -643,19 +636,6 @@ def triple_pr(spark, transcripts) -> dict:
             "n_emitted": len(got),
         }
 
-    ident = ["subj", "pred", "obj", "obj_kind", "lang", "dtype"]
-    a = merge_triples(extract_edges(transcripts, impl="arrow")).select(*ident).distinct()
-    b = merge_triples(extract_edges(transcripts, impl="sql")).select(*ident).distinct()
-    n_a, n_b = a.count(), b.count()
-    # NULL-SAFE set intersection: lang/dtype are null for URI objects, and a
-    # join's `=` never matches null to null — exceptAll treats them equal
-    tp = n_a - a.exceptAll(b).count()
-    out["transcript_extract"] = {
-        "precision": round(tp / n_a, 4) if n_a else None,
-        "recall": round(tp / n_b, 4) if n_b else None,
-        "n_pandas": n_a,
-        "n_sql": n_b,
-    }
     return out
 
 
@@ -767,15 +747,12 @@ def write_bench_md(result: dict) -> None:
         fh.write(json.dumps(result, indent=2))
         fh.write("\n```\n")
         if isinstance(pr, dict) and "rdf_docs" in pr:
-            d, x = pr["rdf_docs"], pr.get("transcript_extract", {})
+            d = pr["rdf_docs"]
             fh.write(
                 "\nTriple P/R vs reference mappings (BASELINE metric, target "
                 f">= 0.95): reference sample documents P={d['precision']} "
                 f"R={d['recall']} over the {d['n_reference']}-triple "
-                "RDFLib-validated golden; transcript extraction "
-                f"P={x.get('precision')} R={x.get('recall')} (pandas/Arrow "
-                "production extractor vs the independently written "
-                "Catalyst-SQL twin, null-safe set compare).\n"
+                "RDFLib-validated golden.\n"
             )
         if "error" in skew:
             skew = None
@@ -949,11 +926,6 @@ def _compact(result: dict) -> dict:
     pr = result.get("triple_pr") or {}
     if "rdf_docs" in pr:
         r["pr_rdf_docs"] = [pr["rdf_docs"]["precision"], pr["rdf_docs"]["recall"]]
-    if "transcript_extract" in pr:
-        r["pr_transcript"] = [
-            pr["transcript_extract"]["precision"],
-            pr["transcript_extract"]["recall"],
-        ]
     sc = result.get("scaling") or {}
     for key, short in (
         ("within_host_2_to_8", "eff_2_8"),
@@ -1178,7 +1150,7 @@ def main() -> None:
     n_triples = 0
     for _ in range(2):
         t0 = time.time()
-        n_triples = merge_triples(extract_edges(t, impl="arrow")).count()
+        n_triples = merge_triples(extract_edges(t)).count()
         dt = time.time() - t0
         extract_sec = dt if extract_sec is None or dt < extract_sec else extract_sec
     timings["kg_extract_arrow_full"] = round(extract_sec, 3)
@@ -1217,7 +1189,7 @@ def main() -> None:
     # BASELINE headline metric: triple P/R vs the reference mappings
     if "pr" in sections and remaining() > 90:
         try:
-            result["triple_pr"] = triple_pr(spark, t)
+            result["triple_pr"] = triple_pr(spark)
         except Exception as exc:  # pragma: no cover
             result["triple_pr"] = {"error": str(exc)[:200]}
         emit(result)
@@ -1235,7 +1207,7 @@ def main() -> None:
         try:
             t0 = time.time()
             hres = run_harvest(
-                spark, path, HarvestConfig(out_dir=hdir, extract_impl="arrow"),
+                spark, path, HarvestConfig(out_dir=hdir),
                 run_id="bench-harvest",
             )
             result["harvest_end_to_end"] = {

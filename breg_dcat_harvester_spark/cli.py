@@ -30,12 +30,10 @@ def _cmd_harvest(args: argparse.Namespace) -> int:
     spark = get_spark(app_name="harvest")
     cfg = HarvestConfig(
         out_dir=args.out,
-        extract_impl=args.impl,
         strict_validation=args.strict,
         all_or_nothing=args.all_or_nothing,
         num_buckets=args.buckets,
         source_kind=args.source_kind,
-        fuse_extract_merge=args.fuse,
     )
     res = run_harvest(spark, args.transcripts, cfg, run_id=args.resume)
     print(json.dumps(res))
@@ -48,7 +46,6 @@ def _cmd_harvest_increment(args: argparse.Namespace) -> int:
     spark = get_spark(app_name="harvest-increment")
     cfg = HarvestConfig(
         out_dir=args.out,
-        extract_impl=args.impl,
         strict_validation=args.strict,
         num_buckets=args.buckets,
     )
@@ -198,19 +195,10 @@ def main(argv: list[str] | None = None) -> int:
     h = sub.add_parser("harvest", help="run (or resume) the harvest pipeline")
     h.add_argument("--transcripts", required=True)
     h.add_argument("--out", required=True)
-    h.add_argument(
-        "--impl", default="arrow", choices=["arrow", "pandas", "sql"],
-        help="extract boundary: 'arrow' = the mapInArrow production path",
-    )
     h.add_argument("--strict", action="store_true")
     h.add_argument("--all-or-nothing", action="store_true")
     h.add_argument("--buckets", type=int, default=32)
     h.add_argument("--resume", default=None, help="run_id to resume")
-    h.add_argument(
-        "--fuse", action="store_true",
-        help="fuse extract+merge through the coded int32-pred boundary "
-        "(skips the edges_raw checkpoint; transcripts source only)",
-    )
     h.add_argument(
         "--source-kind", default="transcripts",
         choices=["transcripts", "rdf_docs"],
@@ -227,7 +215,6 @@ def main(argv: list[str] | None = None) -> int:
     hi.add_argument("--base", required=True, help="out dir of the base harvest")
     hi.add_argument("--transcripts", required=True, help="the NEW shard")
     hi.add_argument("--out", required=True, help="out dir for the updated graph")
-    hi.add_argument("--impl", default="arrow", choices=["arrow", "pandas", "sql"])
     hi.add_argument("--strict", action="store_true")
     hi.add_argument("--buckets", type=int, default=32)
     hi.add_argument("--resume", default=None, help="run_id to resume")

@@ -1,17 +1,11 @@
-"""RDF term column functions — n3 forms, skolemization, lang-string parsing.
+"""RDF term column functions — n3 forms and N-Triples literal escaping.
 
-Parity-critical (SURVEY.md §2.7 F1/F2/F10):
+Parity-critical (SURVEY.md §2.7 F1):
 
 * ``to_n3``     — the reference surfaces every term as its N3 lexical form
   (``term.n3()``, browser.py:127-130): ``<uri>`` for URIs, ``"lex"@lang`` /
   ``"lex"^^<dtype>`` for literals.  One canonical SQL expression here so every
   operator formats terms identically.
-* ``skolem_uri`` — blank nodes are skolemized to URIs before persistence
-  (store.py:19-25 ``"<{}>".format(node.skolemize())``).  Ours is
-  *content-deterministic*: ``urn:skolem:sha2(conv_id|turn_idx|local)`` so
-  re-runs and the DuckDB oracle mint byte-identical URIs.
-* ``parse_lang_string`` — inverse of the SPA's ``REGEX_LANG_STR``
-  (app/src/BrowserSection.js:42) for ``"text"@en`` literals.
 
 All are pure Column expressions (whole-stage codegen; no Python).
 """
@@ -20,8 +14,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from ..schema import SKOLEM_NS
 
 
 # RDF 1.1 N-Triples STRING_LITERAL_QUOTE: ECHAR-escape exactly the code
@@ -72,21 +64,3 @@ def to_n3(value: Column, obj_kind: Column, lang: Column, dtype: Column) -> Colum
 def subj_n3(subj: Column) -> Column:
     """Subjects are always URIs post-skolemization (store.py:19-25)."""
     return F.concat(F.lit("<"), subj, F.lit(">"))
-
-
-def skolem_uri(conv_id: Column, turn_idx: Column, local_id: Column) -> Column:
-    """Deterministic skolem URI for a blank-node local id (S8/F2).
-
-    ``sha2`` over ``conv_id|turn_idx|local`` — identical lexical recipe in the
-    DuckDB oracle (``sha256(conv_id || '|' || turn_idx || '|' || local)``).
-    """
-    payload = F.concat_ws("|", conv_id, turn_idx.cast("string"), local_id)
-    return F.concat(F.lit(SKOLEM_NS), F.sha2(payload, 256))
-
-
-def parse_lang_string(n3_literal: Column) -> Column:
-    """Extract (text, lang) from a '"text"@lang' N3 literal (F10)."""
-    return F.struct(
-        F.regexp_extract(n3_literal, r'^"(.*)"@\w+$', 1).alias("text"),
-        F.regexp_extract(n3_literal, r'^".*"@(\w+)$', 1).alias("lang"),
-    )

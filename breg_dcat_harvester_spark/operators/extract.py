@@ -9,18 +9,20 @@ provenance predicates (``prov:wasAttributedTo`` / ``prov:wasGeneratedBy``)
 and ``(conv_id, turn_idx)`` kept as per-triple lineage columns (replacing the
 reference's per-source provenance dicts, harvest.py:59 / models.py:73-79).
 
-Three interchangeable implementations, equality-tested in tests/test_extract.py
-and hypothesis-fuzzed in tests/test_extract_fuzz.py:
+One implementation, ``extract_edges``, on every path (harvest, increment,
+streaming, contract queries):
 
-* ``impl='sql'``    — pure Catalyst expressions (regexp_extract_all + explode
-  + map lookups).  100% JVM-side / whole-stage codegen.
-* ``impl='arrow'``  — ``mapInArrow`` over the pyarrow-compute kernel: raw
-  ``pa.RecordBatch`` in/out, zero pandas, zero PyObjects.  The PRODUCTION
-  python-boundary path (the north-star-mandated place a real NLP mention
-  detector would plug in; no per-row Python anywhere), with a JVM-side
-  ``contains('[[')`` prefilter so non-block turns never cross the boundary.
-* ``impl='pandas'`` — ``mapInPandas`` twin of the same kernel (pandas frames
-  at the boundary); kept as the equality-tested second surface.
+1. ``_python_boundary_input`` projects the five columns the kernel reads and
+   drops turns without a ``[[`` opener JVM-side;
+2. ``mapInArrow`` runs ``_extract_arrow_core`` — pyarrow-compute kernels
+   over raw ``pa.RecordBatch``es, no pandas — which returns *coded* rows
+   ``(subj, pred_code, obj, conv_id, turn_idx)``;
+3. ``decode_coded_edges`` rebuilds ``pred`` and derives ``obj_kind``,
+   ``lang`` and ``dtype`` with codegen expressions, giving the ``EDGES``
+   columns.
+
+It is checked against the row-at-a-time oracle in tests/oracle.py
+(tests/test_extract.py, hypothesis-style fuzz in tests/test_extract_fuzz.py).
 
 Scale notes: extraction is embarrassingly parallel (no shuffle); output
 partitioning is inherited from the scan, so a 100 TB input runs as one
@@ -31,10 +33,10 @@ aggregation keeps the shuffle small.
 from __future__ import annotations
 
 import hashlib
+import re
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -43,7 +45,6 @@ from pyspark.sql import functions as F
 from ..schema import (
     BREG_NS,
     CLASS_URIS,
-    EDGES,
     PRED_URIS,
     PROV_ROLE,
     PROV_TOOL,
@@ -53,7 +54,6 @@ from ..schema import (
     TOOL_NS,
     XSD,
 )
-from ..functions.terms import skolem_uri
 
 BLOCK_RE = r"\[\[([^\[\]]+)\]\]"
 XSD_STRING = XSD + "string"
@@ -61,360 +61,73 @@ XSD_STRING = XSD + "string"
 # reference resolves with lang="en", browser.py:126,140)
 EN_KEYS = ("title", "description", "name")
 
-_EDGE_COLS = ["subj", "pred", "obj", "obj_kind", "lang", "dtype", "conv_id", "turn_idx"]
-
-
-def _class_map_col():
-    return F.create_map(*[F.lit(x) for kv in CLASS_URIS.items() for x in kv])
-
-
-def _pred_map_col():
-    return F.create_map(*[F.lit(x) for kv in PRED_URIS.items() for x in kv])
-
-
-def _subj_col():
-    return F.when(
-        F.col("local").startswith("_:"),
-        skolem_uri(F.col("conv_id"), F.col("turn_idx"), F.col("local")),
-    ).otherwise(F.concat(F.lit(BREG_NS), F.col("local")))
-
-
-def _obj_kind(value):
-    return F.when(
-        value.startswith("#")
-        | value.startswith("http://")
-        | value.startswith("https://")
-        | value.startswith("urn:"),
-        F.lit("uri"),
-    ).otherwise(F.lit("literal"))
-
-
-_TRIPLE_STRUCT_DDL = (
-    "struct<pred:string,obj:string,obj_kind:string,lang:string,dtype:string>"
-)
-
-
-def _triple_struct(pred, obj, obj_kind, lang, dtype):
-    return F.struct(
-        pred.alias("pred"),
-        obj.alias("obj"),
-        obj_kind.alias("obj_kind"),
-        lang.alias("lang"),
-        dtype.alias("dtype"),
-    )
-
-
-def extract_edges_sql(transcripts: DataFrame, emit_provenance: bool = True) -> DataFrame:
-    """Catalyst-native extraction (whole-stage codegen, no Python).
-
-    Single-pass: one scan, one explode per block, one explode per triple —
-    type/property/provenance triples are built as one array per block, so a
-    100 TB input is read exactly once (a unioned-branches formulation would
-    re-scan it per triple family).
-    """
-    null_s = F.lit(None).cast("string")
-
-    blocks = transcripts.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "tool",
-        F.explode(F.regexp_extract_all("text", F.lit(BLOCK_RE), F.lit(1))).alias("block"),
-    )
-    blocks = blocks.select(
-        "*",
-        F.split("block", r"\|").getItem(0).alias("tag"),
-        F.regexp_extract("block", r"(?:^|\|)id=([^|]*)", 1).alias("local"),
-    )
-    blocks = blocks.withColumn("class_uri", _class_map_col()[F.col("tag")]).filter(
-        F.col("class_uri").isNotNull() & (F.col("local") != "")
-    )
-    blocks = blocks.withColumn("subj", _subj_col())
-
-    type_t = F.array(
-        _triple_struct(F.lit(RDF_TYPE), F.col("class_uri"), F.lit("uri"), null_s, null_s)
-    )
-
-    pred_map = _pred_map_col()
-
-    def _prop(kv):
-        key = F.regexp_extract(kv, r"^([^=]*)=", 1)
-        value = F.regexp_extract(kv, r"^[^=]*=(.*)$", 1)
-        obj_kind = _obj_kind(value)
-        obj = F.when(
-            value.startswith("#"), F.concat(F.lit(BREG_NS), F.substr(value, F.lit(2)))
-        ).otherwise(value)
-        lang = F.when(
-            (obj_kind == F.lit("literal"))
-            & key.isin(*EN_KEYS)
-            & (value != F.lit("")),
-            F.lit("en"),
-        ).otherwise(null_s)
-        dtype = F.when(obj_kind == F.lit("literal"), F.lit(XSD_STRING)).otherwise(null_s)
-        return _triple_struct(
-            F.when((pred_map[key].isNotNull()) & (value != F.lit("")), pred_map[key]).otherwise(
-                null_s
-            ),
-            obj,
-            obj_kind,
-            lang,
-            dtype,
-        )
-
-    # NB: slice length must be size-bounded — a max-int literal length
-    # overflows inside transform() and silently folds to an empty array.
-    parts_arr = F.split("block", r"\|")
-    prop_t = F.filter(
-        F.transform(F.slice(parts_arr, 2, F.size(parts_arr)), _prop),
-        lambda t: t["pred"].isNotNull(),
-    )
-
-    empty_arr = F.array().cast(f"array<{_TRIPLE_STRUCT_DDL}>")
-    triples = F.concat(type_t, prop_t)
-    if emit_provenance:
-        role_t = F.when(
-            F.col("role").isNotNull(),
-            F.array(
-                _triple_struct(
-                    F.lit(PROV_ROLE),
-                    F.concat(F.lit(ROLE_NS), F.col("role")),
-                    F.lit("uri"),
-                    null_s,
-                    null_s,
-                )
-            ),
-        ).otherwise(empty_arr)
-        tool_t = F.when(
-            F.col("tool").isNotNull(),
-            F.array(
-                _triple_struct(
-                    F.lit(PROV_TOOL),
-                    F.concat(F.lit(TOOL_NS), F.col("tool")),
-                    F.lit("uri"),
-                    null_s,
-                    null_s,
-                )
-            ),
-        ).otherwise(empty_arr)
-        triples = F.concat(triples, role_t, tool_t)
-
-    return blocks.select(
-        "subj", "conv_id", "turn_idx", F.explode(triples).alias("t")
-    ).select(
-        "subj",
-        F.col("t.pred").alias("pred"),
-        F.col("t.obj").alias("obj"),
-        F.col("t.obj_kind").alias("obj_kind"),
-        F.col("t.lang").alias("lang"),
-        F.col("t.dtype").alias("dtype"),
-        "conv_id",
-        "turn_idx",
-    )
-
-
-# ---------------------------------------------------------------------------
-# pandas/Arrow implementation (mapInPandas) — identical semantics
-# ---------------------------------------------------------------------------
-
-def extract_triples_pandas_batch(
-    pdf: pd.DataFrame, emit_provenance: bool = True
-) -> pd.DataFrame:
-    """Vectorized pandas extraction of one Arrow batch.
-
-    Shared by the Spark ``mapInPandas`` path and (for tiny inputs) unit tests.
-    Only vectorized pandas string ops — no Python-level row loop; the one
-    ``apply`` is the sha256 skolem mint over the (rare) blank-node subset.
-    """
-    if len(pdf) == 0:
-        return pd.DataFrame(columns=_EDGE_COLS)
-
-    # Arrow-side prefilter: most turns carry no mention block at all (60% of
-    # the synthetic corpus; free-text chatter dominates real transcripts
-    # too).  pc.match_substring is a C++ SIMD substring scan — orders of
-    # magnitude cheaper than running the capture-group regex over every
-    # text — so the regex + frame machinery below only touches candidate
-    # rows.  "[[" cannot appear inside a block body (grammar forbids '['),
-    # so the filter is exact, not approximate.
-    cand = pc.fill_null(
-        pc.match_substring(
-            pa.array(pdf["text"], type=pa.string(), from_pandas=True), "[["
-        ),
-        False,
-    ).to_numpy(zero_copy_only=False)
-    if not cand.any():
-        return pd.DataFrame(columns=_EDGE_COLS)
-    pdf = pdf.loc[cand]
-
-    base = pdf[["conv_id", "turn_idx", "role", "tool"]].reset_index(drop=True)
-    found = pdf["text"].reset_index(drop=True).str.extractall(BLOCK_RE)
-    if len(found) == 0:
-        return pd.DataFrame(columns=_EDGE_COLS)
-    blocks = found[0].reset_index()
-    blocks = blocks.merge(
-        base, left_on="level_0", right_index=True, how="left", copy=False
-    ).rename(columns={0: "block"})
-
-    # split once; the tag is field 0 and the kv fields ([1:]) are reused by
-    # the property-extraction path below instead of re-splitting
-    blocks["_fields"] = blocks["block"].str.split("|")
-    blocks["tag"] = blocks["_fields"].str[0]
-    blocks["local"] = blocks["block"].str.extract(r"(?:^|\|)id=([^|]*)", expand=False)
-    blocks["class_uri"] = blocks["tag"].map(CLASS_URIS)
-    blocks = blocks[blocks["class_uri"].notna() & blocks["local"].fillna("").ne("")]
-    if len(blocks) == 0:
-        return pd.DataFrame(columns=_EDGE_COLS)
-    blocks = blocks.reset_index(drop=True)
-
-    is_bnode = blocks["local"].str.startswith("_:")
-    subj = BREG_NS + blocks["local"]
-    if is_bnode.any():
-        payload = (
-            blocks.loc[is_bnode, "conv_id"]
-            + "|"
-            + blocks.loc[is_bnode, "turn_idx"].astype(str)
-            + "|"
-            + blocks.loc[is_bnode, "local"]
-        )
-        subj.loc[is_bnode] = SKOLEM_NS + payload.apply(
-            lambda s: hashlib.sha256(s.encode("utf-8")).hexdigest()
-        )
-    blocks["subj"] = subj
-
-    def _mk(df, pred, obj, obj_kind, lang, dtype):
-        return pd.DataFrame(
-            {
-                "subj": df["subj"].values,
-                "pred": pred,
-                "obj": obj,
-                "obj_kind": obj_kind,
-                "lang": lang,
-                "dtype": dtype,
-                "conv_id": df["conv_id"].values,
-                "turn_idx": df["turn_idx"].values,
-            }
-        )
-
-    parts = [
-        _mk(blocks, RDF_TYPE, blocks["class_uri"].values, "uri", None, None)
+# Coded boundary: the pred vocabulary is tiny and closed, so pred crosses
+# the Arrow stream as an int32 code into ALL_PRED_URIS (0 = rdf:type,
+# 1 + i = the i-th PRED_URIS key, then the two provenance preds).  obj_kind,
+# lang and dtype are exact functions of (pred_code, obj) under the emission
+# rules below, so they never cross at all: an object is a URI iff it starts
+# with a scheme prefix ('#'-fragments expand into BREG_NS, itself http://),
+# dtype is xsd:string iff literal, and lang is "en" iff literal and the key
+# is one of EN_KEYS.
+ALL_PRED_URIS: list[str] = [RDF_TYPE, *PRED_URIS.values(), PROV_ROLE, PROV_TOOL]
+EN_PRED_CODES: list[int] = [1 + list(PRED_URIS).index(k) for k in EN_KEYS]
+_ROLE_CODE = len(PRED_URIS) + 1
+_TOOL_CODE = len(PRED_URIS) + 2
+CODED_EDGES = "subj string, pred_code int, obj string, conv_id string, turn_idx int"
+_CODED_PA_SCHEMA = pa.schema(
+    [
+        ("subj", pa.string()),
+        ("pred_code", pa.int32()),
+        ("obj", pa.string()),
+        ("conv_id", pa.string()),
+        ("turn_idx", pa.int32()),
     ]
-
-    kv = blocks[["subj", "conv_id", "turn_idx"]].copy()
-    kv["kv"] = blocks["_fields"].str[1:]
-    kv = kv.explode("kv", ignore_index=True)
-    kv = kv[kv["kv"].notna()]
-    kv["key"] = kv["kv"].str.extract(r"^([^=]*)=", expand=False)
-    kv["value"] = kv["kv"].str.extract(r"^[^=]*=(.*)$", expand=False)
-    kv["pred"] = kv["key"].map(PRED_URIS)
-    kv = kv[kv["pred"].notna() & kv["value"].fillna("").ne("")].reset_index(drop=True)
-    if len(kv):
-        is_frag = kv["value"].str.startswith("#")
-        is_uri = (
-            is_frag
-            | kv["value"].str.startswith("http://")
-            | kv["value"].str.startswith("https://")
-            | kv["value"].str.startswith("urn:")
-        )
-        obj = kv["value"].where(~is_frag, BREG_NS + kv["value"].str[1:])
-        obj_kind = pd.Series("literal", index=kv.index).where(~is_uri, "uri")
-        lang = pd.Series(None, index=kv.index, dtype=object)
-        lang[(obj_kind == "literal") & kv["key"].isin(EN_KEYS)] = "en"
-        dtype = pd.Series(None, index=kv.index, dtype=object)
-        dtype[obj_kind == "literal"] = XSD_STRING
-        parts.append(
-            pd.DataFrame(
-                {
-                    "subj": kv["subj"].values,
-                    "pred": kv["pred"].values,
-                    "obj": obj.values,
-                    "obj_kind": obj_kind.values,
-                    "lang": lang.values,
-                    "dtype": dtype.values,
-                    "conv_id": kv["conv_id"].values,
-                    "turn_idx": kv["turn_idx"].values,
-                }
-            )
-        )
-
-    if emit_provenance:
-        with_role = blocks[blocks["role"].notna()]
-        if len(with_role):
-            parts.append(
-                _mk(with_role, PROV_ROLE, (ROLE_NS + with_role["role"]).values, "uri", None, None)
-            )
-        with_tool = blocks[blocks["tool"].notna()]
-        if len(with_tool):
-            parts.append(
-                _mk(with_tool, PROV_TOOL, (TOOL_NS + with_tool["tool"]).values, "uri", None, None)
-            )
-
-    out = pd.concat(parts, ignore_index=True)
-    out["turn_idx"] = out["turn_idx"].astype("int32")
-    return out[_EDGE_COLS]
-
-
-# pyarrow-native implementation — identical semantics, C++ kernels
-# ---------------------------------------------------------------------------
-#
-# The pandas batch above is "vectorized" at the API level, but pandas string
-# ops on object dtype are C loops over per-row *python str objects*: every
-# extractall/split/extract allocates millions of PyObjects per batch.  At 32
-# concurrent workers that allocation traffic saturates memory bandwidth long
-# before the CPUs saturate (measured: aggregate task-seconds double from 8 to
-# 32 local cores).  This twin runs the whole hot path through pyarrow compute
-# kernels — RE2 regex, SIMD substring scans, columnar buffers, zero PyObjects
-# — shared by ``extract_edges(impl='arrow')`` (raw RecordBatches via
-# mapInArrow — the production path) and ``impl='pandas'`` (the mapInPandas
-# twin, which pays a pandas conversion at the boundary).  The pure-pandas
-# reference stays as the exact-multiplicity fallback (rows with >1 block
-# opener, absent from real transcripts) and as the equality-tested second
-# implementation.
+)
 
 _BLOCK_RE_NAMED = r"\[\[(?P<b>[^\[\]]+)\]\]"
 _ID_RE_NAMED = r"(?:^|\|)id=(?P<v>[^|]*)"
 _CLASS_KEYS = pa.array(list(CLASS_URIS.keys()), type=pa.string())
 _CLASS_VALS = pa.array(list(CLASS_URIS.values()), type=pa.string())
 _PRED_KEYS = pa.array(list(PRED_URIS.keys()), type=pa.string())
-_PRED_VALS = pa.array(list(PRED_URIS.values()), type=pa.string())
-_EN_KEYS_ARR = pa.array(list(EN_KEYS), type=pa.string())
 
 
-def _const(value: str | None, n: int) -> pa.Array:
-    if value is None:
-        return pa.nulls(n, pa.string())
-    return pa.DictionaryArray.from_arrays(
-        pa.array(np.zeros(n, dtype=np.int32)), pa.array([value])
-    ).cast(pa.string())
-
-
-def _edge_part(subj, pred, obj, obj_kind, lang, dtype, conv_id, turn_idx):
-    n = len(subj)
-    as_arr = lambda c: c if isinstance(c, pa.Array) else _const(c, n)  # noqa: E731
+def _coded_part(subj, pred_code, obj, conv_id, turn_idx) -> pa.Table:
+    if isinstance(pred_code, int):
+        pred_code = pa.array(np.full(len(subj), pred_code, dtype=np.int32))
     return pa.table(
-        {
-            "subj": subj,
-            "pred": as_arr(pred),
-            "obj": as_arr(obj),
-            "obj_kind": as_arr(obj_kind),
-            "lang": as_arr(lang),
-            "dtype": as_arr(dtype),
-            "conv_id": conv_id,
-            "turn_idx": pc.cast(turn_idx, pa.int32(), safe=False),
-        }
+        [subj, pred_code, obj, conv_id, pc.cast(turn_idx, pa.int32(), safe=False)],
+        schema=_CODED_PA_SCHEMA,
     )
 
 
-_EDGE_PA_SCHEMA = pa.schema(
-    [
-        ("subj", pa.string()),
-        ("pred", pa.string()),
-        ("obj", pa.string()),
-        ("obj_kind", pa.string()),
-        ("lang", pa.string()),
-        ("dtype", pa.string()),
-        ("conv_id", pa.string()),
-        ("turn_idx", pa.int32()),
-    ]
-)
+def _block_rows(text, conv, turn, role, tool):
+    """One row per mention block: ``(body, conv, turn, role, tool)``.
+
+    Turns with one ``[[`` opener (every turn the datagen grammar writes)
+    take the RE2 ``extract_regex`` kernel.  Turns with several openers need
+    every match, which ``extract_regex`` does not give; their bodies come
+    from ``re.findall`` and join the same columns, so both kinds run the
+    same block path below.  A null text counts as no opener.
+    """
+    n_open = pc.fill_null(pc.count_substring(text, "[["), 0)
+    single = pc.equal(n_open, 1)
+    body = pc.struct_field(pc.extract_regex(text.filter(single), _BLOCK_RE_NAMED), 0)
+    ctx = [a.filter(single) for a in (conv, turn, role, tool)]
+    multi = pc.greater(n_open, 1)
+    if pc.any(multi).as_py():
+        found = [re.findall(BLOCK_RE, t) for t in text.filter(multi).to_pylist()]
+        rows = np.repeat(
+            np.nonzero(multi.to_numpy(zero_copy_only=False))[0],
+            [len(f) for f in found],
+        )
+        body = pa.concat_arrays(
+            [body, pa.array([b for f in found for b in f], type=pa.string())]
+        )
+        ctx = [
+            pa.concat_arrays([c, a.take(rows)])
+            for c, a in zip(ctx, (conv, turn, role, tool))
+        ]
+    return (body, *ctx)
 
 
 def _extract_arrow_core(
@@ -425,211 +138,105 @@ def _extract_arrow_core(
     tool: pa.Array,
     emit_provenance: bool = True,
 ) -> pa.Table:
-    """pyarrow-compute extraction over raw Arrow columns -> Arrow table.
+    """pyarrow-compute extraction over raw Arrow columns -> coded rows
+    ``(subj, pred_code, obj, conv_id, turn_idx)``.
 
-    The whole hot path runs through pyarrow compute kernels — RE2 regex,
-    SIMD substring scans, columnar buffers, zero PyObjects.  Shared by the
-    ``mapInArrow`` production path (arrays in, arrays out, no pandas
-    round-trip at all) and the ``mapInPandas``/unit-test wrapper
-    ``extract_triples_arrow_batch``.
-
-    Semantics are byte-identical to ``extract_triples_pandas_batch``
-    (hypothesis-fuzzed in tests/test_extract_fuzz.py), including python-re
-    quirks the RE2 kernels don't share: ``$`` matching before one trailing
-    newline in the value pattern is reproduced by an explicit strip+reject,
-    and rows with more than one ``[[`` opener (several blocks, impossible
-    under the datagen grammar but legal input) take the pandas path.
+    RE2 regex, SIMD substring scans and columnar buffers; Python objects only
+    for the rare multi-opener bodies and blank-node skolem mints.  Python-re
+    semantics the RE2 kernels don't share are reproduced explicitly: ``$``
+    matching before one trailing newline in the value pattern ``(.*)$``
+    becomes a strip of at most one trailing newline plus a reject of any
+    value still holding one.
     """
-    if len(text) == 0:
-        return _EDGE_PA_SCHEMA.empty_table()
+    body, conv, turn, role, tool = _block_rows(text, conv, turn, role, tool)
+    if not len(body):
+        return _CODED_PA_SCHEMA.empty_table()
 
-    n_open = pc.fill_null(pc.count_substring(text, "[["), 0)
-
-    extra: pa.Table | None = None
-    multi = pc.greater(n_open, 1)
-    if pc.any(multi).as_py():
-        multi_pdf = pa.table(
-            {
-                "conv_id": conv.filter(multi),
-                "turn_idx": turn.filter(multi),
-                "role": role.filter(multi),
-                "tool": tool.filter(multi),
-                "text": text.filter(multi),
-            }
-        ).to_pandas()
-        extra_pdf = extract_triples_pandas_batch(
-            multi_pdf, emit_provenance=emit_provenance
-        )
-        if len(extra_pdf):
-            extra = pa.Table.from_pandas(
-                extra_pdf, schema=_EDGE_PA_SCHEMA, preserve_index=False
-            )
-
-    single = pc.equal(n_open, 1)
-    parts: list[pa.Table] = []
-    if pc.any(single).as_py():
-        text1 = text.filter(single)
-        conv, turn, role, tool = (a.filter(single) for a in (conv, turn, role, tool))
-
-        body = pc.struct_field(pc.extract_regex(text1, _BLOCK_RE_NAMED), 0)
-        tag_fields = pc.split_pattern(body, "|")
-        tag = pc.list_element(tag_fields, 0) if len(body) else body
-        class_uri = pc.take(_CLASS_VALS, pc.index_in(tag, value_set=_CLASS_KEYS))
-        local = pc.struct_field(pc.extract_regex(body, _ID_RE_NAMED), 0)
-        keep = pc.and_(
-            pc.and_(pc.is_valid(class_uri), pc.is_valid(local)),
-            pc.not_equal(pc.fill_null(local, ""), ""),
-        )
-        keep = pc.fill_null(keep, False)
-        fields, class_uri, local, conv, turn, role, tool = (
-            a.filter(keep)
-            for a in (tag_fields, class_uri, local, conv, turn, role, tool)
-        )
-
-        if len(local):
-            subj = pc.binary_join_element_wise(BREG_NS, local, "")
-            is_b = pc.starts_with(local, "_:")
-            if pc.any(is_b).as_py():
-                # skolem mint (sha256 isn't an arrow kernel) on the rare
-                # blank-node subset only — same shape as the pandas twin
-                s = subj.to_numpy(zero_copy_only=False).copy()
-                bm = is_b.to_numpy(zero_copy_only=False)
-                cv = conv.to_numpy(zero_copy_only=False)
-                tn = turn.to_numpy(zero_copy_only=False)
-                lc = local.to_numpy(zero_copy_only=False)
-                for i in np.nonzero(bm)[0]:
-                    payload = f"{cv[i]}|{tn[i]}|{lc[i]}"
-                    s[i] = SKOLEM_NS + hashlib.sha256(
-                        payload.encode("utf-8")
-                    ).hexdigest()
-                subj = pa.array(s, type=pa.string())
-
-            parts.append(
-                _edge_part(subj, RDF_TYPE, class_uri, "uri", None, None, conv, turn)
-            )
-
-            kvlists = pc.list_slice(fields, 1)
-            parent = pc.list_parent_indices(kvlists)
-            flat = pc.list_flatten(kvlists)
-            if len(flat):
-                eq = pc.split_pattern(flat, "=", max_splits=1)
-                two = pc.equal(pc.list_value_length(eq), 2)
-                eq, parent = eq.filter(two), parent.filter(two)
-                key = pc.list_element(eq, 0)
-                # python-re `(.*)$` semantics: strip at most ONE trailing
-                # newline, reject any value still containing one
-                val = pc.replace_substring_regex(
-                    pc.list_element(eq, 1), r"\n$", ""
-                )
-                pred = pc.take(_PRED_VALS, pc.index_in(key, value_set=_PRED_KEYS))
-                keep2 = pc.and_(
-                    pc.and_(pc.is_valid(pred), pc.not_equal(val, "")),
-                    pc.invert(pc.match_substring(val, "\n")),
-                )
-                keep2 = pc.fill_null(keep2, False)
-                key, val, pred, parent = (
-                    a.filter(keep2) for a in (key, val, pred, parent)
-                )
-                if len(val):
-                    is_frag = pc.starts_with(val, "#")
-                    is_uri = pc.or_(
-                        pc.or_(is_frag, pc.starts_with(val, "http://")),
-                        pc.or_(
-                            pc.starts_with(val, "https://"),
-                            pc.starts_with(val, "urn:"),
-                        ),
-                    )
-                    obj = pc.if_else(
-                        is_frag,
-                        pc.binary_join_element_wise(
-                            BREG_NS, pc.utf8_slice_codeunits(val, 1), ""
-                        ),
-                        val,
-                    )
-                    literal = pc.invert(is_uri)
-                    obj_kind = pc.if_else(
-                        is_uri, pa.scalar("uri"), pa.scalar("literal")
-                    )
-                    lang = pc.if_else(
-                        pc.and_(literal, pc.is_in(key, value_set=_EN_KEYS_ARR)),
-                        pa.scalar("en"),
-                        pa.scalar(None, pa.string()),
-                    )
-                    dtype = pc.if_else(
-                        literal, pa.scalar(XSD_STRING), pa.scalar(None, pa.string())
-                    )
-                    parts.append(
-                        _edge_part(
-                            subj.take(parent),
-                            pred,
-                            obj,
-                            obj_kind,
-                            lang,
-                            dtype,
-                            conv.take(parent),
-                            turn.take(parent),
-                        )
-                    )
-
-            if emit_provenance:
-                for col, pred_uri, ns in (
-                    (role, PROV_ROLE, ROLE_NS),
-                    (tool, PROV_TOOL, TOOL_NS),
-                ):
-                    has = pc.is_valid(col)
-                    if pc.any(has).as_py():
-                        parts.append(
-                            _edge_part(
-                                subj.filter(has),
-                                pred_uri,
-                                pc.binary_join_element_wise(ns, col.filter(has), ""),
-                                "uri",
-                                None,
-                                None,
-                                conv.filter(has),
-                                turn.filter(has),
-                            )
-                        )
-
-    tables = [p.cast(_EDGE_PA_SCHEMA) for p in parts]
-    if extra is not None:
-        tables.append(extra)
-    if not tables:
-        return _EDGE_PA_SCHEMA.empty_table()
-    return tables[0] if len(tables) == 1 else pa.concat_tables(tables)
-
-
-def _as_array(col) -> pa.Array:
-    return col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-
-
-def extract_triples_arrow_batch(
-    pdf: pd.DataFrame, emit_provenance: bool = True
-) -> pd.DataFrame:
-    """pandas-frame wrapper over ``_extract_arrow_core`` (tests + the
-    ``mapInPandas`` twin).  The production path is ``extract_edges_arrow``,
-    which feeds the same core raw Arrow batches with no pandas round-trip.
-    """
-    if len(pdf) == 0:
-        return pd.DataFrame(columns=_EDGE_COLS)
-    out = _extract_arrow_core(
-        pa.array(pdf["text"], type=pa.string(), from_pandas=True),
-        pa.array(pdf["conv_id"], type=pa.string(), from_pandas=True),
-        pa.array(pdf["turn_idx"], from_pandas=True),
-        pa.array(pdf["role"], type=pa.string(), from_pandas=True),
-        pa.array(pdf["tool"], type=pa.string(), from_pandas=True),
-        emit_provenance=emit_provenance,
+    fields = pc.split_pattern(body, "|")
+    class_uri = pc.take(
+        _CLASS_VALS, pc.index_in(pc.list_element(fields, 0), value_set=_CLASS_KEYS)
     )
-    pdf_out = out.to_pandas()
-    pdf_out["turn_idx"] = pdf_out["turn_idx"].astype("int32")
-    return pdf_out[_EDGE_COLS]
+    local = pc.struct_field(pc.extract_regex(body, _ID_RE_NAMED), 0)
+    keep = pc.fill_null(
+        pc.and_(pc.is_valid(class_uri), pc.not_equal(pc.fill_null(local, ""), "")),
+        False,
+    )
+    fields, class_uri, local, conv, turn, role, tool = (
+        a.filter(keep) for a in (fields, class_uri, local, conv, turn, role, tool)
+    )
+    if not len(local):
+        return _CODED_PA_SCHEMA.empty_table()
+
+    subj = pc.binary_join_element_wise(BREG_NS, local, "")
+    is_b = pc.starts_with(local, "_:")
+    if pc.any(is_b).as_py():
+        # skolem mint (sha256 isn't an arrow kernel) on the rare blank-node
+        # subset only: urn:skolem:sha256(conv_id|turn_idx|local)
+        s = subj.to_numpy(zero_copy_only=False).copy()
+        cv = conv.to_numpy(zero_copy_only=False)
+        tn = turn.to_numpy(zero_copy_only=False)
+        lc = local.to_numpy(zero_copy_only=False)
+        for i in np.nonzero(is_b.to_numpy(zero_copy_only=False))[0]:
+            payload = f"{cv[i]}|{tn[i]}|{lc[i]}"
+            s[i] = SKOLEM_NS + hashlib.sha256(payload.encode("utf-8")).hexdigest()
+        subj = pa.array(s, type=pa.string())
+
+    parts = [_coded_part(subj, 0, class_uri, conv, turn)]
+
+    kvlists = pc.list_slice(fields, 1)
+    parent = pc.list_parent_indices(kvlists)
+    eq = pc.split_pattern(pc.list_flatten(kvlists), "=", max_splits=1)
+    two = pc.equal(pc.list_value_length(eq), 2)
+    eq, parent = eq.filter(two), parent.filter(two)
+    key_idx = pc.index_in(pc.list_element(eq, 0), value_set=_PRED_KEYS)
+    # python-re `(.*)$` semantics: strip at most ONE trailing newline,
+    # reject any value still containing one
+    val = pc.replace_substring_regex(pc.list_element(eq, 1), r"\n$", "")
+    keep2 = pc.fill_null(
+        pc.and_(
+            pc.and_(pc.is_valid(key_idx), pc.not_equal(val, "")),
+            pc.invert(pc.match_substring(val, "\n")),
+        ),
+        False,
+    )
+    key_idx, val, parent = (a.filter(keep2) for a in (key_idx, val, parent))
+    if len(val):
+        obj = pc.if_else(
+            pc.starts_with(val, "#"),
+            pc.binary_join_element_wise(BREG_NS, pc.utf8_slice_codeunits(val, 1), ""),
+            val,
+        )
+        parts.append(
+            _coded_part(
+                subj.take(parent),
+                pc.add(key_idx, pa.scalar(1, pa.int32())),
+                obj,
+                conv.take(parent),
+                turn.take(parent),
+            )
+        )
+
+    if emit_provenance:
+        for col, code, ns in ((role, _ROLE_CODE, ROLE_NS), (tool, _TOOL_CODE, TOOL_NS)):
+            has = pc.is_valid(col)
+            if pc.any(has).as_py():
+                parts.append(
+                    _coded_part(
+                        subj.filter(has),
+                        code,
+                        pc.binary_join_element_wise(ns, col.filter(has), ""),
+                        conv.filter(has),
+                        turn.filter(has),
+                    )
+                )
+    return pa.concat_tables(parts)
 
 
 def _python_boundary_input(transcripts: DataFrame) -> DataFrame:
     """Project + prefilter the rows shipped across the Python boundary.
 
-    Column pruning: mapInPandas/mapInArrow are black boxes to Catalyst, so
-    columns the extractor never reads (ts, caller extras) are dropped here.
+    Column pruning: mapInArrow is a black box to Catalyst, so columns the
+    extractor never reads (ts, caller extras) are dropped here.
 
     Row pruning: a turn without a ``[[`` opener can emit NO triple — the
     subject exists only when a block parses, and even provenance edges hang
@@ -639,95 +246,10 @@ def _python_boundary_input(transcripts: DataFrame) -> DataFrame:
     traffic (the measured scaling bottleneck — JVM->python serialize +
     socket memcpy) drops 2.5x before a single Python byte moves.  Null
     texts are dropped by the same predicate (null contains -> null ->
-    filtered), matching the kernels' behavior.
+    filtered), matching the kernel's behavior.
     """
     used = ["conv_id", "turn_idx", "role", "tool", "text"]
     return transcripts.select(*used).filter(F.col("text").contains("[["))
-
-
-def extract_edges_pandas(transcripts: DataFrame, emit_provenance: bool = True) -> DataFrame:
-    """mapInPandas extraction — Arrow-batched, zero per-row Python.
-
-    Each batch runs through the pyarrow-compute kernel path
-    (``extract_triples_arrow_batch``); the pure-pandas twin remains the
-    multi-block fallback inside it.
-
-    mapInPandas is a black box to Catalyst: every input column is shipped to
-    the python workers, so columns the extractor never reads (ts, and any
-    extras a caller's wider table carries) are projected away here — column
-    pruning the optimizer can't do for us.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from breg_dcat_harvester_spark.functions.workerenv import pin_native_threads
-
-        pin_native_threads()
-        for pdf in batches:
-            yield extract_triples_arrow_batch(pdf, emit_provenance=emit_provenance)
-
-    return _python_boundary_input(transcripts).mapInPandas(run, schema=EDGES)
-
-
-# Coded boundary: the transcript extractor's pred vocabulary is tiny and
-# closed (rdf:type + PRED_URIS + two provenance preds), and obj_kind / lang /
-# dtype are EXACT functions of (pred, obj) under its emission rules — the
-# kernel classifies a value as "uri" iff the raw value starts with a scheme
-# prefix, and for '#'-fragments expands into BREG_NS (itself http://…), so
-# kind is recoverable from obj alone; dtype is xsd:string iff literal; lang
-# is "en" iff literal and the (injective) pred is one of the EN_KEYS preds.
-# Shipping pred as an int32 code and deriving the three classifier columns
-# JVM-side AFTER the merge removes ~90 B/row from both the python->JVM Arrow
-# stream and the dedup shuffle — the two bandwidth-bound segments of the
-# harvest (measured at local[32] on a cached 10M-turn corpus: 1.73M ->
-# 2.26M turns/s end-to-end).  rdf_parse documents keep the general path —
-# real RDF carries open-world langs/dtypes.
-ALL_PRED_URIS: list[str] = [RDF_TYPE, *PRED_URIS.values(), PROV_ROLE, PROV_TOOL]
-EN_PRED_CODES: list[int] = [
-    ALL_PRED_URIS.index(PRED_URIS[k]) for k in EN_KEYS
-]
-CODED_EDGES = "subj string, pred_code int, obj string, conv_id string, turn_idx int"
-_ALL_PRED_SET = pa.array(ALL_PRED_URIS, type=pa.string())
-
-
-def extract_edges_coded(
-    transcripts: DataFrame, emit_provenance: bool = True
-) -> DataFrame:
-    """mapInArrow extraction with the coded (narrow) boundary schema.
-
-    Same kernel as ``impl='arrow'``; the wrapper swaps the pred strings for
-    ``index_in`` codes and drops the three derivable classifier columns
-    before anything crosses the Arrow stream.  Decode with
-    ``decode_coded_edges`` (or let ``merge.merge_triples_transcripts``
-    dedup on the coded rows first — the shuffle then moves codes too).
-    """
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from breg_dcat_harvester_spark.functions.workerenv import pin_native_threads
-
-        pin_native_threads()
-        for b in batches:
-            out = _extract_arrow_core(
-                _as_array(b.column("text")),
-                _as_array(b.column("conv_id")),
-                _as_array(b.column("turn_idx")),
-                _as_array(b.column("role")),
-                _as_array(b.column("tool")),
-                emit_provenance=emit_provenance,
-            )
-            if out.num_rows:
-                code = pc.index_in(out.column("pred"), value_set=_ALL_PRED_SET)
-                t = pa.table(
-                    {
-                        "subj": out.column("subj"),
-                        "pred_code": pc.cast(code, pa.int32()),
-                        "obj": out.column("obj"),
-                        "conv_id": out.column("conv_id"),
-                        "turn_idx": out.column("turn_idx"),
-                    }
-                )
-                yield from t.combine_chunks().to_batches()
-
-    return _python_boundary_input(transcripts).mapInArrow(run, schema=CODED_EDGES)
 
 
 def decode_coded_edges(coded: DataFrame) -> DataFrame:
@@ -754,21 +276,15 @@ def decode_coded_edges(coded: DataFrame) -> DataFrame:
     )
 
 
-def extract_edges_arrow(
-    transcripts: DataFrame, emit_provenance: bool = True
+def extract_edges(
+    transcripts: DataFrame, emit_provenance: bool = True, impl: str = "arrow"
 ) -> DataFrame:
-    """mapInArrow extraction — the production Python-boundary path.
+    """Transcripts -> ``EDGES`` rows through the one coded Arrow boundary.
 
-    ``mapInPandas`` converts every Arrow batch to a pandas frame before the
-    UDF sees it: object-dtype string columns materialize one PyObject per
-    value, and the kernel immediately converts them BACK to Arrow.  At high
-    worker counts that double conversion dominates (allocation traffic
-    scales with workers; measured at local[32] on a cached 10M-turn corpus:
-    extract-only 1.78M rows/s via mapInPandas vs the bare kernel's 6.3M
-    rows/s at the same concurrency).  ``mapInArrow`` hands the UDF the raw
-    ``pa.RecordBatch`` — the kernel runs arrays-in/arrays-out with zero
-    pandas, zero PyObjects (outside the rare multi-block fallback rows).
+    ``impl`` names that boundary; "arrow" is the only value.
     """
+    if impl != "arrow":
+        raise ValueError(f"unknown extract impl: {impl!r} (only 'arrow')")
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from breg_dcat_harvester_spark.functions.workerenv import pin_native_threads
@@ -776,26 +292,11 @@ def extract_edges_arrow(
         pin_native_threads()
         for b in batches:
             out = _extract_arrow_core(
-                _as_array(b.column("text")),
-                _as_array(b.column("conv_id")),
-                _as_array(b.column("turn_idx")),
-                _as_array(b.column("role")),
-                _as_array(b.column("tool")),
+                *(b.column(c) for c in ("text", "conv_id", "turn_idx", "role", "tool")),
                 emit_provenance=emit_provenance,
             )
             if out.num_rows:
                 yield from out.combine_chunks().to_batches()
 
-    return _python_boundary_input(transcripts).mapInArrow(run, schema=EDGES)
-
-
-def extract_edges(
-    transcripts: DataFrame, emit_provenance: bool = True, impl: str = "sql"
-) -> DataFrame:
-    if impl == "sql":
-        return extract_edges_sql(transcripts, emit_provenance)
-    if impl == "arrow":
-        return extract_edges_arrow(transcripts, emit_provenance)
-    if impl == "pandas":
-        return extract_edges_pandas(transcripts, emit_provenance)
-    raise ValueError(f"unknown extract impl: {impl}")
+    coded = _python_boundary_input(transcripts).mapInArrow(run, schema=CODED_EDGES)
+    return decode_coded_edges(coded)

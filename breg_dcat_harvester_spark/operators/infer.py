@@ -119,18 +119,6 @@ def _py_closure(
     return sorted(closure)
 
 
-def _type_row(subj, cls) -> list:
-    null_str = F.lit(None).cast("string")
-    return [
-        subj.alias("subj"),
-        F.lit(RDF_TYPE).alias("pred"),
-        cls.alias("obj"),
-        F.lit("uri").alias("obj_kind"),
-        null_str.alias("lang"),
-        null_str.alias("dtype"),
-    ]
-
-
 def rdfs_closure(
     edges: DataFrame, max_hops: int = 10, dedup: bool = True
 ) -> DataFrame:

@@ -38,40 +38,6 @@ def merge_triples(edges: DataFrame) -> DataFrame:
     )
 
 
-def merge_triples_transcripts(
-    transcripts: DataFrame, emit_provenance: bool = True
-) -> DataFrame:
-    """Fused transcript harvest: coded extract -> coded dedup -> decode.
-
-    Output is row-identical to ``merge_triples(extract_edges(t,
-    impl='arrow'))`` (asserted in tests/test_extract_fuzz.py and at 10M-turn
-    scale during development), but both bandwidth-bound segments — the
-    python->JVM Arrow stream and the dedup shuffle — carry ``pred`` as an
-    int32 code and no obj_kind/lang/dtype at all; those three are exact
-    functions of (pred, obj) for this extractor and are rebuilt by codegen
-    expressions AFTER the aggregation (see extract.py's coded-boundary
-    notes).  ~22% faster end-to-end at local[32] AND local[8] on the cached
-    10M-turn corpus; at cluster scale the saving is proportional to the
-    shuffle volume.  Transcript-only: RDF documents (rdf_parse) keep the
-    general ``merge_triples`` — real RDF has open-world langs/dtypes.
-    """
-    from .extract import decode_coded_edges, extract_edges_coded
-
-    coded = extract_edges_coded(transcripts, emit_provenance=emit_provenance)
-    merged = coded.groupBy("subj", "pred_code", "obj").agg(
-        F.min(F.struct("conv_id", "turn_idx")).alias("_lin")
-    )
-    return decode_coded_edges(
-        merged.select(
-            "subj",
-            "pred_code",
-            "obj",
-            F.col("_lin.conv_id").alias("conv_id"),
-            F.col("_lin.turn_idx").alias("turn_idx"),
-        )
-    )
-
-
 def num_triples(edges: DataFrame) -> int:
     """The reference's one aggregate metric per job (harvest.py:57-60)."""
     return edges.select("subj", "pred", "obj").distinct().count()

@@ -412,6 +412,12 @@ def load_shacl_shapes(ttl_text: str, doc_id: str = "shacl-shapes") -> CompiledSh
             vals.append(v[0])
         return tuple(vals)
 
+    # classes this document targets: the only non-SHACL sh:nodeKind values
+    # that recover as a class constraint
+    target_classes = {
+        c for props in by_subj.values() for c in props.get(_SH + "targetClass", [])
+    }
+
     for node, props in by_subj.items():
         targets = props.get(_SH + "targetClass")
         if not targets:
@@ -469,9 +475,10 @@ def load_shacl_shapes(ttl_text: str, doc_id: str = "shacl-shapes") -> CompiledSh
                     # (lines 540 / 825) carry recoverable INTENT: a value
                     # that is itself a node shape of sh:or-of-class (the
                     # file's own :DcatResource_Shape) compiles as that
-                    # class tuple; any other non-SHACL URI (eli:
-                    # LegalResource) is a class constraint.  Only a bogus
-                    # sh:* nodeKind remains an honest refusal.
+                    # class tuple; a class the same document targets
+                    # (eli:LegalResource) is a class constraint.  Any
+                    # other value (a typo, a bogus sh:* kind) is an
+                    # honest refusal.
                     cls_alt = resolve_or(nk[0], "class")
                     if cls_alt:
                         klass.append(ClassShape(target, path, cls_alt, severity=sev))
@@ -479,7 +486,7 @@ def load_shacl_shapes(ttl_text: str, doc_id: str = "shacl-shapes") -> CompiledSh
                             target, path,
                             f"nodeKind {nk[0]} -> sh:or-of-class sub-shape",
                         ))
-                    elif not nk[0].startswith(_SH):
+                    elif nk[0] in target_classes:
                         klass.append(ClassShape(target, path, (nk[0],), severity=sev))
                         recovered.append((
                             target, path,

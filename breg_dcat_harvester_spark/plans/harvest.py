@@ -35,6 +35,7 @@ from __future__ import annotations
 import os
 import uuid
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,8 +51,11 @@ from .jobs import MetricsLog, StageRunner
 
 @dataclass
 class HarvestConfig:
+    # names the one extractor boundary (extract.extract_edges' coded
+    # mapInArrow); a class constant callers may pass as extract_edges(impl=),
+    # not a constructor field
+    extract_impl: ClassVar[str] = "arrow"
     out_dir: str
-    extract_impl: str = "arrow"  # mapInArrow production path (pandas/sql twins stay gated)
     emit_provenance: bool = True
     link_threshold: float = 0.8
     strict_validation: bool = False
@@ -68,13 +72,6 @@ class HarvestConfig:
     #                 stage (merge/validate/link/cc/materialize, snapshots,
     #                 resume) is identical.
     source_kind: str = "transcripts"
-    # Fuse the extract+merge head through the coded int32-pred boundary
-    # (merge.merge_triples_transcripts): skips materializing the edges_raw
-    # intermediate entirely — at corpus scale that write IS the cost (the
-    # raw edge set is larger than the deduped graph), and the fused plan is
-    # ~22% faster even in-memory.  Trade-off: resume granularity drops from
-    # (edges_raw, triples) to (triples); transcripts source only.
-    fuse_extract_merge: bool = False
     extra: dict = field(default_factory=dict)
 
 
@@ -111,28 +108,13 @@ def run_harvest(
         edges_raw = runner(
             "edges_raw", lambda: parse_rdf_docs(docs, id_col="source")
         )
-    elif cfg.fuse_extract_merge:
-        from ..operators.merge import merge_triples_transcripts
-
-        transcripts = spark.read.parquet(transcripts_path)
-        edges_raw = None
     else:
         transcripts = spark.read.parquet(transcripts_path)
         edges_raw = runner(
             "edges_raw",
-            lambda: extract_edges(
-                transcripts, emit_provenance=cfg.emit_provenance, impl=cfg.extract_impl
-            ),
+            lambda: extract_edges(transcripts, emit_provenance=cfg.emit_provenance),
         )
-    if cfg.source_kind == "transcripts" and cfg.fuse_extract_merge:
-        merged = runner(
-            "triples",
-            lambda: merge_triples_transcripts(
-                transcripts, emit_provenance=cfg.emit_provenance
-            ),
-        )
-    else:
-        merged = runner("triples", lambda: merge_triples(edges_raw))
+    merged = runner("triples", lambda: merge_triples(edges_raw))
 
     def _validated():
         verdicts = conforms_column(
@@ -242,11 +224,7 @@ def harvest_increment(
     inc_triples = runner(
         "inc_triples",
         lambda: merge_triples(
-            extract_edges(
-                transcripts,
-                emit_provenance=cfg.emit_provenance,
-                impl=cfg.extract_impl,
-            )
+            extract_edges(transcripts, emit_provenance=cfg.emit_provenance)
         ),
     )
     term_cols = ["subj", "pred", "obj", "obj_kind", "lang", "dtype"]

@@ -36,7 +36,7 @@ RDF/XML parseType="Collection"/"Literal"; JSON-LD un-mapped remote
 full recursive descent (anonymous ``[ ]`` property lists and ``( )``
 collections included, with a nesting-depth cap).  Blank node labels
 skolemize to ``urn:skolem:sha2(doc_id|bnode|label)`` —
-content-deterministic like the transcript path (functions/terms.skolem_uri);
+content-deterministic like the transcript path (operators/extract.py);
 anonymous nodes get deterministic per-document labels in parse order, in a
 RESERVED ``|genid|<n>`` sub-namespace that user-written labels cannot
 produce (``|`` is refused in labels), so ``_:genid1`` and an anonymous

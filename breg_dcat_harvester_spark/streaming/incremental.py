@@ -33,7 +33,6 @@ def incremental_harvest(
     transcripts_dir: str,
     out_table: str,
     checkpoint_dir: str,
-    extract_impl: str = "sql",
 ) -> int:
     """Drain all currently-available new transcript files into the edge
     table; returns the number of micro-batches processed."""
@@ -41,7 +40,7 @@ def incremental_harvest(
     n_batches = {"n": 0}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        edges = merge_triples(extract_edges(batch_df, impl=extract_impl))
+        edges = merge_triples(extract_edges(batch_df))
         table.write(edges, mode="append")
         n_batches["n"] += 1
 

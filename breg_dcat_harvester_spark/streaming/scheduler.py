@@ -78,7 +78,6 @@ def run_scheduled_harvests(
     max_runs: int = 1,
     job_timeout_seconds: float | None = None,
     expire_keep: int | None = None,
-    extract_impl: str = "sql",
     now_fn: Callable[[], dt.datetime] | None = None,
     sleep_fn: Callable[[float], None] | None = None,
 ) -> list[dict]:
@@ -108,8 +107,7 @@ def run_scheduled_harvests(
         n_batches = run_with_timeout(
             spark,
             lambda: incremental_harvest(
-                spark, transcripts_dir, out_table, checkpoint_dir,
-                extract_impl=extract_impl,
+                spark, transcripts_dir, out_table, checkpoint_dir
             ),
             job_timeout_seconds,
             group=f"sched-harvest-{i}",

@@ -1,7 +1,7 @@
 """Independent pure-Python row-at-a-time extraction oracle.
 
 Deliberately naive (per-row loops, stdlib only) so it shares no code with the
-vectorized Spark/pandas implementations it checks.  Mirrors the reference's
+vectorized Spark/Arrow extractor it checks.  Mirrors the reference's
 row-at-a-time rdflib semantics (SURVEY.md §1.1) and is the P/R anchor for the
 golden fixtures (FIXTURES.md §3).
 """
@@ -21,13 +21,25 @@ from breg_dcat_harvester_spark.schema import (
     ROLE_NS,
     SKOLEM_NS,
     TOOL_NS,
+    XSD,
 )
 
 _BLOCK = re.compile(r"\[\[([^\[\]]+)\]\]")
 
 
-def extract_row(conv_id, turn_idx, role, text, tool, emit_provenance=True):
-    """Yield (subj, pred, obj) tuples for one turn."""
+def _property_term(key, value):
+    """(obj, obj_kind, lang, dtype) of one ``key=value`` property."""
+    if value.startswith("#"):
+        return BREG_NS + value[1:], "uri", None, None
+    if value.startswith(("http://", "https://", "urn:")):
+        return value, "uri", None, None
+    lang = "en" if key in ("title", "description", "name") else None
+    return value, "literal", lang, XSD + "string"
+
+
+def extract_row_terms(conv_id, turn_idx, role, text, tool, emit_provenance=True):
+    """Yield one (subj, pred, obj, obj_kind, lang, dtype) tuple per emitted
+    edge of one turn, with multiplicity (one set per mention block)."""
     for block in _BLOCK.findall(text or ""):
         parts = block.split("|")
         tag = parts[0]
@@ -50,20 +62,25 @@ def extract_row(conv_id, turn_idx, role, text, tool, emit_provenance=True):
             subj = SKOLEM_NS + digest
         else:
             subj = BREG_NS + local
-        yield (subj, RDF_TYPE, CLASS_URIS[tag])
+        yield (subj, RDF_TYPE, CLASS_URIS[tag], "uri", None, None)
         for key, value in fields:
-            if key not in PRED_URIS or value == "":
+            # a property value is one line; one trailing newline is dropped
+            if value.endswith("\n"):
+                value = value[:-1]
+            if key not in PRED_URIS or value == "" or "\n" in value:
                 continue
-            if value.startswith("#"):
-                obj = BREG_NS + value[1:]
-            else:
-                obj = value
-            yield (subj, PRED_URIS[key], obj)
+            yield (subj, PRED_URIS[key], *_property_term(key, value))
         if emit_provenance:
             if role is not None:
-                yield (subj, PROV_ROLE, ROLE_NS + role)
+                yield (subj, PROV_ROLE, ROLE_NS + role, "uri", None, None)
             if tool is not None:
-                yield (subj, PROV_TOOL, TOOL_NS + tool)
+                yield (subj, PROV_TOOL, TOOL_NS + tool, "uri", None, None)
+
+
+def extract_row(conv_id, turn_idx, role, text, tool, emit_provenance=True):
+    """Yield (subj, pred, obj) tuples for one turn."""
+    for t in extract_row_terms(conv_id, turn_idx, role, text, tool, emit_provenance):
+        yield t[:3]
 
 
 def extract_table(pdf, emit_provenance=True) -> set[tuple[str, str, str]]:

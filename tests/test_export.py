@@ -93,7 +93,7 @@ def test_ntriples_is_map_only(spark):
 def test_partition_lineage_parallelism_invariant(spark, golden_df):
     from breg_dcat_harvester_spark.operators.extract import extract_edges
 
-    edges = extract_edges(golden_df, impl="sql")
+    edges = extract_edges(golden_df)
     a = partition_lineage(edges.repartition(1)).collect()
     b = partition_lineage(edges.repartition(13)).collect()
     key = lambda r: r.bucket  # noqa: E731

@@ -1,5 +1,6 @@
-"""Extraction parity: Spark SQL impl == pandas impl == independent oracle,
-plus the reference's golden 33-triple harvest (README.md:105)."""
+"""Extraction parity: the one extractor (coded mapInArrow boundary) ==
+independent row-at-a-time oracle, plus the reference's golden 33-triple
+harvest (README.md:105)."""
 
 import pandas as pd
 import pytest
@@ -17,18 +18,11 @@ def _triples(df):
 def test_golden_33_triples(spark, golden_df):
     """3 sample-doc turns -> 33 distinct triples after set-union merge,
     mirroring /root/reference/README.md:105 (num_triples: 33)."""
-    edges = extract_edges(golden_df, emit_provenance=False, impl="sql")
+    edges = extract_edges(golden_df, emit_provenance=False)
     assert num_triples(edges) == 33
 
 
-def test_sql_vs_pandas_impl_equality(spark, small_transcripts):
-    sql_t = _triples(extract_edges(small_transcripts, impl="sql"))
-    pd_t = _triples(extract_edges(small_transcripts, impl="pandas"))
-    assert sql_t == pd_t
-    assert len(sql_t) > 100
-
-
-@pytest.mark.parametrize("impl", ["sql", "pandas", "arrow"])
+@pytest.mark.parametrize("impl", ["arrow"])
 def test_parity_vs_oracle(spark, small_transcripts, impl):
     """P/R >= 0.95 target (BASELINE.json); exact equality expected."""
     got = _triples(extract_edges(small_transcripts, impl=impl))
@@ -52,14 +46,39 @@ def test_skolem_deterministic(spark, golden_df):
     df = golden_df.sparkSession.createDataFrame(
         pdf, schema="conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     )
-    t1 = _triples(extract_edges(df, impl="sql"))
-    t2 = _triples(extract_edges(df, impl="pandas"))
-    assert t1 == t2
+    t1 = _triples(extract_edges(df))
+    assert t1 == oracle.extract_table(pdf)
     subs = {s for (s, p, o) in t1 if s.startswith("urn:skolem:")}
     # same local id in different turns -> different skolem URIs (content-keyed)
     assert len(subs) == 2
     # re-running is byte-identical
-    assert t1 == _triples(extract_edges(df, impl="sql"))
+    assert t1 == _triples(extract_edges(df))
+
+
+def test_one_coded_arrow_boundary(spark, small_transcripts):
+    """Extraction crosses the Python boundary once, as one mapInArrow whose
+    output is the five coded columns; no other boundary or impl exists."""
+
+    def nodes(plan):
+        yield plan
+        children = plan.children()
+        for i in range(children.size()):
+            yield from nodes(children.apply(i))
+
+    df = extract_edges(small_transcripts)
+    names = [
+        (n.nodeName(), list(n.schema().fieldNames()))
+        for n in nodes(df._jdf.queryExecution().executedPlan())
+    ]
+    arrow = [cols for name, cols in names if name == "MapInArrow"]
+    assert arrow == [["subj", "pred_code", "obj", "conv_id", "turn_idx"]], names
+    assert not [name for name, _ in names if "MapInPandas" in name], names
+    assert df.columns == [
+        "subj", "pred", "obj", "obj_kind", "lang", "dtype", "conv_id", "turn_idx"
+    ]
+    for impl in ("sql", "pandas"):
+        with pytest.raises(ValueError, match="only 'arrow'"):
+            extract_edges(small_transcripts, impl=impl)
 
 
 def test_merge_set_semantics(spark, golden_df):

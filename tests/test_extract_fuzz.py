@@ -1,19 +1,24 @@
-"""Seeded fuzz: adversarial random transcripts through all three extraction
-implementations (Catalyst SQL, pandas/Arrow, pure-Python oracle).
+"""Seeded fuzz: adversarial random transcripts through the extractor
+(coded mapInArrow kernel + JVM-side decode) against the pure-Python oracle.
 
 The deterministic datagen corpus is well-formed by construction; this test
 hammers the grammar's edge cases — malformed blocks, empty ids, unknown
-tags, unicode, pipes/equals in values, blank-node ids, missing role/tool —
-and asserts exact triple-set equality across implementations (the property
-the driver's P/R gate measures on nice inputs must also hold on nasty ones).
+tags, unicode, pipes/equals in values, blank-node ids, missing role/tool,
+several blocks per turn — and asserts exact equality of all six term
+columns with the oracle (the property the P/R gate measures on nice inputs
+must also hold on nasty ones).
 """
 
+import collections
 import datetime as dt
 import random
 
-from pyspark.sql import functions as F
-
-from breg_dcat_harvester_spark.operators.extract import extract_edges
+from breg_dcat_harvester_spark.operators.extract import (
+    CODED_EDGES,
+    _extract_arrow_core,
+    decode_coded_edges,
+    extract_edges,
+)
 from breg_dcat_harvester_spark.schema import TRANSCRIPTS
 
 from . import oracle
@@ -72,62 +77,32 @@ def test_fuzz_three_way_equality(spark):
     ]
     df = spark.createDataFrame(rows, TRANSCRIPTS)
 
-    def triple_set(edges_df):
-        return {
-            (r.subj, r.pred, r.obj, r.obj_kind, r.lang, r.dtype)
-            for r in edges_df.select(
-                "subj", "pred", "obj", "obj_kind", "lang", "dtype"
-            ).collect()
-        }
-
-    got_sql = triple_set(extract_edges(df, impl="sql"))
-    got_pandas = triple_set(extract_edges(df, impl="pandas"))
-    assert got_sql == got_pandas, (
-        f"sql-only: {list(got_sql - got_pandas)[:3]} "
-        f"pandas-only: {list(got_pandas - got_sql)[:3]}"
-    )
-    got_arrow = triple_set(extract_edges(df, impl="arrow"))
-    assert got_sql == got_arrow, (
-        f"sql-only: {list(got_sql - got_arrow)[:3]} "
-        f"arrow-only: {list(got_arrow - got_sql)[:3]}"
-    )
-
-    # fused coded-boundary harvest must be row-identical to the general
-    # merge over the arrow extract (incl. the JVM-side re-derivation of
-    # obj_kind/lang/dtype from (pred_code, obj))
-    from breg_dcat_harvester_spark.operators.merge import (
-        merge_triples,
-        merge_triples_transcripts,
-    )
-
-    fused = merge_triples_transcripts(df)
-    general = merge_triples(extract_edges(df, impl="arrow"))
-    d = fused.exceptAll(general).count() + general.exceptAll(fused).count()
-    assert d == 0, f"fused coded harvest diverges from general merge by {d} rows"
-
-    expected = set()
-    for conv_id, turn_idx, role, text, tool, _ts in rows:
-        for t in oracle.extract_row(conv_id, turn_idx, role, text, tool):
-            expected.add(t)
-    got_spo = {(s, p, o) for s, p, o, *_ in got_sql}
-    assert got_spo == expected, (
-        f"spark-only: {list(got_spo - expected)[:3]} "
-        f"oracle-only: {list(expected - got_spo)[:3]}"
+    got = {
+        tuple(r)
+        for r in extract_edges(df)
+        .select("subj", "pred", "obj", "obj_kind", "lang", "dtype")
+        .collect()
+    }
+    expected = {
+        t
+        for conv_id, turn_idx, role, text, tool, _ts in rows
+        for t in oracle.extract_row_terms(conv_id, turn_idx, role, text, tool)
+    }
+    assert got == expected, (
+        f"spark-only: {list(got - expected)[:3]} "
+        f"oracle-only: {list(expected - got)[:3]}"
     )
     assert len(expected) > 100, "fuzz corpus should produce a real triple set"
 
 
-def test_fuzz_arrow_vs_pandas_batch():
-    """Batch-level twin equality INCLUDING lineage columns (the spark-level
-    fuzz compares triple identity only).  JVM-free, so this can afford many
-    more rows; exercises the multi-block pandas fallback, null text, and
-    trailing-newline value semantics the RE2 kernels must reproduce."""
-    import pandas as pd
-
-    from breg_dcat_harvester_spark.operators.extract import (
-        extract_triples_arrow_batch,
-        extract_triples_pandas_batch,
-    )
+def test_fuzz_arrow_vs_pandas_batch(spark):
+    """Batch-level equality INCLUDING lineage and multiplicity (the
+    spark-level fuzz compares term sets only): the Arrow kernel's coded rows,
+    decoded by ``decode_coded_edges``, against the oracle row by row.  The
+    kernel runs on one local batch, so this affords many more rows;
+    exercises multi-opener turns, null text, and the trailing-newline value
+    semantics the RE2 kernels must reproduce."""
+    import pyarrow as pa
 
     rng = random.Random(20260818)
     texts = []
@@ -146,23 +121,35 @@ def test_fuzz_arrow_vs_pandas_batch():
         "[[[Agent|id=a|name=n]]",        # overlapping openers, one match
         "[[Agent|id=a]] [[Dataset|id=d|title=T]] [[Agent|id=_:b|name=N]]",
     ]
-    pdf = pd.DataFrame(
-        {
-            "conv_id": [f"c{i % 13}" for i in range(len(texts))],
-            "turn_idx": pd.array(range(len(texts)), dtype="int32"),
-            "role": [random.Random(i).choice(["user", "asst", None]) for i in range(len(texts))],
-            "tool": [random.Random(i + 1).choice(["search", None]) for i in range(len(texts))],
-            "text": texts,
-        }
-    )
+    n = len(texts)
+    conv = [f"c{i % 13}" for i in range(n)]
+    role = [random.Random(i).choice(["user", "asst", None]) for i in range(n)]
+    tool = [random.Random(i + 1).choice(["search", None]) for i in range(n)]
     for ep in (True, False):
-        a = extract_triples_pandas_batch(pdf, emit_provenance=ep)
-        b = extract_triples_arrow_batch(pdf, emit_provenance=ep)
-        key = lambda df: sorted(  # noqa: E731
-            map(tuple, df.fillna("«null»").itertuples(index=False))
+        coded = _extract_arrow_core(
+            pa.array(texts, pa.string()),
+            pa.array(conv, pa.string()),
+            pa.array(range(n), pa.int32()),
+            pa.array(role, pa.string()),
+            pa.array(tool, pa.string()),
+            emit_provenance=ep,
         )
-        assert key(a) == key(b), (
-            f"emit_provenance={ep}: pandas {len(a)} rows vs arrow {len(b)}"
+        assert [str(t) for t in coded.schema.types] == [
+            "string", "int32", "string", "string", "int32"
+        ]
+        decoded = decode_coded_edges(
+            spark.createDataFrame(coded.to_pandas(), schema=CODED_EDGES)
         )
-        assert str(b["turn_idx"].dtype) == "int32"
-    assert len(a) > 500
+        got = collections.Counter(map(tuple, decoded.collect()))
+        expected = collections.Counter(
+            (*t, conv[i], i)
+            for i in range(n)
+            for t in oracle.extract_row_terms(
+                conv[i], i, role[i], texts[i], tool[i], emit_provenance=ep
+            )
+        )
+        assert got == expected, (
+            f"emit_provenance={ep}: kernel-only {list((got - expected).items())[:3]} "
+            f"oracle-only {list((expected - got).items())[:3]}"
+        )
+    assert sum(got.values()) > 500

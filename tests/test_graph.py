@@ -131,7 +131,7 @@ def test_kcore_fixpoint_invariant_on_corpus(spark, small_transcripts):
     from breg_dcat_harvester_spark.operators.graph import kcore
     from breg_dcat_harvester_spark.operators.merge import merge_triples
 
-    m = merge_triples(extract_edges(small_transcripts, impl="sql"))
+    m = merge_triples(extract_edges(small_transcripts))
     a = sorted(map(tuple, kcore(m, k=3, rounds=6).collect()))
     b = sorted(map(tuple, kcore(m, k=3, rounds=10).collect()))
     assert a == b and len(a) > 0

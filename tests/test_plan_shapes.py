@@ -42,7 +42,6 @@ def _ops(df) -> list[str]:
 # the driver parquet, and the extract->merge head of the harvest.
 EXCHANGE_BUDGET = {
     "kg_harvest_triples": 1,  # the set-union dedup groupBy; extract is map-only
-    "kg_harvest_triples_coded": 1,  # same dedup shuffle, coded boundary
     "text_features": 0,  # pure Column exprs over the documents scan
     "text_repetition": 0,
     "sample_stratified": 0,  # Bernoulli sha-bucket filter: map-side only

@@ -325,7 +325,7 @@ def test_ntriples_roundtrip_through_writer(spark, small_transcripts):
     from breg_dcat_harvester_spark.operators.extract import extract_edges
     from breg_dcat_harvester_spark.sources.rdf_io import to_ntriples
 
-    edges = merge_triples(extract_edges(small_transcripts, impl="sql"))
+    edges = merge_triples(extract_edges(small_transcripts))
     lines = [r.ntriple for r in to_ntriples(edges).collect()]
     ts = parse_rdf_text("\n".join(lines), "nt", base="", doc_id="rt")
     want = {

@@ -48,7 +48,7 @@ def test_missed_runs_coalesce_to_one_catchup(spark, tmp_path, small_transcripts)
     assert clock.sleeps == []  # catch-up fired immediately, no waiting
     assert recs[0]["batches"] >= 1
     got = read_merged(spark, out).count()
-    want = merge_triples(extract_edges(small_transcripts, impl="sql")).count()
+    want = merge_triples(extract_edges(small_transcripts)).count()
     assert got == want
 
     # second tick: nothing new -> drains zero-row batch or none; cadence

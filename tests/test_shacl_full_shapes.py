@@ -401,7 +401,31 @@ ex:S a sh:NodeShape ; sh:targetClass ex:T ;
 """
     cb = load_shacl_shapes(bogus)
     assert len(cb.skipped) == 1 and "nodeKind" in cb.skipped[0][2]
-    # annotation-only predicates (sh:name/sh:message/...) do NOT skip:
-    # the COMPLETE reference file compiles with zero skips
-    ref = load_reference_shapes()
-    assert len(ref.skipped) == 0
+    # a non-SHACL nodeKind that no shape of the document targets (a typo'd
+    # or foreign value) refuses too: no class constraint is invented
+    weird = """
+@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix ex: <http://ex/> .
+ex:S a sh:NodeShape ; sh:targetClass ex:T ;
+  sh:property [ sh:path ex:p ; sh:nodeKind ex:Weird ;
+                sh:severity sh:Violation ] .
+"""
+    cw = load_shacl_shapes(weird)
+    assert [s[2] for s in cw.skipped] == ["unsupported nodeKind http://ex/Weird"]
+    assert cw.klass == () and cw.recovered == ()
+    # ...while one naming a class the same document targets is recovered as
+    # a class constraint (the reference file's eli:LegalResource row)
+    targeted = """
+@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix ex: <http://ex/> .
+ex:S a sh:NodeShape ; sh:targetClass ex:T ;
+  sh:property [ sh:path ex:p ; sh:nodeKind ex:U ;
+                sh:severity sh:Violation ] .
+ex:SU a sh:NodeShape ; sh:targetClass ex:U .
+"""
+    ct = load_shacl_shapes(targeted)
+    assert ct.skipped == ()
+    assert [(k.target_class, k.path, k.classes) for k in ct.klass] == [
+        ("http://ex/T", "http://ex/p", ("http://ex/U",))
+    ]
+    assert [r[2] for r in ct.recovered] == ["nodeKind http://ex/U -> class constraint"]

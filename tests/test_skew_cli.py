@@ -48,7 +48,7 @@ def test_cli_harvest_and_facets(tmp_path):
         "import sys; sys.path.insert(0, '/root/repo'); "
         "from breg_dcat_harvester_spark.cli import main; "
         f"sys.exit(main(['harvest', '--transcripts', {src!r}, '--out', {out!r}, "
-        "'--impl', 'sql', '--buckets', '4']))"
+        "'--buckets', '4']))"
     )
     res = subprocess.run(
         [sys.executable, "-c", env_code], capture_output=True, text=True, timeout=420
@@ -98,7 +98,7 @@ def test_partition_metrics(spark, tmp_path, small_transcripts):
 
     src = str(tmp_path / "t")
     small_transcripts.limit(200).write.parquet(src)
-    cfg = HarvestConfig(out_dir=str(tmp_path / "kg"), extract_impl="sql", num_buckets=4)
+    cfg = HarvestConfig(out_dir=str(tmp_path / "kg"), num_buckets=4)
     res = run_harvest(spark, src, cfg, run_id="m-run")
     m = MetricsLog(spark, str(tmp_path / "kg" / "metrics")).read()
     rows = m.filter((F.col("run_id") == "m-run") & (F.col("stage") == "edges"))
@@ -144,20 +144,20 @@ def test_cli_harvest_increment(spark, tmp_path, small_transcripts, capsys):
 
     base_out = str(tmp_path / "kg_base")
     run_harvest(
-        spark, base_src, HarvestConfig(out_dir=base_out, extract_impl="sql"),
+        spark, base_src, HarvestConfig(out_dir=base_out),
         run_id="b",
     )
     rc = main([
         "harvest-increment", "--base", base_out,
         "--transcripts", inc_src, "--out", str(tmp_path / "kg_inc"),
-        "--impl", "sql", "--buckets", "4",
+        "--buckets", "4",
     ])
     assert rc == 0
     out = capsys.readouterr().out
     payload = json.loads([l for l in out.splitlines() if l.startswith("{")][-1])
     batch = run_harvest(
         spark, all_src,
-        HarvestConfig(out_dir=str(tmp_path / "kg_all"), extract_impl="sql"),
+        HarvestConfig(out_dir=str(tmp_path / "kg_all")),
         run_id="a",
     )
     assert payload["num_triples"] == batch["num_triples"]

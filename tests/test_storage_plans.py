@@ -180,7 +180,7 @@ def test_harvest_run_and_resume(spark, tmp_path, small_transcripts):
     src = str(tmp_path / "transcripts")
     small_transcripts.write.parquet(src)
 
-    cfg = HarvestConfig(out_dir=str(tmp_path / "out"), extract_impl="sql")
+    cfg = HarvestConfig(out_dir=str(tmp_path / "out"))
     res1 = run_harvest(spark, src, cfg, run_id="run-a")
     assert res1["num_triples"] > 0
     assert [s["stage"] for s in res1["stages"]] == [
@@ -293,7 +293,7 @@ def test_snapshot_schemas_recorded(spark, tmp_path, small_transcripts):
     read, by inference, and the run still resumes from them."""
     src = str(tmp_path / "transcripts")
     small_transcripts.limit(200).write.parquet(src)
-    cfg = HarvestConfig(out_dir=str(tmp_path / "out"), extract_impl="sql")
+    cfg = HarvestConfig(out_dir=str(tmp_path / "out"))
     res = run_harvest(spark, src, cfg, run_id="run-s")
     tables = {
         name: LocalSnapshotTable(os.path.join(cfg.out_dir, name))
@@ -395,33 +395,6 @@ def test_iceberg_branch_selected_and_writer_calls(spark):
     assert reads == [("table", "cat.db.tbl")]
 
 
-@pytest.mark.slow
-def test_harvest_fused_extract_merge_equivalent(spark, tmp_path, small_transcripts):
-    """fuse_extract_merge=True skips the edges_raw checkpoint (the raw edge
-    set is never materialized) and produces the identical final graph."""
-    src = str(tmp_path / "transcripts")
-    small_transcripts.write.parquet(src)
-
-    plain = run_harvest(
-        spark,
-        src,
-        HarvestConfig(out_dir=str(tmp_path / "out_plain")),
-        run_id="run-p",
-    )
-    fused = run_harvest(
-        spark,
-        src,
-        HarvestConfig(out_dir=str(tmp_path / "out_fused"), fuse_extract_merge=True),
-        run_id="run-f",
-    )
-    assert fused["num_triples"] == plain["num_triples"]
-    stages_f = [s["stage"] for s in fused["stages"]]
-    assert "edges_raw" not in stages_f and stages_f[0] == "triples"
-    a = spark.read.parquet(str(tmp_path / "out_plain" / "edges" / "data"))
-    b = spark.read.parquet(str(tmp_path / "out_fused" / "edges" / "data"))
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
 def test_harvest_increment_equals_batch(spark, tmp_path, small_transcripts):
     """harvest_increment over a conversation shard == run_harvest over the
     combined corpus: identical triple/valid/canonical-edge TERM sets,
@@ -440,10 +413,10 @@ def test_harvest_increment_equals_batch(spark, tmp_path, small_transcripts):
     small_transcripts.filter(is_inc).write.parquet(inc_src)
     small_transcripts.write.parquet(all_src)
 
-    cfg_base = HarvestConfig(out_dir=str(tmp_path / "out_base"), extract_impl="sql")
+    cfg_base = HarvestConfig(out_dir=str(tmp_path / "out_base"))
     run_harvest(spark, base_src, cfg_base, run_id="base")
 
-    cfg_inc = HarvestConfig(out_dir=str(tmp_path / "out_inc"), extract_impl="sql")
+    cfg_inc = HarvestConfig(out_dir=str(tmp_path / "out_inc"))
     res_inc = harvest_increment(
         spark, cfg_base.out_dir, inc_src, cfg_inc, run_id="inc"
     )
@@ -452,7 +425,7 @@ def test_harvest_increment_equals_batch(spark, tmp_path, small_transcripts):
         "valid_triples", "links", "cc_labels", "edges", "nodes", "lineage",
     ]
 
-    cfg_all = HarvestConfig(out_dir=str(tmp_path / "out_all"), extract_impl="sql")
+    cfg_all = HarvestConfig(out_dir=str(tmp_path / "out_all"))
     res_all = run_harvest(spark, all_src, cfg_all, run_id="all")
 
     assert res_inc["num_triples"] == res_all["num_triples"]
