@@ -34,8 +34,14 @@ from breg_dcat_harvester_spark.operators.extract import extract_edges
 from breg_dcat_harvester_spark.operators.merge import merge_triples
 from breg_dcat_harvester_spark.plans import sparql as sprq
 from breg_dcat_harvester_spark.operators.validate import (
-    DEFAULT_SHAPES,
-    validation_report,
+    CompiledShapes,
+    ValueShape,
+    conforms_column,
+    full_shapes_report,
+    full_shapes_report_incremental,
+    load_reference_shapes,
+    packaged_shapes,
+    partition_valid,
 )
 from breg_dcat_harvester_spark.schema import (
     CLASS_URIS,
@@ -47,6 +53,19 @@ from breg_dcat_harvester_spark.schema import (
 )
 
 # --- helpers -----------------------------------------------------------------
+
+# SHACL value-level constraints for kg_validation_value_violations:
+# identifiers of the first 500 datasets conform and later ones violate the
+# pattern (a REAL partial failure, not an always-true/always-false check)
+_VALUE_SHAPES = CompiledShapes(value=(
+    ValueShape(CLASS_URIS["Dataset"], DCT + "identifier",
+               pattern="^DS-000[0-4][0-9]$"),
+    ValueShape(CLASS_URIS["Dataset"], DCT + "title",
+               datatype="http://www.w3.org/1999/02/22-rdf-syntax-ns#langString",
+               severity="Warning"),
+    ValueShape(CLASS_URIS["Catalog"], DCT + "publisher", node_kind="IRI"),
+    ValueShape(CLASS_URIS["Dataset"], DCAT + "theme", node_kind="IRI"),
+))
 
 SEARCH_FILTERS = {"theme": [THEMES[0], THEMES[1]], "language": [LANGUAGES[0]]}
 
@@ -264,31 +283,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["kg_negative_samples"] = _kg_negatives
 
     # SHACL value-level constraints (sh:nodeKind / sh:datatype /
-    # sh:pattern) beyond the cardinality report: per-edge codegen'd
-    # predicates, ONE subj equi-join of the typed and constrained slices
-    def _kg_value_violations(spark, sf):
-        from breg_dcat_harvester_spark.operators.validate import (
-            ValueShape,
-            value_violations,
-        )
-
-        shapes = [
-            # identifiers of the first 500 datasets conform; later ones
-            # violate the pattern (a REAL partial failure, not a synthetic
-            # always-true/always-false check)
-            ValueShape(CLASS_URIS["Dataset"], DCT + "identifier",
-                       pattern="^DS-000[0-4][0-9]$"),
-            ValueShape(CLASS_URIS["Dataset"], DCT + "title",
-                       datatype="http://www.w3.org/1999/02/22-rdf-syntax-ns#langString",
-                       severity="Warning"),
-            ValueShape(CLASS_URIS["Catalog"], DCT + "publisher",
-                       node_kind="IRI"),
-            ValueShape(CLASS_URIS["Dataset"], DCAT + "theme",
-                       node_kind="IRI"),
-        ]
-        return value_violations(_merged(spark, sf), shapes)
-
-    q["kg_validation_value_violations"] = _kg_value_violations
+    # sh:pattern): per-edge codegen'd predicates, ONE subj equi-join of the
+    # typed and constrained slices
+    q["kg_validation_value_violations"] = lambda spark, sf: full_shapes_report(
+        _merged(spark, sf), _VALUE_SHAPES
+    )
 
     # The COMPLETE BRegDCAT-AP 2.0 shapes file, compiled from the
     # reference's own ontology/BRegDCAT-AP_shacl_shapes_2.00.ttl at runtime
@@ -300,11 +299,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Oracle: the same compiled rows rendered as DuckDB VALUES lists by
     # _full_shapes_sql below.
     def _kg_full_shapes(spark, sf):
-        from breg_dcat_harvester_spark.operators.validate import (
-            full_shapes_report,
-            load_reference_shapes,
-        )
-
         return full_shapes_report(_merged(spark, sf), load_reference_shapes())
 
     q["kg_validation_full_shapes"] = _kg_full_shapes
@@ -317,11 +311,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # to the shard.  Oracle: the from-scratch full-graph report restricted
     # to the shard's subjects — incremental ≡ batch is the contract.
     def _kg_full_shapes_inc(spark, sf):
-        from breg_dcat_harvester_spark.operators.validate import (
-            full_shapes_report_incremental,
-            load_reference_shapes,
-        )
-
         st = _inc_state(spark, sf, provenance=True)
         return full_shapes_report_incremental(
             st["base"], st["new"], load_reference_shapes()
@@ -354,17 +343,31 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         _merged(spark, sf)
     )
 
-    # A8/P2: SHACL cardinality violations
+    # A8/P2: SHACL cardinality violations of the packaged shapes: the
+    # harvest's own report rows, with each path's count and bounds
     def _violations(spark, sf):
-        rep = validation_report(_merged(spark, sf))
-        return rep.select(
-            "subj",
-            "entity_type",
-            "path",
-            F.col("count").cast("long").alias("n_actual"),
-            F.col("min_count").cast("long").alias("n_min"),
-            F.coalesce(F.col("max_count").cast("long"), F.lit(-1)).alias("n_max"),
-            "severity",
+        merged = _merged(spark, sf)
+        shapes = packaged_shapes()
+        bounds = spark.createDataFrame(
+            [
+                (s.target_class, s.path, s.min_count,
+                 -1 if s.max_count is None else s.max_count)
+                for s in shapes.cardinality
+            ],
+            "entity_type string, path string, n_min long, n_max long",
+        )
+        counts = merged.groupBy("subj", F.col("pred").alias("path")).agg(
+            F.count_distinct("obj").alias("n_actual")
+        )
+        return (
+            full_shapes_report(merged, shapes)
+            .join(F.broadcast(bounds), ["entity_type", "path"])
+            .join(counts, ["subj", "path"], "left")
+            .select(
+                "subj", "entity_type", "path",
+                F.coalesce("n_actual", F.lit(0)).alias("n_actual"),
+                "n_min", "n_max", "severity",
+            )
         )
 
     q["kg_validation_violations"] = _violations
@@ -373,8 +376,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # only Violation-severity results fail, validator.py:46-48) vs strict
     # (any severity fails) side by side
     def _conformance(spark, sf):
-        from breg_dcat_harvester_spark.operators.validate import conforms_column
-
         merged = _merged(spark, sf)
         lenient = conforms_column(merged, strict=False)
         strict = conforms_column(merged, strict=True).withColumnRenamed(
@@ -1083,11 +1084,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # recursive-CTE CC → canonical rewrite): the incrementally-maintained
     # graph must equal the from-scratch graph, term for term.
     def _harvest_incremental(spark, sf):
-        from breg_dcat_harvester_spark.operators.validate import (
-            conforms_column,
-            partition_valid,
-        )
-
         st = _inc_state(spark, sf, provenance=True)
         base, new = st["base"], st["new"]
         tc = ["subj", "pred", "obj", "obj_kind", "lang", "dtype"]
@@ -1123,7 +1119,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         sl = base.join(touched, "subj", "left_semi").unionByName(delta)
 
         base_valid = st["base_valid"]
-        valid_touched, _ = partition_valid(sl, conforms_column(sl))
+        valid_touched, _ = partition_valid(
+            sl, conforms_column(sl, type_edges=base.unionByName(delta))
+        )
         valid = base_valid.join(touched, "subj", "left_anti").unionByName(
             valid_touched
         ).localCheckpoint(eager=True)
@@ -1886,10 +1884,10 @@ def _sqlq(s: str | None) -> str:
     return "NULL" if s is None else "'" + s.replace("'", "''") + "'"
 
 
-def _full_shapes_sql(glob: str, incremental: bool = False) -> str:
-    """DuckDB replay of full_shapes_report: the SAME compiled constraint
-    rows (parsed from the reference's shapes file) rendered as VALUES
-    lists — the oracle shares the shape DATA but re-implements every check
+def _full_shapes_sql(c: CompiledShapes, glob: str, incremental: bool = False) -> str:
+    """DuckDB replay of full_shapes_report over the CompiledShapes ``c``:
+    the SAME compiled constraint rows rendered as VALUES lists — the
+    oracle shares the shape DATA but re-implements every check
     independently in SQL.
 
     ``incremental=True`` gates full_shapes_report_incremental: the SAME
@@ -1898,36 +1896,50 @@ def _full_shapes_sql(glob: str, incremental: bool = False) -> str:
     0/4/8/c — the engine's exact split).  Checks over full-graph state
     (cardinality counts, sh:class object types) stay full-graph, so the
     oracle asserts incremental ≡ batch-restricted-to-touched."""
-    from breg_dcat_harvester_spark.operators.validate import (
-        load_reference_shapes,
-    )
 
-    c = load_reference_shapes()
-    card_rows = ",\n    ".join(
-        f"({_sqlq(s.target_class)}, {_sqlq(s.path)}, {s.min_count}, "
-        f"{'NULL' if s.max_count is None else s.max_count}, {_sqlq(s.severity)})"
-        for s in c.cardinality
+    def values(rows, *types):
+        # an empty family renders one all-NULL row, which matches no entity
+        return ",\n    ".join(rows) or "(" + ", ".join(
+            f"CAST(NULL AS {t})" for t in types
+        ) + ")"
+
+    card_rows = values(
+        [
+            f"({_sqlq(s.target_class)}, {_sqlq(s.path)}, {s.min_count}, "
+            f"{'NULL' if s.max_count is None else s.max_count}, {_sqlq(s.severity)})"
+            for s in c.cardinality
+        ],
+        "VARCHAR", "VARCHAR", "INTEGER", "INTEGER", "VARCHAR",
     )
-    val_rows = ",\n    ".join(
-        f"({_sqlq(s.target_class)}, {_sqlq(s.path)}, {_sqlq(s.node_kind)}, "
-        f"{_sqlq(s.datatype)}, {_sqlq(s.pattern)}, {_sqlq(s.severity)}, "
-        + (
-            "[" + ", ".join(_sqlq(x) for x in s.datatype_any) + "]"
-            if s.datatype_any else "CAST(NULL AS VARCHAR[])"
-        )
-        + ")"
-        for s in c.value
+    val_rows = values(
+        [
+            f"({_sqlq(s.target_class)}, {_sqlq(s.path)}, {_sqlq(s.node_kind)}, "
+            f"{_sqlq(s.datatype)}, {_sqlq(s.pattern)}, {_sqlq(s.severity)}, "
+            + (
+                "[" + ", ".join(_sqlq(x) for x in s.datatype_any) + "]"
+                if s.datatype_any else "CAST(NULL AS VARCHAR[])"
+            )
+            + ")"
+            for s in c.value
+        ],
+        *["VARCHAR"] * 6, "VARCHAR[]",
     )
-    cls_rows = ",\n    ".join(
-        f"({_sqlq(s.target_class)}, {_sqlq(s.path)}, "
-        "[" + ", ".join(_sqlq(x) for x in s.classes) + "], "
-        f"{_sqlq(s.severity)})"
-        for s in c.klass
+    cls_rows = values(
+        [
+            f"({_sqlq(s.target_class)}, {_sqlq(s.path)}, "
+            "[" + ", ".join(_sqlq(x) for x in s.classes) + "], "
+            f"{_sqlq(s.severity)})"
+            for s in c.klass
+        ],
+        "VARCHAR", "VARCHAR", "VARCHAR[]", "VARCHAR",
     )
-    hv_rows = ",\n    ".join(
-        f"({_sqlq(s.target_class)}, {_sqlq(s.path)}, {_sqlq(s.value)}, "
-        f"{_sqlq(s.severity)})"
-        for s in c.has_value
+    hv_rows = values(
+        [
+            f"({_sqlq(s.target_class)}, {_sqlq(s.path)}, {_sqlq(s.value)}, "
+            f"{_sqlq(s.severity)})"
+            for s in c.has_value
+        ],
+        *["VARCHAR"] * 4,
     )
     _ls = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
     _xs = "http://www.w3.org/2001/XMLSchema#string"
@@ -2234,57 +2246,21 @@ SELECT subj, pred, obj, 'uri' AS obj_kind,
 FROM uri3
 """
 
-    # SHACL value constraints: same slices, same effective-datatype rule,
-    # one UNION ALL branch per constraint kind, DISTINCT at the end
-    _vv_rdf_ls = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
-    sql["kg_validation_value_violations"] = f"""
-WITH t AS (
-    SELECT DISTINCT subj, pred, obj, obj_kind, lang, dtype
-    FROM {osql.edges_sql(glob)} AS _e
-),
-typed AS (
-    SELECT DISTINCT subj, obj AS entity_type FROM t WHERE pred = '{RDF_TYPE}'
-),
-shapes(target_class, path, node_kind, datatype, pattern, severity) AS (VALUES
-    ('{CLASS_URIS["Dataset"]}', '{DCT}identifier', NULL, NULL,
-     '^DS-000[0-4][0-9]$', 'Violation'),
-    ('{CLASS_URIS["Dataset"]}', '{DCT}title', NULL, '{_vv_rdf_ls}', NULL,
-     'Warning'),
-    ('{CLASS_URIS["Catalog"]}', '{DCT}publisher', 'IRI', NULL, NULL,
-     'Violation'),
-    ('{CLASS_URIS["Dataset"]}', '{DCAT}theme', 'IRI', NULL, NULL,
-     'Violation')
-),
-j AS (
-    SELECT v.subj, ty.entity_type, v.pred AS path, v.obj AS value,
-           v.obj_kind, s.node_kind, s.datatype, s.pattern, s.severity,
-           CASE WHEN v.obj_kind <> 'literal' THEN NULL
-                WHEN v.lang IS NOT NULL THEN '{_vv_rdf_ls}'
-                ELSE coalesce(v.dtype, 'http://www.w3.org/2001/XMLSchema#string')
-           END AS eff_dtype
-    FROM t v
-    JOIN typed ty ON ty.subj = v.subj
-    JOIN shapes s ON s.target_class = ty.entity_type AND s.path = v.pred
-)
-SELECT DISTINCT subj, entity_type, path, value, check_kind, severity FROM (
-    SELECT subj, entity_type, path, value, 'nodeKind' AS check_kind, severity
-    FROM j WHERE node_kind IS NOT NULL AND (
-        (node_kind = 'IRI' AND obj_kind <> 'uri')
-        OR (node_kind = 'Literal' AND obj_kind <> 'literal'))
-    UNION ALL
-    SELECT subj, entity_type, path, value, 'datatype', severity
-    FROM j WHERE datatype IS NOT NULL AND (
-        obj_kind <> 'literal' OR eff_dtype IS DISTINCT FROM datatype)
-    UNION ALL
-    SELECT subj, entity_type, path, value, 'pattern', severity
-    FROM j WHERE pattern IS NOT NULL AND NOT regexp_matches(value, pattern)
-)
-"""
+    sql["kg_validation_value_violations"] = _full_shapes_sql(_VALUE_SHAPES, glob)
 
-    sql["kg_validation_full_shapes"] = _full_shapes_sql(glob)
-    sql["kg_validation_full_shapes_incremental"] = _full_shapes_sql(
-        glob, incremental=True
-    )
+    # without the reference checkout only these two oracles fail, with
+    # the loader's error, when they run
+    try:
+        ref = load_reference_shapes()
+    except FileNotFoundError as ex:
+        missing = f"SELECT error({_sqlq(f'FileNotFoundError: {ex}')})"
+        sql["kg_validation_full_shapes"] = missing
+        sql["kg_validation_full_shapes_incremental"] = missing
+    else:
+        sql["kg_validation_full_shapes"] = _full_shapes_sql(ref, glob)
+        sql["kg_validation_full_shapes_incremental"] = _full_shapes_sql(
+            ref, glob, incremental=True
+        )
 
     from breg_dcat_harvester_spark.operators.negatives import (
         oracle_negative_samples_sql,
@@ -2438,54 +2414,41 @@ SELECT (('0x' || substr(sha256('lineage:' || conv_id), 1, 8))::BIGINT % 64) AS b
 FROM m GROUP BY 1
 """
 
-    shapes_rows = ", ".join(
-        "('{}', '{}', {}, {}, '{}')".format(
-            s.target_class, s.path, s.min_count,
-            s.max_count if s.max_count is not None else "NULL", s.severity,
-        )
-        for s in DEFAULT_SHAPES
+    # the packaged shapes' report rows, with each path's count and bounds
+    packaged_viol = _full_shapes_sql(packaged_shapes(), glob)
+    bounds = ", ".join(
+        f"({_sqlq(s.target_class)}, {_sqlq(s.path)}, {s.min_count}, "
+        f"{-1 if s.max_count is None else s.max_count})"
+        for s in packaged_shapes().cardinality
     )
     sql["kg_validation_violations"] = f"""
-WITH edges AS (SELECT DISTINCT subj, pred, obj FROM {osql.edges_sql(glob)} AS _e),
-typed AS (SELECT DISTINCT subj, obj AS entity_type FROM edges WHERE pred = '{RDF_TYPE}'),
+WITH viol AS ({packaged_viol}),
+bounds(entity_type, path, n_min, n_max) AS (VALUES {bounds}),
 counts AS (
-    SELECT subj, pred, count(DISTINCT obj) AS cnt FROM edges
-    WHERE pred <> '{RDF_TYPE}' GROUP BY subj, pred
-),
-shapes(target_class, path, min_count, max_count, severity) AS (VALUES {shapes_rows})
-SELECT t.subj, t.entity_type, s.path,
-       CAST(coalesce(c.cnt, 0) AS BIGINT) AS n_actual,
-       CAST(s.min_count AS BIGINT) AS n_min,
-       CAST(coalesce(s.max_count, -1) AS BIGINT) AS n_max,
-       s.severity
-FROM typed t
-JOIN shapes s ON t.entity_type = s.target_class
-LEFT JOIN counts c ON c.subj = t.subj AND c.pred = s.path
-WHERE coalesce(c.cnt, 0) < s.min_count
-   OR (s.max_count IS NOT NULL AND coalesce(c.cnt, 0) > s.max_count)
+    SELECT subj, pred AS path, count(DISTINCT obj) AS n_actual
+    FROM {osql.edges_sql(glob)} AS _e GROUP BY subj, pred
+)
+SELECT v.subj, v.entity_type, v.path,
+       CAST(coalesce(c.n_actual, 0) AS BIGINT) AS n_actual,
+       CAST(b.n_min AS BIGINT) AS n_min, CAST(b.n_max AS BIGINT) AS n_max,
+       v.severity
+FROM viol v
+JOIN bounds b ON b.entity_type = v.entity_type AND b.path = v.path
+LEFT JOIN counts c ON c.subj = v.subj AND c.path = v.path
 """
 
+    # verdicts: no report row over the packaged shapes (lenient: no
+    # Violation row)
     sql["kg_conformance_verdicts"] = f"""
-WITH edges AS (SELECT DISTINCT subj, pred, obj FROM {osql.edges_sql(glob)} AS _e),
-typed AS (SELECT DISTINCT subj FROM edges WHERE pred = '{RDF_TYPE}'),
-typed_cls AS (SELECT DISTINCT subj, obj AS entity_type FROM edges WHERE pred = '{RDF_TYPE}'),
-counts AS (
-    SELECT subj, pred, count(DISTINCT obj) AS cnt FROM edges
-    WHERE pred <> '{RDF_TYPE}' GROUP BY subj, pred
-),
-shapes(target_class, path, min_count, max_count, severity) AS (VALUES {shapes_rows}),
-viol AS (
-    SELECT t.subj, s.severity
-    FROM typed_cls t
-    JOIN shapes s ON t.entity_type = s.target_class
-    LEFT JOIN counts c ON c.subj = t.subj AND c.pred = s.path
-    WHERE coalesce(c.cnt, 0) < s.min_count
-       OR (s.max_count IS NOT NULL AND coalesce(c.cnt, 0) > s.max_count)
+WITH viol AS ({packaged_viol}),
+typed AS (
+    SELECT DISTINCT subj FROM {osql.edges_sql(glob)} AS _e
+    WHERE pred = '{RDF_TYPE}'
 )
-SELECT t.subj,
-       t.subj NOT IN (SELECT subj FROM viol WHERE severity = 'Violation') AS conforms,
-       t.subj NOT IN (SELECT subj FROM viol) AS conforms_strict
-FROM typed t
+SELECT subj,
+       subj NOT IN (SELECT subj FROM viol WHERE severity = 'Violation') AS conforms,
+       subj NOT IN (SELECT subj FROM viol) AS conforms_strict
+FROM typed
 """
 
     from breg_dcat_harvester_spark import fixtures as fx
@@ -3156,22 +3119,9 @@ SELECT x AS node_id, min(c) AS canonical_id FROM walk GROUP BY x
     sql["kg_harvest_incremental"] = f"""
 WITH RECURSIVE eraw AS (SELECT * FROM {osql.edges_sql(glob)} AS _e),
 edges AS (SELECT DISTINCT subj, pred, obj, obj_kind, lang, dtype FROM eraw),
-typed_cls AS (
-    SELECT DISTINCT subj, obj AS entity_type FROM edges WHERE pred = '{RDF_TYPE}'
-),
-vcounts AS (
-    SELECT subj, pred, count(DISTINCT obj) AS cnt FROM edges
-    WHERE pred <> '{RDF_TYPE}' GROUP BY subj, pred
-),
-shapes(target_class, path, min_count, max_count, severity) AS (VALUES {shapes_rows}),
 viol AS (
-    SELECT DISTINCT t.subj
-    FROM typed_cls t
-    JOIN shapes s ON t.entity_type = s.target_class
-    LEFT JOIN vcounts c ON c.subj = t.subj AND c.pred = s.path
-    WHERE s.severity = 'Violation'
-      AND (coalesce(c.cnt, 0) < s.min_count
-           OR (s.max_count IS NOT NULL AND coalesce(c.cnt, 0) > s.max_count))
+    SELECT DISTINCT subj FROM ({packaged_viol}) AS _v
+    WHERE severity = 'Violation'
 ),
 valid AS (
     SELECT * FROM edges WHERE subj NOT IN (SELECT subj FROM viol)

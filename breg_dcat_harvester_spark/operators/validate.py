@@ -1,32 +1,35 @@
-"""SHACL-style validation as DataFrame aggregations (SURVEY.md §2.2/2.4).
+"""SHACL validation as DataFrame operations (SURVEY.md §2.2/2.4).
 
 The reference outsources validation to the remote ITB SHACL API
 (validator.py:14-15,56-71) and checks the report for ``sh:conforms true``,
 falling back (non-strict) to "no sh:Violation results" (validator.py:34-53).
-In-engine we evaluate the same *class* of constraints — min/max cardinality
-per (targetClass, property), the core of the BRegDCAT-AP shapes
-(e.g. Catalog: >=1 dct:description, exactly 1 dct:identifier, >=1 dct:title,
-exactly 1 dct:publisher; Agent: >=1 foaf:name —
-BRegDCAT-AP_shacl_shapes_2.00.ttl:717-760 region) — directly on the edge
-table with groupBy().count() per entity.
+In-engine, a SHACL shapes document compiles to constraint rows
+(``load_shacl_shapes`` -> ``CompiledShapes``) and ``full_shapes_report``
+evaluates every compiled family on the edge table: min/max cardinality,
+value checks (sh:nodeKind / sh:datatype / sh:pattern), sh:class and
+sh:hasValue.  Every verdict comes from that one report.  The harvest
+gates on the packaged document (``PACKAGED_SHAPES_TTL``); the reference's
+complete shapes file compiles through the same path.
 
 Semantics preserved:
 * P1  validate-then-gate: ``harvest.py:41-47`` aborts the whole job if any
   source is invalid (all-or-nothing) — ``gate_all_or_nothing``.
 * P2/P3 strict vs lenient: strict requires full conformance; lenient accepts
-  entities with no *Violation*-severity result.  We tag each constraint with
-  a severity; lenient mode only fails on 'Violation'.
+  entities with no *Violation*-severity result.  Each constraint carries its
+  sh:severity; lenient mode only fails on 'Violation'.
 * P4  disabled validator (DummyValidator, validator.py:134-141) -> lit(True).
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..schema import CLASS_URIS, DCT, FOAF, RDF_TYPE
+from ..schema import RDF_TYPE
 
 
 @dataclass(frozen=True)
@@ -40,26 +43,42 @@ class Shape:
     severity: str = "Violation"
 
 
-# The constraint subset exercised by the sample corpus (SHACL shapes cited in
-# the module docstring).
-DEFAULT_SHAPES = [
-    Shape(CLASS_URIS["Catalog"], DCT + "description", min_count=1),
-    Shape(CLASS_URIS["Catalog"], DCT + "identifier", min_count=1, max_count=1),
-    Shape(CLASS_URIS["Catalog"], DCT + "title", min_count=1),
-    Shape(CLASS_URIS["Catalog"], DCT + "publisher", min_count=1, max_count=1),
-    Shape(CLASS_URIS["Agent"], FOAF + "name", min_count=1),
-    Shape(CLASS_URIS["Dataset"], DCT + "identifier", min_count=1, max_count=1, severity="Warning"),
-]
+# The shapes document the harvest validates against: the BRegDCAT-AP
+# cardinality constraints the sample corpus exercises
+# (BRegDCAT-AP_shacl_shapes_2.00.ttl:717-760 region).  Turtle text in a
+# module, not a .ttl file, so it ships inside any zipped package.  The
+# Dataset identifier bound is a Warning: the reference file gives it no
+# maxCount, so it only fails strict validation.
+PACKAGED_SHAPES_TTL = """
+@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix dcat: <http://www.w3.org/ns/dcat#> .
+@prefix dct: <http://purl.org/dc/terms/> .
+@prefix foaf: <http://xmlns.com/foaf/0.1/> .
+@prefix : <urn:breg:shapes:> .
+:Catalog_Shape a sh:NodeShape ; sh:targetClass dcat:Catalog ;
+    sh:property [ sh:path dct:description ; sh:minCount 1 ] ,
+        [ sh:path dct:identifier ; sh:minCount 1 ; sh:maxCount 1 ] ,
+        [ sh:path dct:title ; sh:minCount 1 ] ,
+        [ sh:path dct:publisher ; sh:minCount 1 ; sh:maxCount 1 ] .
+:Agent_Shape a sh:NodeShape ; sh:targetClass foaf:Agent ;
+    sh:property [ sh:path foaf:name ; sh:minCount 1 ] .
+:Dataset_Shape a sh:NodeShape ; sh:targetClass dcat:Dataset ;
+    sh:property [ sh:path dct:identifier ; sh:minCount 1 ; sh:maxCount 1 ;
+                  sh:severity sh:Warning ] .
+"""
 
 
-def validation_report(edges: DataFrame, shapes: list[Shape] | None = None) -> DataFrame:
-    """Violations table: one row per (entity, constraint) breach.
+@functools.cache
+def packaged_shapes() -> CompiledShapes:
+    """``PACKAGED_SHAPES_TTL`` compiled (once per process)."""
+    return load_shacl_shapes(PACKAGED_SHAPES_TTL, "packaged-shapes")
 
-    Columns: subj, entity_type, path, count, min_count, max_count, severity.
-    Mirrors the ITB report triples the reference scans for
-    ``sh:resultSeverity sh:Violation`` (validator.py:50-51).
-    """
-    shapes = shapes if shapes is not None else DEFAULT_SHAPES
+
+def cardinality_violations(edges: DataFrame, shapes: list[Shape]) -> DataFrame:
+    """sh:minCount / sh:maxCount violations: subj, entity_type, path,
+    value (NULL), check_kind, severity — one row per (entity, constraint)
+    breach, as the ITB report the reference scans for
+    ``sh:resultSeverity sh:Violation`` (validator.py:50-51)."""
     spark = edges.sparkSession
     shapes_df = spark.createDataFrame(
         [(s.target_class, s.path, s.min_count, s.max_count, s.severity) for s in shapes],
@@ -69,8 +88,7 @@ def validation_report(edges: DataFrame, shapes: list[Shape] | None = None) -> Da
     # ONE groupBy(subj) computes everything the checks need: the entity's
     # type set plus a distinct-object count per constrained path (the shape
     # paths are a small fixed set, so one conditional count_distinct column
-    # each).  The former three-stage form (typed distinct + per-(subj,pred)
-    # counts + subj join) shuffled three times for the same information.
+    # each).
     paths = sorted({s.path for s in shapes})
     per_subj = (
         edges.filter(
@@ -94,7 +112,7 @@ def validation_report(edges: DataFrame, shapes: list[Shape] | None = None) -> Da
         )
         .filter(F.size("types") > 0)
     )
-    # multi-typed entities get every applicable shape, as before
+    # multi-typed entities get every applicable shape
     exploded = per_subj.select(
         "subj", F.explode("types").alias("entity_type"),
         *[f"_c{i}" for i in range(len(paths))],
@@ -102,38 +120,44 @@ def validation_report(edges: DataFrame, shapes: list[Shape] | None = None) -> Da
     cnt = F.lit(None).cast("long")
     for i, p in enumerate(paths):
         cnt = F.when(F.col("path") == p, F.col(f"_c{i}")).otherwise(cnt)
-    checks = (
-        exploded.join(
-            F.broadcast(shapes_df),
-            exploded["entity_type"] == shapes_df["target_class"],
-        )
-        .withColumn("count", cnt)
-        .select(
-            "subj", "entity_type", "path", "count",
-            "min_count", "max_count", "severity",
-        )
-    )
+    checks = exploded.join(
+        F.broadcast(shapes_df),
+        exploded["entity_type"] == shapes_df["target_class"],
+    ).withColumn("count", cnt)
     return checks.filter(
         (F.col("count") < F.col("min_count"))
         | (F.col("max_count").isNotNull() & (F.col("count") > F.col("max_count")))
+    ).select(
+        "subj", "entity_type", "path",
+        F.lit(None).cast("string").alias("value"),
+        F.when(F.col("count") < F.col("min_count"), F.lit("minCount"))
+        .otherwise(F.lit("maxCount")).alias("check_kind"),
+        "severity",
     )
 
 
 def conforms_column(
     edges: DataFrame,
-    shapes: list[Shape] | None = None,
+    compiled: CompiledShapes | None = None,
     strict: bool = False,
     disabled: bool = False,
+    type_edges: DataFrame | None = None,
 ) -> DataFrame:
     """Per-entity boolean verdict (P2/P3/P4): subj, conforms.
 
-    strict=False (the reference default, validator.py:46-48) tolerates
-    non-Violation severities; disabled=True reproduces DummyValidator.
+    An entity conforms when ``full_shapes_report(edges, compiled,
+    type_edges)`` (``compiled`` defaults to ``packaged_shapes()``) has no
+    row for it: no row at all under ``strict``, no Violation row otherwise
+    (the reference default, validator.py:46-48).  ``disabled=True``
+    reproduces DummyValidator.  A per-shard caller passes the whole graph
+    as ``type_edges`` so sh:class values may name untouched entities.
     """
     typed = edges.filter(F.col("pred") == RDF_TYPE).select("subj").distinct()
     if disabled:
         return typed.withColumn("conforms", F.lit(True))
-    report = validation_report(edges, shapes)
+    report = full_shapes_report(
+        edges, compiled or packaged_shapes(), type_edges=type_edges
+    )
     if not strict:
         report = report.filter(F.col("severity") == "Violation")
     bad = report.select("subj").distinct().withColumn("_bad", F.lit(True))
@@ -142,20 +166,29 @@ def conforms_column(
     )
 
 
-def partition_valid(edges: DataFrame, verdicts: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """P1: split edges into (valid, quarantine) by their subject's verdict."""
-    v = verdicts.withColumnRenamed("subj", "_vsubj")
-    joined = edges.join(v, edges["subj"] == v["_vsubj"], "left").drop("_vsubj")
-    ok = F.coalesce(F.col("conforms"), F.lit(True))
-    return (
-        joined.filter(ok).drop("conforms"),
-        joined.filter(~ok).drop("conforms"),
-    )
+def partition_valid(
+    edges: DataFrame,
+    verdicts: DataFrame,
+    commit: Callable[[DataFrame], DataFrame] = lambda quarantine: quarantine,
+) -> tuple[DataFrame, DataFrame]:
+    """P1: split edges into (valid, quarantine) by their subject's verdict.
+
+    ``commit`` receives the quarantined edges (those of non-conforming
+    subjects) and returns them as stored, e.g. read back from a committed
+    snapshot; the valid edges are the rest, split off by the subjects found
+    there.  So the verdicts are evaluated once, by whatever materializes
+    the quarantine.  The split is exact: every non-conforming subject is
+    typed, so at least its rdf:type edge is quarantined.
+    """
+    bad = verdicts.filter(~F.col("conforms")).select("subj")
+    quarantine = commit(edges.join(bad, "subj", "left_semi"))
+    valid = edges.join(quarantine.select("subj").distinct(), "subj", "left_anti")
+    return valid, quarantine
 
 
-def gate_all_or_nothing(verdicts: DataFrame) -> None:
-    """harvest.py:41-47 semantics: any invalid entity aborts the run."""
-    n_bad = verdicts.filter(~F.col("conforms")).count()
+def gate_all_or_nothing(quarantine: DataFrame) -> None:
+    """harvest.py:41-47 semantics: any quarantined entity aborts the run."""
+    n_bad = quarantine.select("subj").distinct().count()
     if n_bad:
         raise ValueError(f"Invalid entities found (n={n_bad}); aborting harvest")
 
@@ -197,25 +230,9 @@ def _typed_vals(edges: DataFrame, typed: DataFrame, paths: list[str]) -> DataFra
     ).join(typed, "subj")
 
 
-def _resolve_tv(edges, typed, typed_vals, paths):
-    """Shared fallback resolution for the constraint families: use the
-    caller-provided sliver filtered to this family's paths, else derive it
-    (deriving typed first if needed)."""
-    if typed_vals is not None:
-        return typed_vals.filter(F.col("path").isin(paths))
-    if typed is None:
-        typed = (
-            edges.filter(F.col("pred") == RDF_TYPE)
-            .select("subj", F.col("obj").alias("entity_type"))
-            .distinct()
-        )
-    return _typed_vals(edges, typed, paths)
-
-
 def value_violations(
     edges: DataFrame,
     shapes: list[ValueShape],
-    typed: DataFrame | None = None,
     typed_vals: DataFrame | None = None,
 ) -> DataFrame:
     """Value-level violations: one row per (entity, path, value, failed
@@ -243,7 +260,14 @@ def value_violations(
         "datatype_any array<string>",
     )
     paths = sorted({s.path for s in shapes})
-    tv = _resolve_tv(edges, typed, typed_vals, paths)
+    if typed_vals is None:
+        typed = (
+            edges.filter(F.col("pred") == RDF_TYPE)
+            .select("subj", F.col("obj").alias("entity_type"))
+            .distinct()
+        )
+        typed_vals = _typed_vals(edges, typed, paths)
+    tv = typed_vals.filter(F.col("path").isin(paths))
     effective_dtype = F.when(
         F.col("obj_kind") != "literal", F.lit(None).cast("string")
     ).when(F.col("lang").isNotNull(), F.lit(_RDF_LANGSTRING)).otherwise(
@@ -338,11 +362,11 @@ class CompiledShapes:
     constraints) — visible provenance, so a caller auditing a foreign
     shapes document can see every interpretation decision."""
 
-    cardinality: tuple
-    value: tuple
-    klass: tuple
-    has_value: tuple
-    skipped: tuple
+    cardinality: tuple = ()
+    value: tuple = ()
+    klass: tuple = ()
+    has_value: tuple = ()
+    skipped: tuple = ()
     recovered: tuple = ()
 
 
@@ -561,18 +585,17 @@ def load_reference_shapes(path: str | None = None) -> CompiledShapes:
 def class_violations(
     edges: DataFrame,
     shapes: list[ClassShape],
-    typed: DataFrame | None = None,
-    typed_vals: DataFrame | None = None,
+    typed_vals: DataFrame,
     type_edges: DataFrame | None = None,
 ) -> DataFrame:
     """sh:class violations: subj, entity_type, path, value, check_kind,
     severity — one row per (entity, path, value) whose value is a literal
     or lacks the required rdf:type.
 
-    Plan shape: the constrained-path sliver joins the typed sliver twice
-    (once for the subject's type, once — LEFT — for the value's required
-    type); the shape table broadcasts.  Both slivers push their pred
-    filters to the scan; no aggregation is needed.
+    Plan shape: the shared constrained-edge sliver (``typed_vals``, which
+    carries each subject's type) joins the value-side type sliver — LEFT —
+    for the value's required type; the shape table broadcasts.  Both
+    slivers push their pred filters to the scan; no aggregation is needed.
 
     ``type_edges`` (incremental deployment): the value-side rdf:type
     lookup reads THIS frame instead of ``edges`` — a shard slice can then
@@ -584,7 +607,7 @@ def class_violations(
         "target_class string, path string, classes array<string>, severity string",
     )
     paths = sorted({s.path for s in shapes})
-    tv = _resolve_tv(edges, typed, typed_vals, paths)
+    tv = typed_vals.filter(F.col("path").isin(paths))
     cand = (
         tv.join(
             F.broadcast(shapes_df),
@@ -620,9 +643,7 @@ def class_violations(
 
 
 def has_value_violations(
-    edges: DataFrame,
-    shapes: list[HasValueShape],
-    typed: DataFrame | None = None,
+    edges: DataFrame, shapes: list[HasValueShape], typed: DataFrame
 ) -> DataFrame:
     """sh:hasValue violations: target-class entities missing the required
     (path, value) edge entirely — an anti-join of the typed sliver against
@@ -632,10 +653,6 @@ def has_value_violations(
         [(s.target_class, s.path, s.value, s.severity) for s in shapes],
         "target_class string, path string, req_value string, severity string",
     )
-    if typed is None:
-        typed = edges.filter(F.col("pred") == RDF_TYPE).select(
-            "subj", F.col("obj").alias("entity_type")
-        ).distinct()
     cand = typed.join(
         F.broadcast(shapes_df),
         F.col("entity_type") == F.col("target_class"),
@@ -662,55 +679,48 @@ def full_shapes_report(
     compiled: CompiledShapes,
     type_edges: DataFrame | None = None,
 ) -> DataFrame:
-    """Every supported constraint of the full shapes file, one unified
+    """Every constraint of a compiled shapes document, one unified
     violations table: subj, entity_type, path, value, check_kind, severity.
+    The only validation report: every verdict (``conforms_column``) is
+    derived from it.
 
-    check_kind in {minCount, maxCount, nodeKind, datatype, pattern, class,
-    hasValue}; cardinality rows carry a NULL value.
+    check_kind in {minCount, maxCount, nodeKind, datatype, datatypeAny,
+    pattern, class, hasValue}; cardinality rows carry a NULL value.
+    ``type_edges`` is the frame sh:class value lookups read (default
+    ``edges``; a shard slice passes the whole graph).
 
     The typed-entity sliver is computed ONCE and shared by the value /
     class / hasValue families (the cardinality family fuses its own
-    type-collection into its single per-subject agg) — without this, each
-    family re-derived the same distinct type sliver independently.
+    type-collection into its single per-subject agg), and built only when
+    one of those families is compiled: its lazy checkpoint starts a job as
+    soon as it is planned.
     """
-    typed = (
-        edges.filter(F.col("pred") == RDF_TYPE)
-        .select("subj", F.col("obj").alias("entity_type"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    typed = shared_tv = None
+    if compiled.value or compiled.klass or compiled.has_value:
+        typed = (
+            edges.filter(F.col("pred") == RDF_TYPE)
+            .select("subj", F.col("obj").alias("entity_type"))
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
     # the value and class families both need "constrained edges with their
     # subject's types" — computed ONCE over the union of their path sets
     all_paths = sorted(
         {s.path for s in compiled.value} | {s.path for s in compiled.klass}
     )
-    shared_tv = (
-        _typed_vals(edges, typed, all_paths).localCheckpoint(eager=False)
-        if all_paths else None
-    )
+    if all_paths:
+        shared_tv = _typed_vals(edges, typed, all_paths).localCheckpoint(eager=False)
     parts = []
     if compiled.cardinality:
-        card = validation_report(edges, list(compiled.cardinality))
-        parts.append(card.select(
-            "subj", "entity_type", "path",
-            F.lit(None).cast("string").alias("value"),
-            F.when(F.col("count") < F.col("min_count"), F.lit("minCount"))
-            .otherwise(F.lit("maxCount")).alias("check_kind"),
-            "severity",
-        ))
+        parts.append(cardinality_violations(edges, list(compiled.cardinality)))
     if compiled.value:
-        parts.append(value_violations(
-            edges, list(compiled.value), typed=typed, typed_vals=shared_tv
-        ))
+        parts.append(value_violations(edges, list(compiled.value), shared_tv))
     if compiled.klass:
         parts.append(class_violations(
-            edges, list(compiled.klass), typed=typed, typed_vals=shared_tv,
-            type_edges=type_edges,
+            edges, list(compiled.klass), shared_tv, type_edges=type_edges
         ))
     if compiled.has_value:
-        parts.append(
-            has_value_violations(edges, list(compiled.has_value), typed=typed)
-        )
+        parts.append(has_value_violations(edges, list(compiled.has_value), typed))
     if not parts:
         raise ValueError(
             "no supported constraints in compiled shapes (empty or "

@@ -3,8 +3,9 @@
 ``run_harvest`` reproduces run_harvest(sources, ...) (harvest.py:22-66) as a
 staged DataFrame DAG with per-stage snapshot checkpoints:
 
-    scan -> validate (gate) -> extract -> merge -> link -> canonicalize
-         -> materialize(nodes, edges) -> num_triples + runs/metrics rows
+    scan -> extract -> merge -> validate (quarantine, gate) -> link
+         -> canonicalize -> materialize(nodes, edges)
+         -> num_triples + runs/metrics rows
 
 Every stage runs through ``jobs.StageRunner``.  Stage outputs are
 snapshot-committed tables (storage.py); the runs table records each stage's
@@ -17,6 +18,12 @@ stage's ``rows`` is counted by an ``Observation`` on the stage's own write,
 not by re-reading and counting its output.  The final result dict mirrors
 the reference job result {"num_triples": N, "sources": [...]}
 (harvest.py:57-60) with transcript lineage in place of source dicts.
+
+Validation (``valid_triples``) evaluates its verdicts once:
+``conforms_column`` derives them from ``full_shapes_report`` over the
+packaged shapes, the ``quarantine`` write materializes them, and both the
+valid split and the all-or-nothing gate read the committed quarantine
+snapshot (``operators/validate.partition_valid``).
 
 Materialize layout (scale-critical):
 * edges are written ``repartition(salted conv_id bucket)`` +
@@ -44,7 +51,7 @@ from ..operators import cc as ccm
 from ..operators import link as lnk
 from ..operators.extract import extract_edges
 from ..operators.merge import merge_triples, num_triples
-from ..operators.validate import conforms_column, partition_valid
+from ..operators.validate import conforms_column, gate_all_or_nothing, partition_valid
 from ..storage import table_for
 from .jobs import MetricsLog, StageRunner
 
@@ -86,6 +93,13 @@ def _bucketed(df: DataFrame, cfg: HarvestConfig) -> DataFrame:
     )
 
 
+def _committed(spark: SparkSession, path: str):
+    """A ``partition_valid`` commit: write the frame as a new snapshot of
+    the table at ``path`` and return that snapshot read back."""
+    tbl = table_for(path)
+    return lambda df: tbl.read(spark, tbl.write(df))
+
+
 def run_harvest(
     spark: SparkSession,
     transcripts_path: str,
@@ -116,16 +130,17 @@ def run_harvest(
         )
     merged = runner("triples", lambda: merge_triples(edges_raw))
 
+    # one verdict pass: the quarantine write evaluates the verdicts; the
+    # gate and the valid split read its committed snapshot
     def _validated():
         verdicts = conforms_column(
             merged, strict=cfg.strict_validation, disabled=cfg.validation_disabled
         )
+        valid, quarantine = partition_valid(
+            merged, verdicts, _committed(spark, os.path.join(cfg.out_dir, "quarantine"))
+        )
         if cfg.all_or_nothing:
-            from ..operators.validate import gate_all_or_nothing
-
-            gate_all_or_nothing(verdicts)
-        valid, quarantine = partition_valid(merged, verdicts)
-        table_for(os.path.join(cfg.out_dir, "quarantine")).write(quarantine)
+            gate_all_or_nothing(quarantine)
         return valid
 
     valid = runner("valid_triples", _validated)
@@ -259,25 +274,27 @@ def harvest_increment(
 
     merged = runner("triples", lambda: base_triples.unionByName(delta))
 
-    # re-validate ONLY touched subjects, over their combined triple set
+    # re-validate ONLY touched subjects, over their combined triple set;
+    # sh:class values are looked up in the whole graph
     def _updated_valid():
         verdicts = conforms_column(
             touched_slice,
             strict=cfg.strict_validation,
             disabled=cfg.validation_disabled,
-        )
-        valid_touched, quarantine_touched = partition_valid(
-            touched_slice, verdicts
+            type_edges=merged,
         )
         # updated quarantine: untouched base verdicts carry over, touched
         # subjects get their re-validated rows (verdict flips included)
         base_quarantine = table_for(os.path.join(base_dir, "quarantine")).read(
             spark
         )
-        table_for(os.path.join(cfg.out_dir, "quarantine")).write(
-            base_quarantine.join(touched, "subj", "left_anti").unionByName(
-                quarantine_touched
-            )
+        commit = _committed(spark, os.path.join(cfg.out_dir, "quarantine"))
+        valid_touched, _ = partition_valid(
+            touched_slice,
+            verdicts,
+            lambda q: commit(
+                base_quarantine.join(touched, "subj", "left_anti").unionByName(q)
+            ),
         )
         kept = base_valid.join(touched, "subj", "left_anti")
         return kept.unionByName(valid_touched)

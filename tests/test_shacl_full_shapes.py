@@ -1,23 +1,26 @@
-"""Full BRegDCAT-AP shapes file compiled as data (operators/validate.py
-load_shacl_shapes / full_shapes_report).
+"""SHACL shapes documents compiled as data (operators/validate.py
+load_shacl_shapes / full_shapes_report / conforms_column).
 
 The reference validates against the COMPLETE shapes file
 (``/root/reference/api/breg_harvester/ontology/BRegDCAT-AP_shacl_shapes_2.00.ttl``,
 18 ``sh:targetClass`` node shapes, e.g. Catalog at lines 717-760 and Dataset
 at 204-234); the engine parses that exact file with its own Turtle parser and
-compiles every supported constraint into shape rows — data, not code.
+compiles every supported constraint into shape rows — data, not code.  The
+harvest's own packaged document compiles through the same path.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
 from breg_dcat_harvester_spark.operators.validate import (
-    DEFAULT_SHAPES,
+    Shape,
+    conforms_column,
     full_shapes_report,
     load_reference_shapes,
     load_shacl_shapes,
+    packaged_shapes,
 )
-from breg_dcat_harvester_spark.schema import CLASS_URIS, DCAT, DCT, RDF_TYPE
+from breg_dcat_harvester_spark.schema import CLASS_URIS, DCAT, DCT, FOAF, RDF_TYPE
 
 SH = "http://www.w3.org/ns/shacl#"
 
@@ -64,16 +67,48 @@ def test_constraint_family_counts(compiled):
     assert all("nodeKind" in r[2] for r in compiled.recovered)
 
 
-def test_default_shapes_are_a_subset(compiled):
-    """The hand-coded DEFAULT_SHAPES cardinality rows all derive from the
-    real file (same target/path/min_count).  Known divergence: the file
-    gives dataset dct:identifier NO maxCount — DEFAULT_SHAPES' max of 1 was
-    a (stricter) hand approximation kept for the legacy contract query."""
+def test_packaged_shapes_are_a_subset(compiled):
+    """The packaged cardinality rows all derive from the real file (same
+    target/path/min_count).  Known divergence: the file gives dataset
+    dct:identifier NO maxCount — the packaged max of 1 is a stricter
+    approximation, which is why it carries Warning severity."""
     idx = {(s.target_class, s.path): s for s in compiled.cardinality}
-    for d in DEFAULT_SHAPES:
+    for d in packaged_shapes().cardinality:
         m = idx.get((d.target_class, d.path))
         assert m is not None, (d.target_class, d.path)
         assert m.min_count == d.min_count
+
+
+def test_packaged_shapes_compile_to_six_cardinality_rows():
+    c = packaged_shapes()
+    assert c.cardinality == (
+        Shape(CLASS_URIS["Catalog"], DCT + "description", min_count=1),
+        Shape(CLASS_URIS["Catalog"], DCT + "identifier", min_count=1, max_count=1),
+        Shape(CLASS_URIS["Catalog"], DCT + "title", min_count=1),
+        Shape(CLASS_URIS["Catalog"], DCT + "publisher", min_count=1, max_count=1),
+        Shape(CLASS_URIS["Agent"], FOAF + "name", min_count=1),
+        Shape(CLASS_URIS["Dataset"], DCT + "identifier", min_count=1, max_count=1,
+              severity="Warning"),
+    )
+    assert c.value == c.klass == c.has_value == ()
+    assert c.skipped == c.recovered == ()
+    assert packaged_shapes() is c  # compiled once
+
+
+def test_cardinality_only_report_plans_no_job(spark):
+    """Building the report starts no Spark job when no family needs the
+    checkpointed typed sliver (the harvest's packaged shapes)."""
+    edges = _edges(spark, [("c", RDF_TYPE, CLASS_URIS["Catalog"], "uri", None, None)])
+    sc = spark.sparkContext
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    before = job_ids()
+    full_shapes_report(edges, packaged_shapes())
+    conforms_column(edges)
+    assert job_ids() == before
 
 
 def test_date_or_datetime_disjunction_resolved(compiled):
@@ -218,6 +253,67 @@ ex:S a sh:NodeShape ;
     rep = full_shapes_report(edges, c)
     got = {(r["subj"], r["check_kind"]) for r in rep.collect()}
     assert got == {("s2", "hasValue"), ("s2", "maxCount")}
+
+
+def test_conforms_column_applies_every_family(spark):
+    """conforms_column's non-conforming subjects are exactly the subjects of
+    full_shapes_report's Violation rows (any severity under strict), over
+    class, datatype, pattern and hasValue constraints — with a class value
+    typed only in ``type_edges``."""
+    ttl = """
+@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix ex: <http://ex/> .
+ex:S a sh:NodeShape ; sh:targetClass ex:Thing ;
+    sh:property [ sh:path ex:owner ; sh:class ex:Agent ],
+        [ sh:path ex:size ; sh:datatype <http://www.w3.org/2001/XMLSchema#integer> ],
+        [ sh:path ex:code ; sh:pattern "^T-[0-9]+$" ; sh:severity sh:Warning ],
+        [ sh:path ex:kind ; sh:hasValue ex:Real ] .
+"""
+    c = load_shacl_shapes(ttl)
+    assert (len(c.klass), len(c.value), len(c.has_value)) == (1, 2, 1)
+    XSD = "http://www.w3.org/2001/XMLSchema#"
+    T, K = "http://ex/Thing", "http://ex/kind"
+
+    def thing(s, owner="a-base", size=("3", XSD + "integer"), code="T-1"):
+        return [
+            (s, RDF_TYPE, T, "uri", None, None),
+            (s, K, "http://ex/Real", "uri", None, None),
+            (s, "http://ex/owner", owner, "uri", None, None),
+            (s, "http://ex/size", size[0], "literal", None, size[1]),
+            (s, "http://ex/code", code, "literal", None, None),
+        ]
+
+    rows = (
+        thing("ok")
+        + thing("bad-class", owner="nobody")
+        + thing("bad-datatype", size=("3", XSD + "string"))
+        + thing("warn-pattern", code="X-1")
+        + [r for r in thing("bad-hasvalue") if r[1] != K]
+    )
+    edges = _edges(spark, rows)
+    # a-base is an Agent only in the whole graph, not in this slice
+    whole = edges.unionByName(
+        _edges(spark, [("a-base", RDF_TYPE, "http://ex/Agent", "uri", None, None)])
+    )
+    rep = full_shapes_report(edges, c, type_edges=whole).collect()
+    assert {(r.subj, r.check_kind) for r in rep} == {
+        ("bad-class", "class"), ("bad-datatype", "datatype"),
+        ("warn-pattern", "pattern"), ("bad-hasvalue", "hasValue"),
+    }
+
+    def non_conforming(**kw):
+        v = conforms_column(edges, c, type_edges=whole, **kw)
+        return {r.subj for r in v.filter(~F.col("conforms")).collect()}
+
+    violations = {r.subj for r in rep if r.severity == "Violation"}
+    assert violations == {"bad-class", "bad-datatype", "bad-hasvalue"}
+    assert non_conforming() == violations
+    assert non_conforming(strict=True) == {r.subj for r in rep}
+    # without the whole graph every Thing's owner is an untyped value
+    sliced = conforms_column(edges, c)
+    assert {r.subj for r in sliced.filter(~F.col("conforms")).collect()} == (
+        violations | {"ok", "warn-pattern"}
+    )
 
 
 def test_reference_golden_graph_conforms(spark, golden_df):
