@@ -1031,12 +1031,10 @@ HEADLINE = [
     "kg_connected_components",
     "dedup_minhash_lsh",
     "dedup_simhash",
-    "text_features",
     "kg_export_ntriples",
     "kg_pagerank",
     "kg_triangles",
     "sample_upsample",
-    "ingest_increment",
     "kg_link_incremental",
     "kg_harvest_incremental",
     "dedup_boilerplate",
@@ -1049,17 +1047,14 @@ HEADLINE = [
     "rel_events_in_windows",
     "kg_windowed_turn_counts",
     "sketch_cms_heavy_hitters",
-    "lm_quality",
     "kg_kcore",
     "rel_events_sessions",
     "conv_sft_pack_masks",
-    "doc_chunks",
     "dedup_span_scrub",
     "kg_rdfs_closure",
     "kg_communities",
     "kg_export_turtle",
     "kg_sparql_update",
-    "bpe_merges",
     # round-4 additions
     "kg_validation_full_shapes",
     "kg_neighborhood",

@@ -622,8 +622,7 @@ def duplicated_span_scrub(
     oracle-replayable (DuckDB sha256 == Spark sha2 on identical bytes).
 
     Within-doc repetition alone does NOT trigger a scrub (min_docs counts
-    distinct documents; Gopher-style repetition lives in
-    ``textfns.repetition_features``).  Documents shorter than ``width``
+    distinct documents).  Documents shorter than ``width``
     tokens pass through unchanged; ``clean_text`` is rebuilt from the
     token array with single spaces (the canonical form the oracle
     aggregates too).

@@ -151,6 +151,12 @@ def conforms_column(
     (the reference default, validator.py:46-48).  ``disabled=True``
     reproduces DummyValidator.  A per-shard caller passes the whole graph
     as ``type_edges`` so sh:class values may name untouched entities.
+
+    The verdicts are a union of the report's subjects (false) and the
+    other typed subjects (true); every report subject is typed, since each
+    family targets the rdf:type edges of ``edges``.  A ``~conforms``
+    filter (``partition_valid``) prunes the typed branch to an empty
+    relation, so the quarantine never aggregates the typed subjects.
     """
     typed = edges.filter(F.col("pred") == RDF_TYPE).select("subj").distinct()
     if disabled:
@@ -160,9 +166,9 @@ def conforms_column(
     )
     if not strict:
         report = report.filter(F.col("severity") == "Violation")
-    bad = report.select("subj").distinct().withColumn("_bad", F.lit(True))
-    return typed.join(bad, "subj", "left").select(
-        "subj", F.coalesce(~F.col("_bad"), F.lit(True)).alias("conforms")
+    bad = report.select("subj").distinct()
+    return bad.withColumn("conforms", F.lit(False)).unionByName(
+        typed.join(bad, "subj", "left_anti").withColumn("conforms", F.lit(True))
     )
 
 
@@ -201,8 +207,8 @@ class ValueShape:
     ``node_kind`` in {'IRI', 'Literal'}; ``datatype`` compares against the
     RDF 1.1 EFFECTIVE datatype (lang-tagged -> rdf:langString, plain ->
     xsd:string); ``pattern`` is a regex in the Java∩RE2 dialect subset
-    (same discipline as pii.py) over the lexical form.  Any specified
-    check that fails produces a violation row."""
+    (so Spark and the DuckDB oracle agree) over the lexical form.  Any
+    specified check that fails produces a violation row."""
 
     target_class: str
     path: str

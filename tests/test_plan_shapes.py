@@ -42,8 +42,6 @@ def _ops(df) -> list[str]:
 # the driver parquet, and the extract->merge head of the harvest.
 EXCHANGE_BUDGET = {
     "kg_harvest_triples": 1,  # the set-union dedup groupBy; extract is map-only
-    "text_features": 0,  # pure Column exprs over the documents scan
-    "text_repetition": 0,
     "sample_stratified": 0,  # Bernoulli sha-bucket filter: map-side only
     "sample_weighted": 0,  # per-row weighted Bernoulli: map-side only
     "rel_events_sessionize": 1,  # one window partitioning
@@ -60,8 +58,6 @@ EXCHANGE_BUDGET = {
     "conv_sft_pairs": 1,  # one conv_id window partitioning
     "conv_dup_groups": 2,  # conv fingerprint agg + fp group agg
     "sketch_quantile_doclen": 1,  # approx+exact percentiles in ONE groupBy
-    "lm_quality": 0,  # persist-then-score: ONE map-only Arrow scan, no shuffle
-    "lm_quality_audit": 4,  # single-plan twin: model agg + score agg + empties anti-join + union
     "conv_sft_pack_masks": 9,  # pairs window + packing prefix sum + join
     "dedup_span_scrub": 3,  # hot-window countDistinct expand + per-doc starts agg; windows hashed in-array map-side
 }
@@ -115,3 +111,23 @@ def test_no_per_row_python_in_reference_plans(spark, queries):
     without it they cannot be planned and this test fails."""
     offenders = _per_row_python_offenders(spark, queries, REFERENCE_PLANS)
     assert not offenders, offenders
+
+
+def test_quarantine_plan_skips_typed_subjects(spark, tmp_path):
+    """The valid_triples quarantine reads only the report's subjects: the
+    ~conforms filter prunes the verdicts' typed-subject branch, so no
+    aggregate of every typed subject is shuffled and broadcast.  The graph
+    is read back from parquet, as the harvest reads its triples snapshot;
+    the shared cached merged graph would add exchanges that depend on
+    whether an earlier test executed it."""
+    from breg_dcat_harvester_spark.operators.validate import (
+        conforms_column,
+        partition_valid,
+    )
+
+    entrymod._merged(spark, SF_DIR).write.parquet(str(tmp_path / "triples"))
+    triples = spark.read.parquet(str(tmp_path / "triples"))
+    ops = _ops(partition_valid(triples, conforms_column(triples))[1])
+    n_ex = sum(1 for o in ops if o == "Exchange")
+    n_bx = sum(1 for o in ops if o == "BroadcastExchange")
+    assert n_ex <= 3 and n_bx <= 1, f"{n_ex} exchanges, {n_bx} broadcasts; ops={ops}"

@@ -1,10 +1,9 @@
-"""Training-data pipeline operators: dedup family and text functions — on
-the sf0.001 test tables."""
+"""Training-data pipeline operators: the dedup family on the sf0.001 test
+tables."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from breg_dcat_harvester_spark.functions import textfns as tf
 from breg_dcat_harvester_spark.operators import dedup as ddp
 
 SF = "/root/testdata/sf0.001"
@@ -87,59 +86,6 @@ def test_simhash_finds_planted_near_dups(spark, docs):
     )
     pairs = ddp.simhash_pairs(doubled, max_hamming=0).collect()
     assert {(r.a, r.b) for r in pairs} == {(0, 100000), (1, 100001), (2, 100002)}
-
-
-def test_text_functions(spark):
-    df = spark.createDataFrame(
-        [(1, "the cat is in the hat"), (2, "el gato es en la casa"), (3, "xyzzy 123!?")],
-        "doc_id long, text string",
-    )
-    out = df.select(
-        "doc_id",
-        tf.language_id(F.col("text")).alias("lang"),
-        tf.token_stats(F.col("text"))["n_tokens"].alias("n_tokens"),
-        tf.quality_features(F.col("text"))["n_punct"].alias("n_punct"),
-        tf.fingerprint(F.col("text")).alias("fp"),
-    ).collect()
-    by_id = {r.doc_id: r for r in out}
-    assert by_id[1].lang == "en" and by_id[2].lang == "es" and by_id[3].lang == "und"
-    assert by_id[1].n_tokens == 6
-    assert by_id[3].n_punct == 2
-    assert len(by_id[1].fp) == 16
-    # fingerprint is stable under a trailing append ONLY if min-gram retained;
-    # identical text -> identical fingerprint
-    df2 = spark.createDataFrame([(9, "the cat is in the hat")], "doc_id long, text string")
-    fp2 = df2.select(tf.fingerprint(F.col("text")).alias("fp")).head().fp
-    assert fp2 == by_id[1].fp
-
-
-def test_repetition_features(spark):
-    df = spark.createDataFrame(
-        [
-            # 3 non-empty lines, one duplicated; "spam spam" bigram x3
-            (1, "spam spam spam spam\n\nspam spam spam spam\nok then"),
-            (2, "all distinct words here"),
-            (3, "one"),          # no bigrams
-            (4, ""),             # degenerate empty doc
-        ],
-        "doc_id long, text string",
-    )
-    rf = tf.repetition_features(F.col("text"))
-    rows = {
-        r.doc_id: r
-        for r in df.select(
-            "doc_id", *[e.alias(n) for n, e in rf.items()]
-        ).collect()
-    }
-    r1 = rows[1]
-    assert (r1.n_lines, r1.n_distinct_lines) == (3, 2)
-    # tokens: spam x8 + ok + then -> 10 tokens, 3 distinct, 9 bigrams;
-    # "spam spam" appears 7x (3 inside each spam-line + the line boundary,
-    # since tokenization splits on ALL whitespace incl. newlines)
-    assert (r1.n_distinct_tokens, r1.n_bigrams, r1.max_bigram_count) == (3, 9, 7)
-    assert rows[2].max_bigram_count == 1 and rows[2].n_distinct_lines == 1
-    assert (rows[3].n_bigrams, rows[3].max_bigram_count) == (0, 0)
-    assert (rows[4].n_lines, rows[4].n_bigrams, rows[4].max_bigram_count) == (0, 0, 0)
 
 
 def test_duplicated_span_scrub_semantics(spark):
